@@ -26,6 +26,19 @@ object DevScale {
     spark.sparkContext.setLogLevel("WARN")
 
     val scaledDir = s"/tmp/graft-scale-${copies}x-${new java.io.File(base).getName}"
+    val zwriteDir = "/tmp/graft-scale-zwrite"
+    // both are scratch: removed when the sweep ends, whatever its outcome
+    try sweep(spark, base, copies, only, scaledDir, zwriteDir)
+    finally {
+      val fs = new org.apache.hadoop.fs.Path(scaledDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq(scaledDir, zwriteDir).foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+      spark.stop()
+    }
+  }
+
+  private def sweep(spark: SparkSession, base: String, copies: Int,
+                    only: Option[Set[String]], scaledDir: String, zwriteDir: String): Unit = {
     val marker = new org.apache.hadoop.fs.Path(s"$scaledDir/_built")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
@@ -110,7 +123,7 @@ object DevScale {
       // clustered-write leg: a fresh z-ordered table over the (scaled)
       // orders — the write path's quantile cuts + range shuffle + write at N×
       "zorder_write"      -> ((s, d) => {
-        val wh = "/tmp/graft-scale-zwrite"
+        val wh = zwriteDir
         val p = new org.apache.hadoop.fs.Path(wh)
         val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (f.exists(p)) f.delete(p, true)
@@ -142,6 +155,5 @@ object DevScale {
       val tN = math.min(drain(fn(spark, scaledDir)), drain(fn(spark, scaledDir)))
       println(f"$name%-18s $t1%8d $tN%8d ${tN.toDouble / t1}%.2f")
     }
-    spark.stop()
   }
 }

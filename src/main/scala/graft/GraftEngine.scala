@@ -32,6 +32,9 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
   val catalog = new SnapshotCatalog(spark, warehouse)
   val storage = new StorageOps(spark.sparkContext.hadoopConfiguration)
   private val unloader = new Unloader(spark)
+  // statement parameters stay out of generated code, so each statement
+  // shape compiles once (see graft.params.ParamHoist)
+  graft.params.ParamHoist.install(spark)
 
   /** Session default schema (the reference session carries
     * ClientSessionProperties { Catalog, Schema } so unqualified names

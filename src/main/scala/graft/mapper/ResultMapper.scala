@@ -1,7 +1,7 @@
 package graft.mapper
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, GraftPlanBridge}
+import org.apache.spark.sql.functions.lit
 import scala.reflect.ClassTag
 
 /** Typed result mapping, ported from the reference's reflection mapper
@@ -41,21 +41,25 @@ object ResultMapper {
     */
   def datasetOf[T: Encoder](df: DataFrame): Dataset[T] = {
     val enc = implicitly[Encoder[T]]
-    val byKey: Map[String, String] =
-      df.columns.groupBy(normKey).map { case (k, vs) => k -> vs.head }
-    val srcTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val src = df.schema.fields
+    // first column index per normalized name
+    val byKey: Map[String, Int] =
+      src.indices.groupBy(i => normKey(src(i).name)).map { case (k, is) => k -> is.head }
+    // by position: a result name may hold a dot or repeat (`SELECT x, x`),
+    // which `col(name)` would parse or reject
+    val byPosition = GraftPlanBridge.columnsOf(df)
     val cols: Array[Column] = enc.schema.fields.map { f =>
       byKey.get(normKey(f.name)) match {
-        case Some(src) =>
+        case Some(i) =>
           // fail fast with NAMES when the cast cannot exist at all —
           // Spark's own analysis error would not say which field
           if (!org.apache.spark.sql.catalyst.expressions.Cast
-                .canCast(srcTypes(src), f.dataType))
+                .canCast(src(i).dataType, f.dataType))
             throw new IllegalArgumentException(
-              s"Cannot map result column '$src' (${srcTypes(src).simpleString}) " +
+              s"Cannot map result column '${src(i).name}' (${src(i).dataType.simpleString}) " +
                 s"to field '${f.name}' (${f.dataType.simpleString})")
-          col(src).cast(f.dataType).as(f.name)
-        case None      => lit(null).cast(f.dataType).as(f.name)
+          byPosition(i).cast(f.dataType).as(f.name)
+        case None   => lit(null).cast(f.dataType).as(f.name)
       }
     }
     df.select(cols.toIndexedSeq: _*).as[T]
@@ -67,7 +71,7 @@ object ResultMapper {
     * parse + Convert.ChangeType).
     */
   def scalar[T: ClassTag](df: DataFrame): Option[T] = {
-    val first = df.select(col(df.columns.head)).limit(1).collect()
+    val first = df.select(GraftPlanBridge.columnsOf(df).head).limit(1).collect()
     first.headOption.flatMap(r => Option(r.get(0))).map(coerce[T])
   }
 

@@ -1,6 +1,8 @@
 package graft.mapper
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Encoders, Row}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Typed-mapping contract, ported from the reference's mapper tests
   * (reference tests/IntegrationTests/AthenaClientTests.cs:32-61, :419-425;
@@ -85,6 +87,28 @@ class ResultMapperSpec extends SparkSpec {
   test("scalar takes first row, first column only") {
     val df = Seq((10, "a"), (20, "b")).toDF("v", "s").orderBy($"v")
     assert(ResultMapper.scalar[Int](df) == Some(10))
+  }
+
+  test("scalar reads the first column by position: a dotted name resolves") {
+    val df = spark.sql("SELECT 1 AS `a.b`, 2 AS c")
+    assert(ResultMapper.scalar[Int](df) == Some(1))
+  }
+
+  test("scalar reads the first column by position: a repeated name resolves") {
+    val df = spark.sql("SELECT 7 AS x, 8 AS x")
+    assert(ResultMapper.scalar[Int](df) == Some(7))
+  }
+
+  test("datasetOf maps a dotted column name by position") {
+    val schema = StructType(Seq(StructField("a.b", LongType), StructField("c", IntegerType)))
+    val df = spark.sql("SELECT 3 AS c, 5L AS `a.b`")
+    val got = ResultMapper.datasetOf[Row](df)(Encoders.row(schema)).collect()
+    assert(got.toSeq == Seq(Row(5L, 3)))
+  }
+
+  test("datasetOf maps a repeated column name to its first occurrence") {
+    val df = spark.sql("SELECT 9L AS id, 10L AS id")
+    assert(ResultMapper.datasetOf[JustId](df).collect().toSeq == Seq(JustId(9L)))
   }
 
   test("timestamptz scalars render offset-carrying java.time values (UTC, Trino parity)") {
