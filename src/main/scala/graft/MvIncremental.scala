@@ -86,28 +86,28 @@ private[graft] object MvIncremental {
   private val mergeable = Set("count", "sum", "min", "max")
 
   /** Classify `sql` for incremental refresh against the recorded source
-    * set (one table, or two for the join shape). `sessionSchema`
-    * resolves bare names the way the engine's rewrite does. None = not
-    * incrementally maintainable; refresh must recompute.
+    * set (one table, or several for the join shape). `sessionSchema`
+    * resolves bare names the way the engine's binding does
+    * ([[TableRefs]]). None = not incrementally maintainable; refresh must
+    * recompute.
     */
   def classify(spark: SparkSession, sql: String,
                sources: Set[(String, String)],
                sessionSchema: String): Option[Shape] = {
     val plan =
-      try spark.sessionState.sqlParser.parsePlan(sql)
+      try TableRefs.parse(spark, sql)
       catch { case _: Exception => return None }
 
     // each recorded source referenced EXACTLY once — a self-join
     // (sources map still size 1, two relation nodes) must NOT run over
-    // the delta, and a third table means an unclassified shape
-    val rels = plan.collect { case r: UnresolvedRelation => r }
-    if (rels.size != sources.size) return None
-    val named = rels.map(_.multipartIdentifier match {
-      case Seq(t) => (sessionSchema, t)
-      case Seq(s, t) => (s, t)
+    // the delta, a third table means an unclassified shape, and a
+    // time-travel read pins a state no delta advances
+    val named = TableRefs.relations(plan).map {
+      case r: UnresolvedRelation =>
+        TableRefs.schemaTable(r.multipartIdentifier, sessionSchema).getOrElse(return None)
       case _ => return None
-    })
-    if (named.toSet != sources || named.distinct.size != named.size) return None
+    }
+    if (named.size != sources.size || named.toSet != sources) return None
 
     if (!expressionsSafe(spark, plan)) return None
 
@@ -132,44 +132,21 @@ private[graft] object MvIncremental {
     }
   }
 
-  /** Replay the definition with each source's [[UnresolvedRelation]]
-    * replaced by a substitute DataFrame's analyzed plan (wrapped in a
-    * SubqueryAlias carrying the table name, so `src.col`-qualified
-    * references keep resolving), and — when the classified outputs carry
-    * [[MvAvg]] — the hidden sum/count partials appended to the
+  /** Run a definition whose table references the engine has already
+    * bound (each source is a DataFrame's plan under its name) with the
+    * hidden sum/count partials of its [[MvAvg]] outputs appended to the
     * aggregate's output list:
     * `sum(CAST(arg AS DOUBLE)) AS __mv_s_i, count(arg) AS __mv_c_i`
     * (FILTER clause preserved on both). Plan surgery instead of SQL-text
     * rewriting: nothing re-quotes or re-parses user expressions, and the
-    * whole tree analyzes as one ordinary Dataset. None when the SQL does
-    * not re-parse, a referenced relation has no substitute, or an avg
-    * output is not the Alias(avg(..)) shape classify admitted — callers
-    * fall back to full recompute.
+    * whole tree analyzes as one ordinary Dataset. None when the plan does
+    * not analyze or an avg output is not the Alias(avg(..)) shape
+    * classify admitted — callers fall back to full recompute.
     */
-  def replayAugmented(spark: SparkSession, sql: String,
-                      subs: Map[(String, String), org.apache.spark.sql.DataFrame],
-                      sessionSchema: String,
+  def replayAugmented(spark: SparkSession, bound: LogicalPlan,
                       outputs: Seq[MvOut]): Option[org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.types.DoubleType
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(sql)
-      catch { case _: Exception => return None }
-    var ok = true
-    val substituted = plan transform {
-      case r: UnresolvedRelation =>
-        val st = r.multipartIdentifier match {
-          case Seq(t) => Some((sessionSchema, t))
-          case Seq(s, t) => Some((s, t))
-          case _ => None
-        }
-        st.flatMap(subs.get) match {
-          case Some(df) =>
-            SubqueryAlias(st.get._2, org.apache.spark.sql.GraftPlanBridge.planOf(df))
-          case None => ok = false; r
-        }
-    }
-    if (!ok) return None
     def hiddenFor(aggs: Seq[Expression]): Option[Seq[Expression]] = {
       if (aggs.size != outputs.size) return None
       val hs = aggs.zip(outputs).zipWithIndex.collect {
@@ -188,8 +165,8 @@ private[graft] object MvIncremental {
     }
     val hasAvg = outputs.contains(MvAvg)
     val augmented =
-      if (!hasAvg) substituted
-      else substituted match {
+      if (!hasAvg) bound
+      else bound match {
         case a @ Aggregate(_, aggs, _, _) =>
           hiddenFor(aggs) match {
             case Some(h) => a.copy(aggregateExpressions =
@@ -225,14 +202,10 @@ private[graft] object MvIncremental {
       : Seq[(((String, String), String), ((String, String), String))] = {
     import org.apache.spark.sql.catalyst.expressions.{And, EqualTo}
     val plan =
-      try spark.sessionState.sqlParser.parsePlan(sql)
+      try TableRefs.parse(spark, sql)
       catch { case _: Exception => return Nil }
     def stOf(r: UnresolvedRelation): Option[(String, String)] =
-      r.multipartIdentifier match {
-        case Seq(t) => Some((sessionSchema, t))
-        case Seq(s, t) => Some((s, t))
-        case _ => None
-      }
+      TableRefs.schemaTable(r.multipartIdentifier, sessionSchema)
     // qualifier → source, from every alias sitting DIRECTLY over one
     // bare source plus each table's own name; a name claimed by two
     // different sources is ambiguous and resolves nothing

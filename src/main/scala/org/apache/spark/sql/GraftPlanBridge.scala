@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ReturnAnswer}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Minimal plan↔Dataset shims for the incremental-MV plan surgery
+/** Minimal plan↔Dataset shims for the facade's plan-level table binding
+  * (`GraftEngine.query`) and the incremental-MV plan surgery
   * ([[graft.MvIncremental.replayAugmented]]): `Dataset.ofRows` and the
   * analyzed plan accessor are `private[sql]`, so the two one-liners live
   * in this package — the same extension-point pattern as

@@ -3,11 +3,12 @@ package graft
 import graft.params.Sql._
 import graft.params.SqlStatement
 
-/** The regex SQL rewrites (catalog refs, time travel) must never fire
-  * inside string literals (round-3 verdict #7): `SELECT 'FROM demo.t'`
-  * with an existing `demo.t` has to pass through byte-identical, and a
-  * literal that happens to precede a quoted timestamp must not be parsed
-  * as a time-travel clause.
+/** Table-name binding (catalog refs, time travel) works on the parsed
+  * plan, so text inside string literals is never a reference:
+  * `SELECT 'FROM demo.t'` with an existing `demo.t` has to pass through
+  * byte-identical, and a literal that happens to precede a quoted
+  * timestamp must not be read as a time-travel clause. The test names
+  * keep the older "rewrite" wording.
   */
 class SqlRewriteSpec extends SparkSpec {
   import spark.implicits._
