@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, GraftPlanBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertIntoStatement,
+  LogicalPlan, SubqueryAlias, UpdateTable}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -62,8 +63,13 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       expandExecute(stmt.text) match {
         case Some(expanded) => query(SqlStatement(expanded))
         case None =>
-          introspectionQuery(stmt.text).getOrElse(
-            GraftPlanBridge.ofRows(spark, boundPlan(stmt.text)))
+          introspectionQuery(stmt.text).getOrElse {
+            val plan = parse(stmt.text)
+            if (catalogWrite(stmt.text, plan).isDefined)
+              throw new GraftQueryException(stmt.text,
+                "INSERT, DELETE and UPDATE on a catalog table run through executeNonQuery")
+            run(stmt.text, plan)
+          }
       }
     } catch {
       // parse + analysis failures (ParseException extends AnalysisException)
@@ -103,22 +109,50 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
 
   /** DDL/DML without a result set. SQL-text DDL — CREATE SCHEMA [WITH
     * (location)], CREATE TABLE [IF NOT EXISTS] (+Iceberg-style
-    * `partitioning = ARRAY[…]`), CTAS, DROP TABLE — routes into the
-    * snapshot catalog, so the reference's seed scripts run verbatim
+    * `partitioning = ARRAY[…]`), CTAS, DROP TABLE, MERGE — routes into
+    * the snapshot catalog, so the reference's seed scripts run verbatim
     * (Scripts/create/01-schema.sql, 02-tables.sql via ExecuteNonQuery,
-    * TrinoIcebergStack.cs:152-197). INSERT INTO catalog tables commits a
-    * snapshot and returns rows affected (S5: Scripts/insert/
-    * 01-test-data.sql); -1 when the row count is unknown.
+    * TrinoIcebergStack.cs:152-197). Any other statement is parsed once:
+    * INSERT, DELETE and UPDATE on a catalog table commit a snapshot and
+    * return rows affected (S5: Scripts/insert/01-test-data.sql); the rest
+    * runs like [[query]] and reports a lone numeric cell, else -1.
+    *
+    * Every failure is a [[GraftQueryException]] naming the statement,
+    * except [[graft.catalog.CommitConflictException]]: a lost commit race
+    * stays typed so the caller can retry.
     */
-  def executeNonQuery(stmt: SqlStatement): Long =
-    trySession(stmt.text).getOrElse(
-      tryDdl(stmt.text).orElse(tryInsert(stmt.text)).getOrElse {
-        val rows = query(stmt).collect()
-        if (rows.length == 1 && rows(0).length == 1) rows(0).get(0) match {
-          case n: Number => n.longValue()
-          case _         => -1L
-        } else -1L
+  def executeNonQuery(stmt: SqlStatement): Long = {
+    val sqlText = stmt.text
+    trySession(sqlText).getOrElse(
+      try tryDdl(sqlText).getOrElse(execute(sqlText))
+      catch {
+        case e: org.apache.spark.sql.catalyst.parser.ParseException =>
+          throw new GraftQueryException(sqlText, s"Malformed SQL: ${e.getMessage}", e)
+        case e @ (_: IllegalArgumentException | _: IllegalStateException |
+                  _: org.apache.spark.sql.AnalysisException |
+                  _: graft.catalog.MergeConflictException |
+                  _: graft.catalog.CatalogPublishConflictException) =>
+          throw new GraftQueryException(sqlText, e.getMessage, e)
       })
+  }
+
+  /** A statement no session or DDL handler owns: an introspection
+    * statement, or one parsed plan — a catalog write commits
+    * ([[commitWrite]]), anything else runs as the bound plan.
+    */
+  private def execute(sqlText: String): Long = {
+    def affected(df: DataFrame): Long = {
+      val rows = df.collect()
+      if (rows.length == 1 && rows(0).length == 1) rows(0).get(0) match {
+        case n: Number => n.longValue()
+        case _         => -1L
+      } else -1L
+    }
+    introspectionQuery(sqlText).map(affected).getOrElse {
+      val plan = parse(sqlText)
+      catalogWrite(sqlText, plan).fold(affected(run(sqlText, plan)))(commitWrite(sqlText, plan, _))
+    }
+  }
 
   // ---- session statements: PREPARE / EXECUTE / DEALLOCATE (Trino's
   //      server-side prepared statements; the client-side twin is the
@@ -167,9 +201,10 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Expand `EXECUTE name [USING e1, e2, …]` against the prepared-
-    * statement store: each top-level `?` placeholder (never inside a
-    * string literal) substitutes the corresponding USING expression,
-    * parenthesized, positionally — Trino's EXECUTE…USING semantics.
+    * statement store: each `?` placeholder outside string literals,
+    * quoted names and comments ([[TableRefs.quotedSpans]]) substitutes
+    * the corresponding USING expression, parenthesized, positionally —
+    * Trino's EXECUTE…USING semantics.
     * Returns None when the text is not an EXECUTE statement.
     */
   private def expandExecute(sqlText: String): Option[String] = sqlText match {
@@ -178,26 +213,23 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
         throw new GraftQueryException(sqlText, s"Prepared statement $name does not exist"))
       val args = Option(using).map(graft.catalog.DdlParser.splitArgs)
         .getOrElse(Seq.empty)
-      val out = new StringBuilder
-      var inQuote = false
-      var i = 0
       var argIdx = 0
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (c == '\'') { inQuote = !inQuote; out += c }
-        else if (c == '?' && !inQuote) {
-          if (argIdx >= args.length)
-            throw new GraftQueryException(sqlText,
-              s"EXECUTE $name: statement has more parameters than USING values (${args.length})")
-          out ++= s"(${args(argIdx)})"
-          argIdx += 1
-        } else out += c
-        i += 1
-      }
+      val out = TableRefs.pieces(body).map {
+        case (text, None) => text.flatMap {
+          case '?' =>
+            if (argIdx >= args.length)
+              throw new GraftQueryException(sqlText,
+                s"EXECUTE $name: statement has more parameters than USING values (${args.length})")
+            argIdx += 1
+            s"(${args(argIdx - 1)})"
+          case c => c.toString
+        }
+        case (text, _) => text
+      }.mkString
       if (argIdx < args.length)
         throw new GraftQueryException(sqlText,
           s"EXECUTE $name: ${args.length} USING values but only $argIdx parameters")
-      Some(out.toString)
+      Some(out)
     case _ => None
   }
 
@@ -218,27 +250,16 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       case graft.catalog.CreateTableLikeStmt(schema, table, srcSchema,
           srcTable, includingProps, ifNotExists) =>
         if (!catalog.schemaExists(schema)) catalog.createSchema(schema)
-        try { catalog.createTableLike(schema, table, srcSchema, srcTable,
-          includingProps, ifNotExists); 0L }
-        catch {
-          case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-          case e: IllegalStateException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-        }
+        catalog.createTableLike(schema, table, srcSchema, srcTable,
+          includingProps, ifNotExists)
+        0L
       case graft.catalog.CreateTableStmt(schema, table, columns, ifNotExists,
           partitionedBy, tableComment, columnComments, formatVersion, sortedBy,
           bloomCols) =>
         if (!catalog.schemaExists(schema)) catalog.createSchema(schema)
         val preExisting = catalog.tableExists(schema, table)
-        try catalog.createTable(schema, table, columns, ifNotExists, partitionedBy,
+        catalog.createTable(schema, table, columns, ifNotExists, partitionedBy,
           formatVersion, sortedBy, bloomCols)
-        catch {
-          case e: IllegalStateException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-          case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-        }
         // declared COMMENT clauses persist like COMMENT ON (never onto a
         // pre-existing IF NOT EXISTS table)
         if (!preExisting) {
@@ -263,25 +284,20 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
         } else { catalog.dropTable(schema, table); 0L }
       case graft.catalog.CommentStmt(schema, table, column, comment) =>
         requireCatalogTable(sqlText, schema, table)
-        try { catalog.setComment(schema, table, column, comment); 0L }
-        catch { case e: IllegalArgumentException =>
-          throw new GraftQueryException(sqlText, e.getMessage, e) }
+        catalog.setComment(schema, table, column, comment)
+        0L
       case graft.catalog.DropSchemaStmt(schema, ifExists, cascade) =>
         if (!catalog.schemaExists(schema)) {
           if (ifExists) 0L
           else throw new GraftQueryException(sqlText, s"Schema $schema does not exist")
-        } else {
-          try { catalog.dropSchema(schema, cascade); 0L }
-          catch { case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e) }
-        }
+        } else { catalog.dropSchema(schema, cascade); 0L }
       case graft.catalog.SetPropertiesStmt(schema, table, properties) =>
         requireCatalogTable(sqlText, schema, table)
         properties.foreach { case (key, raw) =>
           def elems = graft.catalog.DdlParser.arrayLiteralElems(raw).getOrElse(
             throw new GraftQueryException(sqlText,
               s"Property $key expects an ARRAY['…'] value, got: $raw"))
-          try key match {
+          key match {
             case "sorted_by"    => catalog.setSortSpec(schema, table, elems)
             case "partitioning" => catalog.setPartitionSpec(schema, table, elems)
             case "history.expire.min-snapshots-to-keep" =>
@@ -293,8 +309,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
             case other => throw new GraftQueryException(sqlText,
               s"Unsupported table property: $other (supported: sorted_by, " +
                 "partitioning, history.expire.min-snapshots-to-keep)")
-          } catch { case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e) }
+          }
         }
         0L
       case graft.catalog.AnalyzeStmt(schema, table) =>
@@ -320,11 +335,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
         // Trino validates a view's defining query at CREATE time — analyze
         // it (lazily planned, nothing executes) before persisting the text
         query(SqlStatement(select))
-        try { catalog.createView(schema, view, select, orReplace); 0L }
-        catch {
-          case e: IllegalStateException => throw new GraftQueryException(sqlText, e.getMessage, e)
-          case e: IllegalArgumentException => throw new GraftQueryException(sqlText, e.getMessage, e)
-        }
+        catalog.createView(schema, view, select, orReplace)
+        0L
       case graft.catalog.CreateMaterializedViewStmt(schema, view, select, ifNotExists) =>
         if (!catalog.schemaExists(schema)) catalog.createSchema(schema)
         if (catalog.isMaterializedView(schema, view)) {
@@ -332,17 +344,9 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
           else throw new GraftQueryException(sqlText,
             s"Materialized view $schema.$view already exists")
         } else {
-          val result = mvMaterialization(select)
-          try {
-            catalog.createMaterializedView(schema, view, select, result,
-              referencedSources(select))
-            0L
-          } catch {
-            case e: IllegalStateException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e)
-            case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e)
-          }
+          catalog.createMaterializedView(schema, view, select,
+            mvMaterialization(select), referencedSources(select))
+          0L
         }
       case graft.catalog.RefreshMaterializedViewStmt(schema, view) =>
         mvRefreshLock(schema, view).synchronized {
@@ -373,24 +377,6 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
           if (ifExists) 0L
           else throw new GraftQueryException(sqlText, s"View $schema.$view does not exist")
         } else { catalog.dropView(schema, view); 0L }
-      case graft.catalog.DeleteStmt(schema, table, where, branchName) =>
-        requireCatalogTable(sqlText, schema, table)
-        val cond = where.map(parseCond(sqlText, _))
-          .getOrElse(org.apache.spark.sql.functions.lit(true))
-        // affected-rows contract (Trino returns the deleted count): the
-        // count happens inside the catalog's synchronized rewrite, so no
-        // commit can interleave between the count and the delete
-        branchCatalog(sqlText, schema, table, branchName)
-          .deleteCounted(schema, table, cond)._2
-      case graft.catalog.UpdateStmt(schema, table, sets, where, branchName) =>
-        requireCatalogTable(sqlText, schema, table)
-        val cond = where.map(parseCond(sqlText, _))
-          .getOrElse(org.apache.spark.sql.functions.lit(true))
-        val setCols = sets.map { case (c, e) => (c, parseCond(sqlText, e)) }
-        try branchCatalog(sqlText, schema, table, branchName)
-          .updateCounted(schema, table, setCols, cond)._2
-        catch { case e: IllegalArgumentException =>
-          throw new GraftQueryException(sqlText, e.getMessage, e) }
       case m: graft.catalog.MergeStmt =>
         requireCatalogTable(sqlText, m.schema, m.table)
         // source: subquery text straight through the query surface; a table
@@ -424,14 +410,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
                 "WHEN NOT MATCHED supports only INSERT")
           }
         }
-        try catalog.mergeInto(m.schema, m.table, src, tAlias, sAlias,
+        catalog.mergeInto(m.schema, m.table, src, tAlias, sAlias,
           parseCond(sqlText, m.on), mActions, nmActions)._2
-        catch {
-          case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-          case e: IllegalStateException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-        }
       case graft.catalog.AddColumnStmt(schema, table, column, dataType, ifNotExists) =>
         requireCatalogTable(sqlText, schema, table)
         val exists = catalog.declaredSchema(schema, table)
@@ -450,11 +430,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
           if (!ifExists)
             throw new GraftQueryException(sqlText,
               s"Column $column does not exist in $schema.$table")
-        } else {
-          try catalog.dropColumn(schema, table, column)
-          catch { case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e) }
-        }
+        } else catalog.dropColumn(schema, table, column)
         0L
       case graft.catalog.RenameColumnStmt(schema, table, from, to, ifExists) =>
         requireCatalogTable(sqlText, schema, table)
@@ -464,46 +440,27 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
           if (!ifExists)
             throw new GraftQueryException(sqlText,
               s"Column $from does not exist in $schema.$table")
-        } else {
-          try catalog.renameColumn(schema, table, from, to)
-          catch { case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e) }
-        }
+        } else catalog.renameColumn(schema, table, from, to)
         0L
       case graft.catalog.SetColumnTypeStmt(schema, table, column, dataType) =>
         requireCatalogTable(sqlText, schema, table)
-        try { catalog.setColumnType(schema, table, column, dataType); 0L }
-        catch { case e: IllegalArgumentException =>
-          throw new GraftQueryException(sqlText, e.getMessage, e) }
+        catalog.setColumnType(schema, table, column, dataType)
+        0L
       case graft.catalog.RenameTableStmt(schema, table, newSchema, newTable) =>
         requireCatalogTable(sqlText, schema, table)
-        try { catalog.renameTable(schema, table, newSchema.getOrElse(schema), newTable); 0L }
-        catch { case e: IllegalArgumentException =>
-          throw new GraftQueryException(sqlText, e.getMessage, e) }
+        catalog.renameTable(schema, table, newSchema.getOrElse(schema), newTable)
+        0L
       case graft.catalog.CatalogRefStmt(proc, name, tables) =>
-        try {
-          proc match {
-            case "create_catalog_branch" =>
-              catalog.createCatalogBranch(name, tables); 0L
-            case "publish_catalog_branch" =>
-              catalog.publishCatalogBranch(name); 0L
-            case "materialize_catalog_branch" =>
-              catalog.materializeCatalogBranch(name); 0L
-            case "merge_catalog_branch" =>
-              catalog.mergeCatalogBranch(name); 0L
-            case "drop_catalog_branch" =>
-              catalog.dropCatalogBranch(name); 0L
-            case "create_catalog_tag" =>
-              catalog.createCatalogTag(name, tables); 0L
-            case "drop_catalog_tag" =>
-              catalog.dropCatalogTag(name); 0L
-          }
-        } catch {
-          case e: graft.catalog.CatalogPublishConflictException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
-          case e: IllegalArgumentException =>
-            throw new GraftQueryException(sqlText, e.getMessage, e)
+        proc match {
+          case "create_catalog_branch"      => catalog.createCatalogBranch(name, tables)
+          case "publish_catalog_branch"     => catalog.publishCatalogBranch(name)
+          case "materialize_catalog_branch" => catalog.materializeCatalogBranch(name)
+          case "merge_catalog_branch"       => catalog.mergeCatalogBranch(name)
+          case "drop_catalog_branch"        => catalog.dropCatalogBranch(name)
+          case "create_catalog_tag"         => catalog.createCatalogTag(name, tables)
+          case "drop_catalog_tag"           => catalog.dropCatalogTag(name)
         }
+        0L
       case graft.catalog.AlterExecuteStmt(schema, table, proc, args) =>
         // register_table / register_iceberg_table / migrate are the
         // procedures whose target must NOT exist yet
@@ -515,57 +472,40 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
             val loc = args.getOrElse("table_location",
               throw new GraftQueryException(sqlText,
                 "register_table requires table_location => '<path>'"))
-            try { catalog.registerTable(schema, table, loc); 0L }
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.registerTable(schema, table, loc)
+            0L
           case "register_iceberg_table" =>
             val loc = args.getOrElse("table_location",
               throw new GraftQueryException(sqlText,
                 "register_iceberg_table requires table_location => '<path>'"))
-            try {
-              catalog.registerIcebergTable(schema, table, loc,
-                args.get("metadata_file"))
-              0L
-            }
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.registerIcebergTable(schema, table, loc, args.get("metadata_file"))
+            0L
           case "refresh_iceberg_table" =>
-            try catalog.refreshIcebergTable(schema, table)
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.refreshIcebergTable(schema, table)
           case "export_iceberg_table" =>
             val loc = args.getOrElse("table_location",
               throw new GraftQueryException(sqlText,
                 "export_iceberg_table requires table_location => '<path>'"))
-            try catalog.exportIcebergTable(schema, table, loc)
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.exportIcebergTable(schema, table, loc)
           case "migrate" =>
             val loc = args.getOrElse("table_location",
               throw new GraftQueryException(sqlText,
                 "migrate requires table_location => '<path>'"))
-            try catalog.migrateTable(schema, table, loc)
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.migrateTable(schema, table, loc)
           case "unregister_table" =>
-            try { catalog.unregisterTable(schema, table); 0L }
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.unregisterTable(schema, table)
+            0L
           case "add_files" =>
             val loc = args.getOrElse("location",
               throw new GraftQueryException(sqlText,
                 "add_files requires location => '<path>'"))
-            try catalog.addFiles(schema, table, loc)
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.addFiles(schema, table, loc)
           case "add_files_from_table" =>
             val st = args.getOrElse("table_name",
               throw new GraftQueryException(sqlText,
                 "add_files_from_table requires table_name => '<table>'"))
             val ss = args.getOrElse("schema_name", schema)
-            try catalog.addFilesFromTable(schema, table, ss, st)
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.addFilesFromTable(schema, table, ss, st)
           case "optimize" =>
             catalog.compact(schema, table,
               args.get("file_count").map(_.toInt).getOrElse(1),
@@ -588,9 +528,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
             val id = args.getOrElse("snapshot_id",
               throw new GraftQueryException(sqlText,
                 "rollback_to_snapshot requires snapshot_id => <id>")).toLong
-            try { catalog.rollbackToSnapshot(schema, table, id); 0L }
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.rollbackToSnapshot(schema, table, id)
+            0L
           case "rollback_to_timestamp" =>
             // timestamp => TIMESTAMP '2026-01-01 00:00:00' (or the bare
             // quoted literal) — resolved like FOR TIMESTAMP AS OF, UTC
@@ -605,28 +544,20 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
               catch { case e: java.time.format.DateTimeParseException =>
                 throw new GraftQueryException(sqlText,
                   s"Malformed rollback_to_timestamp literal: '$lit'", e) }
-            try { catalog.rollbackToTimestamp(schema, table, ms); 0L }
-            catch { case e: IllegalArgumentException =>
-              throw new GraftQueryException(sqlText, e.getMessage, e) }
+            catalog.rollbackToTimestamp(schema, table, ms)
+            0L
           case "create_branch" | "drop_branch" | "create_tag" | "drop_tag" |
                "fast_forward" | "merge_branch" =>
             val name = args.getOrElse("name",
               throw new GraftQueryException(sqlText, s"$proc requires a ref name"))
             val snapId = args.get("snapshot_id").map(_.toLong)
-            try {
-              proc match {
-                case "create_branch" => catalog.createBranch(schema, table, name, snapId); 0L
-                case "drop_branch"   => catalog.dropBranch(schema, table, name); 0L
-                case "create_tag"    => catalog.createTag(schema, table, name, snapId); 0L
-                case "drop_tag"      => catalog.dropTag(schema, table, name); 0L
-                case "fast_forward"  => catalog.fastForward(schema, table, name); 0L
-                case "merge_branch"  => catalog.mergeBranch(schema, table, name)
-              }
-            } catch {
-              case e: IllegalArgumentException =>
-                throw new GraftQueryException(sqlText, e.getMessage, e)
-              case e: graft.catalog.MergeConflictException =>
-                throw new GraftQueryException(sqlText, e.getMessage, e)
+            proc match {
+              case "create_branch" => catalog.createBranch(schema, table, name, snapId); 0L
+              case "drop_branch"   => catalog.dropBranch(schema, table, name); 0L
+              case "create_tag"    => catalog.createTag(schema, table, name, snapId); 0L
+              case "drop_tag"      => catalog.dropTag(schema, table, name); 0L
+              case "fast_forward"  => catalog.fastForward(schema, table, name); 0L
+              case "merge_branch"  => catalog.mergeBranch(schema, table, name)
             }
           case other =>
             throw new GraftQueryException(sqlText,
@@ -643,22 +574,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     if (!catalog.tableExists(schema, table))
       throw new GraftQueryException(sqlText, s"Table $schema.$table does not exist")
 
-  /** Catalog view a DML statement commits through: the named branch
-    * (`sch."t@branch"` operands) or main.
-    */
-  private def branchCatalog(sqlText: String, schema: String, table: String,
-                            branchName: Option[String]): graft.catalog.SnapshotCatalog =
-    branchName match {
-      case None => catalog
-      case Some(b) =>
-        if (!catalog.branchExists(schema, table, b))
-          throw new GraftQueryException(sqlText,
-            s"Branch $b does not exist on $schema.$table")
-        catalog.branch(b)
-    }
-
-  /** Parse a DML scalar/predicate expression via Catalyst, converting the
-    * parse error into the engine's typed failure contract.
+  /** Parse a MERGE or `optimize … WHERE` scalar/predicate via Catalyst,
+    * converting the parse error into the engine's typed failure contract.
     */
   private def parseCond(sqlText: String, e: String): org.apache.spark.sql.Column =
     try {
@@ -681,71 +598,93 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     })
   }
 
-  private val insertRe =
-    """(?is)^\s*INSERT\s+INTO\s+(?:(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)\.)?([A-Za-z_]\w*)\s+VALUES\s+(.+)$""".r
-  private val insertSelectRe =
-    """(?is)^\s*INSERT\s+INTO\s+(?:(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)\.)?([A-Za-z_]\w*)\s+((?:SELECT|WITH)\s+.+)$""".r
-
-  // Trino Iceberg's branch-write spelling: INSERT INTO sch."t@branch"
-  // (write-audit-publish: write to a branch, validate, fast_forward) —
-  // VALUES or SELECT source, committed against the BRANCH ref only
-  private val insertBranchRe =
-    """(?is)^\s*INSERT\s+INTO\s+(?:(?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*)\.)?"([A-Za-z_]\w*)@([A-Za-z_]\w*)"\s+((?:VALUES|SELECT|WITH)\s+.+)$""".r
-
-  /** `INSERT INTO [catalog.]<schema>.<table> VALUES (…),(…)` → snapshot
-    * commit (a leading catalog qualifier, the reference's `iceberg.`, is
-    * accepted and dropped). Literal rows are parsed by Catalyst
-    * (`SELECT * FROM VALUES …`), cast positionally to the declared table
-    * schema, and appended as one commit — each INSERT is one
-    * time-travel-visible snapshot, exactly the reference's commit model
-    * (AthenaClientTests.cs:351-364). The quoted `"t@branch"` form
-    * commits to that BRANCH ref, leaving main untouched.
+  /** The catalog table a parsed INSERT, DELETE or UPDATE writes, as
+    * (schema, table, branch): resolved by name only, never bound to a
+    * read; `"t@br"` names branch `br`. None for any other statement and
+    * for a target the catalog does not own, which Spark resolves itself.
+    * A catalog view, a metadata table or an aliased target is refused.
     */
-  private def tryInsert(sqlText: String): Option[Long] = sqlText match {
-    case insertBranchRe(schemaName0, tableName, branchName, source) =>
-      val schemaName = Option(schemaName0).getOrElse(sessionSchema)
-      if (!catalog.tableExists(schemaName, tableName)) None
-      else {
-        if (!catalog.branchExists(schemaName, tableName, branchName))
-          throw new GraftQueryException(sqlText,
-            s"Branch $branchName does not exist on $schemaName.$tableName")
-        val src =
-          if (source.trim.toUpperCase.startsWith("VALUES"))
-            spark.sql(s"SELECT * FROM ${source.stripSuffix(";")}")
-          else query(SqlStatement(source.stripSuffix(";")))
-        Some(commitInsert(schemaName, tableName, src,
-          catalog.branch(branchName)))
+  private def catalogWrite(sqlText: String,
+                           plan: LogicalPlan): Option[(String, String, Option[String])] = {
+    def refuse(why: String) = throw new GraftQueryException(sqlText, why)
+    writeTarget(plan).collect {
+      case r: UnresolvedRelation                   => (r, false)
+      case SubqueryAlias(_, r: UnresolvedRelation) => (r, true)
+    }.flatMap { case (rel, aliased) =>
+      val owned = TableRefs.schemaTable(rel.multipartIdentifier, sessionSchema).flatMap {
+        case (sch, branchName(tbl, br)) if catalog.tableExists(sch, tbl) => Some((sch, tbl, Some(br)))
+        case (sch, tbl) if catalog.tableExists(sch, tbl) => Some((sch, tbl, None))
+        case (sch, name @ metadataName(tbl, _)) if catalog.tableExists(sch, tbl) =>
+          refuse(s"Metadata table $sch.$name is read-only")
+        case (sch, tbl) if catalog.viewExists(sch, tbl) =>
+          refuse(s"$sch.$tbl is a view; INSERT, DELETE and UPDATE write tables")
+        case _ => None
       }
-    case insertRe(schemaName0, tableName, values) =>
-      // an unqualified name resolves against the session schema
-      val schemaName = Option(schemaName0).getOrElse(sessionSchema)
-      if (catalog.tableExists(schemaName, tableName))
-        Some(commitInsert(schemaName, tableName,
-          spark.sql(s"SELECT * FROM VALUES ${values.stripSuffix(";")}")))
-      else None
-    case insertSelectRe(schemaName0, tableName, select) =>
-      val schemaName = Option(schemaName0).getOrElse(sessionSchema)
-      // INSERT INTO … SELECT: the source query goes through the full query
-      // surface (catalog refs + time travel resolve inside it too)
-      if (catalog.tableExists(schemaName, tableName))
-        Some(commitInsert(schemaName, tableName, query(SqlStatement(select.stripSuffix(";")))))
-      else None
-    case _ => None
+      if (owned.isDefined && aliased) refuse("A DELETE or UPDATE target takes no alias")
+      owned
+    }
+  }
+
+  private def writeTarget(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+    case i: InsertIntoStatement => Some(i.table)
+    case d: DeleteFromTable     => Some(d.table)
+    case u: UpdateTable         => Some(u.table)
+    case _                      => None
+  }
+
+  /** Commit a parsed INSERT, DELETE or UPDATE on the catalog table
+    * [[catalogWrite]] resolved; returns rows affected. The INSERT source,
+    * the WHERE predicate and the SET values bind like a query's relations
+    * (catalog tables, time travel, subqueries); the target stays a name.
+    */
+  private def commitWrite(sqlText: String, plan: LogicalPlan,
+                          target: (String, String, Option[String])): Long = {
+    val (sch, tbl, branch) = target
+    val cat = branch.fold(catalog) { br =>
+      require(catalog.branchExists(sch, tbl, br), s"Branch $br does not exist on $sch.$tbl")
+      catalog.branch(br)
+    }
+    val written = writeTarget(plan)
+    val bound = TableRefs.mapRelations(plan) { r =>
+      if (written.exists(_ eq r)) r else bindRelation(sqlText, r, Map.empty)
+    }
+    val column = GraftPlanBridge.column _
+    bound match {
+      case i: InsertIntoStatement =>
+        require(i.userSpecifiedCols.isEmpty && i.partitionSpec.isEmpty && !i.byName,
+          "INSERT takes no column list: the source supplies every column in table order")
+        require(!i.overwrite, "INSERT OVERWRITE is not supported")
+        commitInsert(sch, tbl, GraftPlanBridge.ofRows(spark, i.query), cat)
+      case d: DeleteFromTable =>
+        // affected-rows contract (Trino returns the deleted count): the
+        // count happens inside the catalog's synchronized rewrite, so no
+        // commit can interleave between the count and the delete
+        cat.deleteCounted(sch, tbl, column(d.condition))._2
+      case u: UpdateTable =>
+        val sets = u.assignments.map {
+          case Assignment(UnresolvedAttribute(Seq(c)), value) => (c, column(value))
+          case Assignment(key, _) => throw new IllegalArgumentException(
+            s"UPDATE SET target must be a column of $sch.$tbl, got ${key.sql}")
+        }
+        cat.updateCounted(sch, tbl, sets,
+          u.condition.fold(org.apache.spark.sql.functions.lit(true))(column))._2
+    }
   }
 
   /** Cast a source frame positionally to the table's declared schema and
-    * commit it as one snapshot; returns rows affected.
+    * commit it as one snapshot (each INSERT is one time-travel-visible
+    * snapshot, the reference's commit model, AthenaClientTests.cs:351-364);
+    * returns rows affected.
     */
   private def commitInsert(schemaName: String, tableName: String,
-                           raw: DataFrame,
-                           cat: graft.catalog.SnapshotCatalog = catalog): Long = {
+                           raw: DataFrame, cat: SnapshotCatalog): Long = {
     val declared = cat.declaredSchema(schemaName, tableName).getOrElse(
       throw new IllegalStateException(s"Table $schemaName.$tableName has no declared schema"))
     require(raw.schema.length == declared.length,
       s"INSERT arity ${raw.schema.length} != table arity ${declared.length}")
-    val cast = raw.select(declared.fields.zipWithIndex.map { case (f, i) =>
-      org.apache.spark.sql.functions.col(raw.columns(i)).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
+    val cast = raw.select(declared.fields.toIndexedSeq.zip(GraftPlanBridge.columnsOf(raw)).map {
+      case (f, c) => c.cast(f.dataType).as(f.name)
+    }: _*)
     val n = cast.count()
     cat.insert(schemaName, tableName, cast)
     n
@@ -753,31 +692,25 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
 
   /** Run a multi-statement SQL script exactly the way the reference's
     * stack runner feeds its seed scripts (TrinoIcebergStack.cs:152-197):
-    * drop `--` comments to end-of-line (full-line AND trailing, but never
-    * inside a string literal — a comment containing an apostrophe must
-    * not poison the quote state either), split on statement-terminating
-    * `;` (quote-aware — a `;` inside a string literal does not split),
-    * execute each non-empty statement in order. Returns per-statement row
-    * counts.
+    * drop `--` and `/* */` comments, split on `;`, execute each non-empty
+    * statement in order. String literals and quoted names
+    * ([[TableRefs.quotedSpans]]) are kept whole: a `;` or `--` inside one
+    * neither splits nor comments, and an apostrophe inside a comment
+    * opens no literal. Returns per-statement row counts.
     */
   def executeScript(script: String): Seq[Long] = {
-    val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
+    val stmts = Seq.newBuilder[String]
     val cur = new StringBuilder
-    var inQuote = false
-    var i = 0
-    while (i < script.length) {
-      val c = script.charAt(i)
-      if (!inQuote && c == '-' && i + 1 < script.length && script.charAt(i + 1) == '-') {
-        while (i < script.length && script.charAt(i) != '\n') i += 1
-      } else {
-        if (c == '\'') inQuote = !inQuote
-        if (c == ';' && !inQuote) { stmts += cur.toString; cur.clear() }
-        else cur += c
-        i += 1
+    TableRefs.pieces(script).foreach {
+      case (_, Some('-' | '/')) => cur += ' '
+      case (text, None) => text.foreach {
+        case ';' => stmts += cur.result(); cur.clear()
+        case c   => cur += c
       }
+      case (text, _) => cur ++= text
     }
-    stmts += cur.toString
-    stmts.map(_.trim).filter(_.nonEmpty).toSeq
+    stmts += cur.result()
+    stmts.result().map(_.trim).filter(_.nonEmpty)
       .map(s => executeNonQuery(SqlStatement(s)))
   }
 
@@ -1078,15 +1011,19 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
   private def parse(sqlText: String): LogicalPlan =
     TableRefs.parse(spark, rewriteNullOrdering(sqlText))
 
-  /** The parsed statement with every table reference the snapshot
+  /** A parsed statement with every table reference the snapshot
     * catalog owns bound to the catalog's DataFrame ([[bindRelation]]).
     * `overrides` substitutes a DataFrame for a plain reference to a
     * table — the incremental MV refresh replays a definition over deltas
     * and pinned states this way.
     */
-  private def boundPlan(sqlText: String,
+  private def boundPlan(sqlText: String, plan: LogicalPlan,
                         overrides: Map[(String, String), DataFrame] = Map.empty): LogicalPlan =
-    TableRefs.mapRelations(parse(sqlText))(bindRelation(sqlText, _, overrides))
+    TableRefs.mapRelations(plan)(bindRelation(sqlText, _, overrides))
+
+  /** A parsed statement run as its bound plan. */
+  private def run(sqlText: String, plan: LogicalPlan): DataFrame =
+    GraftPlanBridge.ofRows(spark, boundPlan(sqlText, plan))
 
   private val metadataName = """(\w+)\$(\w+)""".r
   private val branchName = """(\w+)@(\w+)""".r
@@ -1439,7 +1376,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     // the leg's sources overridden; the avg path also appends the hidden
     // sum/count partials to the aggregate
     def runDef(m: Map[(String, String), DataFrame]): DataFrame = {
-      val bound = boundPlan(defSql, m)
+      val bound = boundPlan(defSql, parse(defSql), m)
       if (!hasAvg) GraftPlanBridge.ofRows(spark, bound)
       else MvIncremental.replayAugmented(spark, bound, aggOutputs)
         .getOrElse(throw new GraftQueryException(defSql,
@@ -1515,7 +1452,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       case _ => None
     }
     avgOut.flatMap { o =>
-      MvIncremental.replayAugmented(spark, boundPlan(select), o)
+      MvIncremental.replayAugmented(spark, boundPlan(select, parse(select)), o)
         .filter { df =>
           val fs = df.schema.fields
           o.zipWithIndex.forall {

@@ -26,25 +26,15 @@ private[graft] object TableRefs {
     * since Spark's lexer does not take `$` in a bare identifier. String
     * literals, backtick identifiers and comments pass through unchanged.
     */
-  private def trinoIdentifiers(sql: String): String = {
-    val out = new StringBuilder(sql.length + 8)
-    var at = 0
-    def bare(end: Int): Unit = {
-      out ++= bareMetadataName.replaceAllIn(sql.substring(at, end),
+  private def trinoIdentifiers(sql: String): String =
+    pieces(sql).map {
+      case (text, None) => bareMetadataName.replaceAllIn(text,
         m => java.util.regex.Matcher.quoteReplacement(s"`${m.matched}`"))
-      at = end
-    }
-    for ((start, end, kind) <- quotedSpans(sql)) {
-      bare(start)
-      val closed = end - start >= 2 && sql.charAt(end - 1) == '"'
-      out ++= (if (kind != '"' || !closed) sql.substring(start, end)
-        else "`" + sql.substring(start + 1, end - 1).replace("\"\"", "\"")
-          .replace("`", "``") + "`")
-      at = end
-    }
-    bare(sql.length)
-    out.toString
-  }
+      case (text, Some('"')) if text.length >= 2 && text.last == '"' =>
+        "`" + text.substring(1, text.length - 1).replace("\"\"", "\"")
+          .replace("`", "``") + "`"
+      case (text, _) => text
+    }.mkString
 
   private val bareMetadataName = """(?<![\w$])[A-Za-z_]\w*\$\w+""".r
 
@@ -82,6 +72,22 @@ private[graft] object TableRefs {
       if (end < 0) i += 1 else { spans += ((i, end, c)); i = end }
     }
     spans.result()
+  }
+
+  /** `sql` cut at the [[quotedSpans]]: each span with its opening
+    * character, each run of text between spans with None. The pieces
+    * concatenate back to `sql`.
+    */
+  def pieces(sql: String): Seq[(String, Option[Char])] = {
+    val out = Seq.newBuilder[(String, Option[Char])]
+    var at = 0
+    for ((start, end, kind) <- quotedSpans(sql)) {
+      if (start > at) out += ((sql.substring(at, start), None))
+      out += ((sql.substring(start, end), Some(kind)))
+      at = end
+    }
+    if (at < sql.length) out += ((sql.substring(at), None))
+    out.result()
   }
 
   /** (schema, table) a relation name refers to: a bare `t` under the

@@ -2,14 +2,18 @@ package graft.catalog
 
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-/** Parsed DDL/DML statements in the Trino dialect the reference's seed
-  * scripts use (reference tests/IntegrationTests/Scripts/create/
-  * 01-schema.sql, 02-tables.sql): `CREATE SCHEMA [IF NOT EXISTS]
-  * [cat.]schema [WITH (location = '…')]`, `CREATE TABLE [IF NOT EXISTS]
-  * [cat.]schema.table (col type, …)`, CTAS, `DROP TABLE [IF EXISTS]`,
-  * `CREATE [OR REPLACE] VIEW … AS …` / `DROP VIEW [IF EXISTS]`,
-  * `DELETE`/`UPDATE`/`MERGE INTO`, `ALTER TABLE … EXECUTE <procedure>`,
-  * and `CALL [cat.]system.rollback_to_snapshot(…)`.
+/** Parsed DDL, CALL and MERGE statements in the Trino dialect the
+  * reference's seed scripts use (reference tests/IntegrationTests/
+  * Scripts/create/01-schema.sql, 02-tables.sql): `CREATE SCHEMA [IF NOT
+  * EXISTS] [cat.]schema [WITH (location = '…')]`, `CREATE TABLE [IF NOT
+  * EXISTS] [cat.]schema.table (col type, …)`, CTAS, `DROP TABLE [IF
+  * EXISTS]`, `CREATE [OR REPLACE] VIEW … AS …` / `DROP VIEW [IF EXISTS]`,
+  * `ALTER TABLE … EXECUTE <procedure>`, `CALL [cat.]system.<procedure>(…)`
+  * and `MERGE INTO`. INSERT, DELETE and UPDATE are not here: Spark's
+  * parser reads them (`GraftEngine.executeNonQuery`). MERGE stays here
+  * because Spark's grammar refuses two Trino-valid spellings — `WHEN NOT
+  * MATCHED THEN INSERT VALUES (…)` without a column list, and a `WHEN NOT
+  * MATCHED` clause before a `WHEN MATCHED` one.
   * A leading catalog qualifier (the reference's `iceberg.`) names the
   * connector in Trino; here there is exactly one catalog, so it is
   * accepted and dropped.
@@ -36,13 +40,6 @@ final case class CreateTableLikeStmt(schema: String, table: String,
                                      ifNotExists: Boolean) extends DdlStatement
 final case class DropTableStmt(schema: String, table: String,
                                ifExists: Boolean) extends DdlStatement
-final case class DeleteStmt(schema: String, table: String,
-                            where: Option[String],
-                            branch: Option[String] = None) extends DdlStatement
-final case class UpdateStmt(schema: String, table: String,
-                            sets: Seq[(String, String)],
-                            where: Option[String],
-                            branch: Option[String] = None) extends DdlStatement
 final case class AlterExecuteStmt(schema: String, table: String,
                                   procedure: String,
                                   args: Map[String, String]) extends DdlStatement
@@ -219,12 +216,6 @@ object DdlParser {
   // '/path'), positional or name => value
   private val callRegisterRe =
     """(?is)^\s*CALL\s+(?:[\w.]*\bsystem\.)?(register_table|register_iceberg_table|refresh_iceberg_table|export_iceberg_table|unregister_table|migrate)\s*\(\s*(.*?)\s*\)\s*;?\s*$""".r
-  // the table operand accepts Trino's quoted branch-write form
-  // (`sch."t@branch"`) alongside plain dotted names
-  private val deleteRe =
-    """(?is)^\s*DELETE\s+FROM\s+((?:[\w.]+\.)?"\w+@\w+"|[\w.]+)\s*(.*?)\s*;?\s*$""".r
-  private val updateRe =
-    """(?is)^\s*UPDATE\s+((?:[\w.]+\.)?"\w+@\w+"|[\w.]+)\s+SET\s+(.+?)\s*;?\s*$""".r
   // Trino Iceberg maintenance syntax: ALTER TABLE t EXECUTE optimize /
   // expire_snapshots(retention_threshold => '7d') / remove_orphan_files(…);
   // optimize additionally takes Trino's scoped form
@@ -428,30 +419,6 @@ object DdlParser {
         require(kv.contains("table_location"), s"CALL $proc: missing table_location")
       Some(AlterExecuteStmt(sch, tbl, proc.toLowerCase,
         kv -- Seq("schema_name", "schema", "table_name", "table")))
-    case deleteRe(name, rest) =>
-      val (sch, tbl, br) = tableRefOf(name, defaultSchema)
-      val where = rest.trim match {
-        case "" => None
-        case w if w.toUpperCase.startsWith("WHERE") =>
-          Some(w.substring(5).trim).filter(_.nonEmpty)
-        case other =>
-          throw new IllegalArgumentException(
-            s"DELETE supports only an optional WHERE clause, got: '$other'")
-      }
-      Some(DeleteStmt(sch, tbl, where, br))
-    case updateRe(name, setsAndWhere) =>
-      val (sch, tbl, br) = tableRefOf(name, defaultSchema)
-      val (setPart, where) = splitWhere(setsAndWhere)
-      val sets = splitQuotedTopLevel(setPart).map { a =>
-        val eq = topLevelIndexOf(a, '=')
-        require(eq > 0, s"Malformed SET assignment: '$a'")
-        val colName = a.substring(0, eq).trim
-        require(colName.matches("""[A-Za-z_]\w*"""),
-          s"Malformed SET target column: '$colName'")
-        (colName, a.substring(eq + 1).trim)
-      }
-      require(sets.nonEmpty, "UPDATE requires at least one SET assignment")
-      Some(UpdateStmt(sch, tbl, sets, where, br))
     case addColumnRe(name, ine, colName, typeText) =>
       val (sch, tbl) = tableOf(name)
       Some(AddColumnStmt(sch, tbl, colName, sparkType(typeText), ine != null))
@@ -662,38 +629,11 @@ object DdlParser {
       else s"WHEN NOT MATCHED supports only INSERT, got: '$actionText'")
   }
 
-  /** Split `<assignments> [WHERE <cond>]` at the first top-level,
-    * unquoted WHERE keyword. A WHERE inside a string literal or inside
-    * parens (a subquery in an assignment) does not split.
-    */
-  private def splitWhere(s: String): (String, Option[String]) = {
-    var depth = 0; var inQuote = false; var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inQuote = !inQuote
-        case '(' if !inQuote => depth += 1
-        case ')' if !inQuote => depth -= 1
-        case c if !inQuote && depth == 0 && (c == 'w' || c == 'W') &&
-          i + 5 <= s.length && s.substring(i, i + 5).equalsIgnoreCase("where") &&
-          (i == 0 || !s.charAt(i - 1).isLetterOrDigit && s.charAt(i - 1) != '_') &&
-          (i + 5 == s.length || !s.charAt(i + 5).isLetterOrDigit && s.charAt(i + 5) != '_') =>
-          return (s.substring(0, i).trim,
-            Some(s.substring(i + 5).trim).filter(_.nonEmpty))
-        case _ =>
-      }
-      i += 1
-    }
-    (s.trim, None)
-  }
-
   /** Public quote/paren-aware top-level comma split — EXECUTE…USING
     * argument lists and other callers outside this parser.
     */
   def splitArgs(s: String): Seq[String] = splitQuotedTopLevel(s)
 
-  /** [[splitTopLevel]] that also respects single-quoted literals (a comma
-    * inside `'a,b'` does not split).
-    */
   /** `ARRAY['a', 'b c']` → its string elements (None when `text` is not
     * an ARRAY literal). Shared by WITH-properties and SET PROPERTIES.
     */
@@ -775,18 +715,6 @@ object DdlParser {
     */
   private def tablePropsOf(props: String): (Seq[String], Int, Seq[String], Seq[String]) = {
     if (props == null || props.trim.isEmpty) return (Seq.empty, 1, Seq.empty, Seq.empty)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    props.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case c @ ('[' | '(') if !inQuote => depth += 1; cur += c
-      case c @ (']' | ')') if !inQuote => depth -= 1; cur += c
-      case ',' if !inQuote && depth == 0 => parts += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    parts += cur.toString
     val partitioningRe = """(?is)^\s*partitioning\s*=\s*ARRAY\[([^\]]*)\]\s*$""".r
     val sortedByRe = """(?is)^\s*sorted_by\s*=\s*ARRAY\[([^\]]*)\]\s*$""".r
     // Trino Iceberg's property name, with a short alias
@@ -804,7 +732,7 @@ object DdlParser {
       if (quoted.nonEmpty) quoted
       else cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq // unquoted spelling
     }
-    val partitioning = parts.map(_.trim).filter(_.nonEmpty).flatMap {
+    val partitioning = splitPropsTopLevel(props).flatMap {
       case partitioningRe(cols) =>
         arrayElems(cols)
       case sortedByRe(cols) =>
@@ -837,40 +765,6 @@ object DdlParser {
     val parts = name.split('.')
     if (parts.length >= 2) (parts(parts.length - 2), parts.last)
     else (defaultSchema, parts.head)
-  }
-
-  private val branchNameRe =
-    """(?is)^(?:([\w.]+)\.)?"(\w+)@(\w+)"$""".r
-
-  /** Table operand that may carry Trino's quoted branch suffix:
-    * `sch."t@branch"` → (sch, t, Some(branch)); plain names → no branch.
-    */
-  private def tableRefOf(name: String,
-                         defaultSchema: String): (String, String, Option[String]) =
-    name.trim match {
-      case branchNameRe(qual, tbl, br) =>
-        val sch = Option(qual).map(q => q.split('.').last).getOrElse(defaultSchema)
-        (sch, tbl, Some(br))
-      case plain =>
-        val (sch, tbl) = tableOf(plain, defaultSchema)
-        (sch, tbl, None)
-    }
-
-  /** Split a column-definition list on top-level commas (nesting-aware, so
-    * `decimal(10,2)` survives).
-    */
-  private[catalog] def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case '(' => depth += 1; cur += '('
-      case ')' => depth -= 1; cur += ')'
-      case ',' if depth == 0 => out += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** (declared schema, per-column comments keyed by lowercase name) — a

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ReturnAnswer}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
@@ -9,8 +10,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * analyzed plan accessor are `private[sql]`, so the two one-liners live
   * in this package — the same extension-point pattern as
   * [[GraftScanBridge]]. Attribute-backed columns and the session's
-  * planner are `private[sql]` too, hence [[columnsOf]] and
-  * [[addPhysicalRewrite]].
+  * planner are `private[sql]` too, hence [[columnsOf]], [[column]] (the
+  * facade's DML predicates and SET values) and [[addPhysicalRewrite]].
   */
 object GraftPlanBridge {
 
@@ -29,8 +30,12 @@ object GraftPlanBridge {
     * resolves to exactly that column.
     */
   def columnsOf(df: DataFrame): IndexedSeq[Column] =
-    df.asInstanceOf[classic.Dataset[Row]].logicalPlan.output
-      .map(classic.ExpressionUtils.column).toIndexedSeq
+    df.asInstanceOf[classic.Dataset[Row]].logicalPlan.output.map(column).toIndexedSeq
+
+  /** A Column over a parsed (or bound) Catalyst expression, as written:
+    * it resolves against whichever plan it is attached to.
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   /** Apply `rewrite` to every batch physical plan the session's planner
     * produces, whichever strategy planned each node. Installed at most

@@ -314,6 +314,11 @@ class GraftEngineSpec extends SparkSpec {
         |INSERT INTO ic.t VALUES (1), (2); -- two rows
         |SELECT count(*) FROM ic.t;""".stripMargin)
     assert(counts == Seq(0L, 0L, 2L, 2L), s"got $counts")
+    // a block comment and a quoted name keep their `;` too
+    val more = e2.executeScript(
+      """/* seed; two rows */ INSERT INTO ic.t VALUES (3), (4);
+        |SELECT count(*) AS "a;b" FROM ic.t;""".stripMargin)
+    assert(more == Seq(2L, 4L), s"got $more")
     // a -- inside a string literal is NOT a comment
     assert(e2.queryScalar[String](graft.params.SqlStatement(
       "SELECT 'a -- b' AS v")).contains("a -- b"))

@@ -147,6 +147,73 @@ class SqlDmlSpec extends SparkSpec {
     assert(ex2.getMessage.toLowerCase.contains("malformed"))
   }
 
+  test("DML parses once: comments, quoted names, WITH sources and catalog subqueries") {
+    // (statement, rows affected, demo.t's (id, qty) rows afterwards);
+    // demo.u holds ids 2 and 3
+    val base = Seq(1L -> 10L, 2L -> 20L, 3L -> 30L, 4L -> 40L)
+    val cases = Seq(
+      ("/* c */ DELETE FROM demo.t WHERE id = 1", 1L, base.tail),
+      ("DELETE FROM \"demo\".\"t\" WHERE id = 1", 1L, base.tail),
+      ("-- c\nINSERT INTO demo.t VALUES (13, 'x', 0)", 1L, base :+ (13L -> 0L)),
+      ("-- c\nINSERT INTO \"demo\".\"t\" SELECT id + 10, name, 0 FROM demo.u", 2L,
+        base ++ Seq(12L -> 0L, 13L -> 0L)),
+      ("INSERT INTO demo.t WITH s AS (SELECT id FROM demo.u) SELECT id + 20, 'w', 1 FROM s;", 2L,
+        base ++ Seq(22L -> 1L, 23L -> 1L)),
+      ("DELETE FROM demo.t WHERE id IN (SELECT id FROM demo.u)", 2L,
+        Seq(1L -> 10L, 4L -> 40L)),
+      ("UPDATE demo.t SET qty = 0, name = 'u' WHERE id IN (SELECT id FROM demo.u)", 2L,
+        Seq(1L -> 10L, 2L -> 0L, 3L -> 0L, 4L -> 40L)),
+      ("DELETE FROM demo.t WHERE qty > (SELECT avg(qty) FROM demo.t)", 2L, base.take(2)),
+      ("UPDATE demo.t SET qty = (SELECT max(qty) FROM demo.t FOR VERSION AS OF 1) WHERE id = 1",
+        1L, (1L -> 40L) +: base.tail))
+    for (((stmt, affected, rows), i) <- cases.zipWithIndex) {
+      val e = freshEngine(s"dml-parse-once-$i")
+      e.executeNonQuery(SqlStatement("CREATE TABLE demo.u (id bigint, name varchar)"))
+      e.executeNonQuery(SqlStatement("INSERT INTO demo.u VALUES (2, 'x'), (3, 'y')"))
+      assert(e.executeNonQuery(SqlStatement(stmt)) == affected, stmt)
+      val got = e.query(SqlStatement("SELECT id, qty FROM demo.t ORDER BY id"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(got == rows, stmt)
+    }
+  }
+
+  test("executeNonQuery raises every failure as GraftQueryException") {
+    val e = freshEngine("dml-typed")
+    Seq(
+      "INSERT INTO demo.t VALUES (3)",
+      "DELETE FROM demo.t WHERE nope = 1",
+      "ALTER TABLE demo.t EXECUTE optimize(file_count => 'x')",
+      "ALTER TABLE demo.t EXECUTE rollback_to_snapshot(snapshot_id => abc)"
+    ).foreach { stmt =>
+      val ex = intercept[GraftQueryException](e.executeNonQuery(SqlStatement(stmt)))
+      assert(ex.statement == stmt)
+    }
+    assert(e.catalog.snapshots("demo", "t").size == 1)
+  }
+
+  test("DML the catalog cannot take is refused, never handed to Spark") {
+    val e = freshEngine("dml-refused")
+    e.executeNonQuery(SqlStatement("CREATE VIEW demo.v AS SELECT id FROM demo.t"))
+    Seq(
+      "INSERT INTO demo.t (id, name, qty) VALUES (5, 'e', 50)",
+      "INSERT OVERWRITE demo.t VALUES (5, 'e', 50)",
+      "DELETE FROM demo.t AS x WHERE x.id = 1",
+      "UPDATE demo.t x SET qty = 0",
+      "UPDATE demo.t SET t.qty = 0",
+      "DELETE FROM demo.v WHERE id = 1",
+      "DELETE FROM demo.\"t$snapshots\""
+    ).foreach { stmt =>
+      val ex = intercept[GraftQueryException](e.executeNonQuery(SqlStatement(stmt)))
+      assert(ex.statement == stmt)
+    }
+    // the query surface names the entry point that writes
+    val ex = intercept[GraftQueryException](
+      e.query(SqlStatement("DELETE FROM demo.t WHERE id = 1")))
+    assert(ex.getMessage.contains("executeNonQuery"))
+    assert(e.catalog.snapshots("demo", "t").size == 1)
+    assert(e.query(SqlStatement("SELECT count(*) AS n FROM demo.t")).as[Long].head() == 4L)
+  }
+
   test("ALTER TABLE ADD COLUMN: SQL spelling of additive schema evolution") {
     val e = freshEngine("dml-addcol")
     e.executeNonQuery(SqlStatement(

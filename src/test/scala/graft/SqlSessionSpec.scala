@@ -29,6 +29,10 @@ class SqlSessionSpec extends SparkSpec {
     assert(e.query(SqlStatement("EXECUTE q1 USING 3")).count() == 1L)
     // expressions as arguments (Trino EXECUTE…USING takes expressions)
     assert(e.query(SqlStatement("EXECUTE q1 USING 1 + 1")).count() == 2L)
+    // nor is one inside a quoted name or a comment
+    e.executeNonQuery(SqlStatement(
+      "PREPARE q2 FROM SELECT id AS \"x?\" FROM demo.t /* why? */ WHERE id = ?"))
+    assert(e.query(SqlStatement("EXECUTE q2 USING 2")).as[Long].collect().toSeq == Seq(2L))
   }
 
   test("EXECUTE errors: unknown name, arity mismatch; DEALLOCATE removes") {
