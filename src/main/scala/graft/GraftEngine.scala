@@ -674,7 +674,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
   /** Cast a source frame positionally to the table's declared schema and
     * commit it as one snapshot (each INSERT is one time-travel-visible
     * snapshot, the reference's commit model, AthenaClientTests.cs:351-364);
-    * returns rows affected.
+    * returns rows affected, read from the written files' footers — the
+    * source runs once, in the write.
     */
   private def commitInsert(schemaName: String, tableName: String,
                            raw: DataFrame, cat: SnapshotCatalog): Long = {
@@ -685,9 +686,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     val cast = raw.select(declared.fields.toIndexedSeq.zip(GraftPlanBridge.columnsOf(raw)).map {
       case (f, c) => c.cast(f.dataType).as(f.name)
     }: _*)
-    val n = cast.count()
-    cat.insert(schemaName, tableName, cast)
-    n
+    cat.insertCounted(schemaName, tableName, cast)._2
   }
 
   /** Run a multi-statement SQL script exactly the way the reference's

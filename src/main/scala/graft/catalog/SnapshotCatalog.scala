@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.logging.Log
 import scala.jdk.CollectionConverters._
 
 /** One committed snapshot. `schemaJson` is the declared schema AT COMMIT
@@ -124,6 +125,7 @@ final case class MergeInsertAction(cond: Option[org.apache.spark.sql.Column],
   */
 class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private val mapper = new ObjectMapper
+  private val log = Log(classOf[SnapshotCatalog])
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -3254,12 +3256,11 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** CTAS (S4): create + single snapshot from a query result; returns the
     * row count, like the reference's CTAS row-count contract
-    * (AthenaClient.cs:152-160).
+    * (AthenaClient.cs:152-160), from the commit's own footers.
     */
   def createTableAs(schema: String, table: String, df: DataFrame): Long = {
     createTable(schema, table, df.schema)
-    insert(schema, table, df)
-    readLatest(schema, table).count()
+    insertCounted(schema, table, df)._2
   }
 
   /** `CREATE OR REPLACE TABLE t AS …` (Trino Iceberg's atomic replace):
@@ -3319,7 +3320,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   // ---- DML (S5) ----
 
-  /** INSERT INTO: write a new snap dir, append a commit. Commit timestamps
+  /** INSERT INTO: write a new snap dir, append a commit; the commit path
+    * of [[insertCounted]], returning only the snapshot. Commit timestamps
     * are strictly monotonic so `FOR TIMESTAMP AS OF` between two commits is
     * well-defined even for sub-millisecond commit spacing (SURVEY.md §7.3).
     *
@@ -3334,11 +3336,21 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * generation CAS, retries, and then observes the recorded version.
     */
   def insert(schema: String, table: String, df: DataFrame,
-             txn: Option[(String, Long)] = None): Snapshot = synchronized {
+             txn: Option[(String, Long)] = None): Snapshot =
+    insertCounted(schema, table, df, txn)._1
+
+  /** [[insert]] that also reports the rows it committed: the record
+    * counts of the new files' footers, which the manifest entries read
+    * anyway — so the source runs once, in the write job (the reference's
+    * writer reports its own row count the same way). A `txn` skip commits
+    * nothing and reports 0.
+    */
+  def insertCounted(schema: String, table: String, df: DataFrame,
+                    txn: Option[(String, Long)] = None): (Snapshot, Long) = synchronized {
     val dir = tableDir(schema, table)
     require(tableExists(schema, table), s"Table $schema.$table does not exist")
     val (commits, gen) = readCommitsWithGen(schema, table)
-    for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return seen
+    for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return (seen, 0L)
     val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
     val at = math.max(System.currentTimeMillis(),
       commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
@@ -3359,7 +3371,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml), txn,
       commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
     writeCommits(schema, table, commits :+ snap, gen)
-    snap
+    val rows = newEntries.map(_.rows).sum
+    Log.debug(log, "Inserted into {0}.{1}: snapshot {2}, {3} data files, {4} rows",
+      schema, table, id, newEntries.size, rows)
+    (snap, rows)
   }
 
   /** Keyed UPSERT via equality deletes (Iceberg v2's streaming-writer
@@ -3578,7 +3593,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * on zorder_demo: three single-task decodes of the same slice, one
     * per pass). Persist the input across those passes — the same
     * pattern [[upsert]] uses for its two passes — and let the first
-    * pass materialize it; single-pass writes stay streaming.
+    * pass materialize it; single-pass writes stay streaming. A
+    * single-pass source that optimizes to a `LocalRelation` (a VALUES
+    * list, driver-resident rows) is written by ONE task: scanned as is,
+    * it splits into one slice per core and so one tiny file per core.
     */
   private def writeData(schema: String, table: String, df: DataFrame,
                         dir: Path, snapDir: String): Unit = {
@@ -3590,8 +3608,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       try partitionedWriter(schema, table, cached)
         .mode("errorifexists").parquet(dest)
       finally cached.unpersist(false)
-    } else partitionedWriter(schema, table, df)
-      .mode("errorifexists").parquet(dest)
+    } else {
+      val local = df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      partitionedWriter(schema, table, if (local) df.coalesce(1) else df)
+        .mode("errorifexists").parquet(dest)
+    }
   }
 
   private def partitionedWriter(schema: String, table: String, df0: DataFrame) = {

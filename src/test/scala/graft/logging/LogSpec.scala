@@ -1,11 +1,36 @@
 package graft.logging
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.params.SqlStatement
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 
 /** Contract spec for the logging shim, mirroring the reference's
-  * FormattedLogValues semantics (FormattedLogValues.cs:14-63).
+  * FormattedLogValues semantics (FormattedLogValues.cs:14-63), and for
+  * the engine's log lines.
   */
-class LogSpec extends AnyFunSuite {
+class LogSpec extends graft.SparkSpec {
+
+  /** Messages `logger` emits at DEBUG while `body` runs. */
+  private def debugLines(logger: String)(body: => Unit): Seq[String] = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val prior = ctx.getLogger(logger).getLevel
+    Configurator.setLevel(logger, Level.DEBUG)
+    ctx.getLogger(logger).addAppender(capture)
+    try body
+    finally {
+      ctx.getLogger(logger).removeAppender(capture)
+      Configurator.setLevel(logger, prior)
+      capture.stop()
+    }
+    lines.toArray(Array.empty[String]).toSeq
+  }
 
   test("toString substitutes positional placeholders") {
     assert(FormattedLogValues("query {0} took {1} ms", "q1", 42).toString ==
@@ -47,5 +72,14 @@ class LogSpec extends AnyFunSuite {
     Log.info(l, "info {0}", 2)
     Log.warn(l, "warn {0}", 3)
     Log.error(l, new RuntimeException("boom"), "error {0}", 4)
+  }
+
+  test("an INSERT commit logs one debug line: table, snapshot, files added, rows") {
+    val e = new graft.GraftEngine(spark, tmpDir("log-insert"))
+    e.executeNonQuery(SqlStatement("CREATE TABLE demo.t (id bigint, v varchar)"))
+    val lines = debugLines("graft.catalog.SnapshotCatalog") {
+      e.executeNonQuery(SqlStatement("INSERT INTO demo.t VALUES (1, 'a'), (2, 'b'), (3, 'c')"))
+    }
+    assert(lines == Seq("Inserted into demo.t: snapshot 1, 1 data files, 3 rows"))
   }
 }
