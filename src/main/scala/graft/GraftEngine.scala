@@ -64,7 +64,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
         case Some(expanded) => query(SqlStatement(expanded))
         case None =>
           introspectionQuery(stmt.text).getOrElse {
-            val plan = parse(stmt.text)
+            val plan = TableRefs.parse(stmt.text)
             if (catalogWrite(stmt.text, plan).isDefined)
               throw new GraftQueryException(stmt.text,
                 "INSERT, DELETE and UPDATE on a catalog table run through executeNonQuery")
@@ -149,7 +149,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       } else -1L
     }
     introspectionQuery(sqlText).map(affected).getOrElse {
-      val plan = parse(sqlText)
+      val plan = TableRefs.parse(sqlText)
       catalogWrite(sqlText, plan).fold(affected(run(sqlText, plan)))(commitWrite(sqlText, plan, _))
     }
   }
@@ -574,18 +574,13 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     if (!catalog.tableExists(schema, table))
       throw new GraftQueryException(sqlText, s"Table $schema.$table does not exist")
 
-  /** Parse a MERGE or `optimize … WHERE` scalar/predicate via Catalyst,
-    * converting the parse error into the engine's typed failure contract.
+  /** Parse a MERGE or `optimize … WHERE` scalar/predicate once, in the
+    * facade's dialect ([[TrinoSqlParser]]), converting the parse error
+    * into the engine's typed failure contract.
     */
   private def parseCond(sqlText: String, e: String): org.apache.spark.sql.Column =
-    try {
-      // Spark 4's Column defers expression parsing until the Column is
-      // attached to a plan — parse eagerly so a malformed expression
-      // surfaces HERE as the engine's typed error, not later inside the
-      // catalog rewrite
-      spark.sessionState.sqlParser.parseExpression(e)
-      org.apache.spark.sql.functions.expr(e)
-    } catch { case ex: Exception =>
+    try GraftPlanBridge.column(TrinoSqlParser.parseExpression(e))
+    catch { case ex: Exception =>
       throw new GraftQueryException(sqlText, s"Malformed DML expression '$e': ${ex.getMessage}", ex)
     }
 
@@ -1002,14 +997,6 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
 
   // ---- table names: parse once, bind catalog relations in the plan ----
 
-  /** The statement as Spark's parser reads it, after the two textual
-    * Trino-parity passes: default NULLS LAST ordering
-    * ([[rewriteNullOrdering]]) and Trino identifier spellings
-    * ([[TableRefs.parse]]).
-    */
-  private def parse(sqlText: String): LogicalPlan =
-    TableRefs.parse(spark, rewriteNullOrdering(sqlText))
-
   /** A parsed statement with every table reference the snapshot
     * catalog owns bound to the catalog's DataFrame ([[bindRelation]]).
     * `overrides` substitutes a DataFrame for a plain reference to a
@@ -1106,76 +1093,6 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     finally viewDepth.set(viewDepth.get() - 1)
   }
 
-  /** Trino NULL-ordering parity: "The default null ordering is NULLS
-    * LAST, regardless of the ordering direction" (Trino docs, SELECT —
-    * DuckDB's default agrees); Spark defaults to NULLS FIRST on ASC and
-    * NULLS LAST on DESC, so a nullable ascending sort key through the
-    * SQL surface would silently order Trino-divergently. Every ORDER BY
-    * item WITHOUT an explicit NULLS clause gets NULLS LAST appended
-    * before the text reaches the parser. Token-aware textual pass:
-    * string literals, quoted names and comments mask, parens nest (a
-    * subquery's own ORDER BY is handled by its own regex match), and an
-    * item ends at a top-level comma, a clause terminator
-    * (LIMIT/OFFSET/FETCH, set ops, a window frame's ROWS/RANGE/GROUPS), a
-    * closing paren, a semicolon, or end of text.
-    */
-  private[graft] def rewriteNullOrdering(sql: String): String = {
-    val spans = TableRefs.quotedSpans(sql)
-    val ms = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(sql)
-      .filterNot(m => spans.exists { case (a, b, _) => m.start < b && m.end > a })
-      .toList
-    if (ms.isEmpty) return sql
-    val terminators = Set("limit", "offset", "fetch", "rows", "range",
-      "groups", "union", "intersect", "except", "minus")
-    val inserts = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-    for (m <- ms) {
-      var i = m.end
-      var depth = 0
-      var itemEnd = -1 // position AFTER the item's last non-ws char
-      val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-      def endItem(): Unit = {
-        if (itemEnd >= 0 && !toks.contains("nulls"))
-          inserts += ((itemEnd, " NULLS LAST"))
-        toks.clear(); itemEnd = -1
-      }
-      var done = false
-      while (i < sql.length && !done) {
-        spans.find { case (a, b, _) => i >= a && i < b } match {
-          case Some((_, b, '-' | '/')) => i = b // a comment is whitespace
-          case Some((_, b, _)) => i = b; itemEnd = i // a literal or name is content
-          case None =>
-            val c = sql.charAt(i)
-            if (c == '(') { depth += 1; i += 1; itemEnd = i }
-            else if (c == ')') {
-              if (depth == 0) { endItem(); done = true }
-              else { depth -= 1; i += 1; itemEnd = i }
-            }
-            else if (c == ',' && depth == 0) { endItem(); i += 1 }
-            else if (c == ';' && depth == 0) { endItem(); done = true }
-            else if (c.isWhitespace) i += 1
-            else if (c.isLetter || c == '_') {
-              val ws = i
-              while (i < sql.length &&
-                (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-              val w = sql.substring(ws, i).toLowerCase(java.util.Locale.ROOT)
-              // a terminator word ends the clause only AFTER the item
-              // has content — as the item's first token it IS the item
-              // (a column literally named `rows`/`range` still rewrites)
-              if (depth == 0 && terminators.contains(w) &&
-                  (toks.nonEmpty || itemEnd >= 0)) { endItem(); done = true }
-              else { if (depth == 0) toks += w; itemEnd = i }
-            }
-            else { i += 1; itemEnd = i }
-        }
-      }
-      if (!done) endItem()
-    }
-    if (inserts.isEmpty) return sql
-    val sb = new StringBuilder(sql)
-    inserts.sortBy(-_._1).foreach { case (at, txt) => sb.insert(at, txt) }
-    sb.toString
-  }
-
   /** Distinct-key cap for the join-leg full-side prune: below it the
     * delta's keys collect to an IN list (pushable to the manifest bounds
     * tier → file skipping); above it the plain full-scan join is the
@@ -1224,7 +1141,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     * decidable later.
     */
   private def referencedSources(sql: String): Map[String, Long] =
-    sourceTables(parse(sql)).map { case (sch, tbl) =>
+    sourceTables(TableRefs.parse(sql)).map { case (sch, tbl) =>
       s"$sch.$tbl" -> catalog.snapshots(sch, tbl).lastOption.map(_.snapshotId).getOrElse(0L)
     }.toMap
 
@@ -1369,13 +1286,13 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     }
     val keyPairs =
       if (deltas.size >= 2)
-        MvIncremental.equiJoinKeys(spark, defSql, srcs.map(_._1).toSet, sessionSchema)
+        MvIncremental.equiJoinKeys(defSql, srcs.map(_._1).toSet, sessionSchema)
       else Nil
     // one replay runner for both strategies: the definition binds with
     // the leg's sources overridden; the avg path also appends the hidden
     // sum/count partials to the aggregate
     def runDef(m: Map[(String, String), DataFrame]): DataFrame = {
-      val bound = boundPlan(defSql, parse(defSql), m)
+      val bound = boundPlan(defSql, TableRefs.parse(defSql), m)
       if (!hasAvg) GraftPlanBridge.ofRows(spark, bound)
       else MvIncremental.replayAugmented(spark, bound, aggOutputs)
         .getOrElse(throw new GraftQueryException(defSql,
@@ -1445,13 +1362,13 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
   private def mvMaterialization(select: String): DataFrame = {
     val plain = query(SqlStatement(select)) // a bad definition fails typed here
     val avgOut = MvIncremental.classify(spark, select,
-        sourceTables(parse(select)).toSet, sessionSchema) match {
+        sourceTables(TableRefs.parse(select)).toSet, sessionSchema) match {
       case Some(MvIncremental.MvAggShape(o)) if o.contains(MvIncremental.MvAvg) =>
         Some(o)
       case _ => None
     }
     avgOut.flatMap { o =>
-      MvIncremental.replayAugmented(spark, boundPlan(select, parse(select)), o)
+      MvIncremental.replayAugmented(spark, boundPlan(select, TableRefs.parse(select)), o)
         .filter { df =>
           val fs = df.schema.fields
           o.zipWithIndex.forall {

@@ -95,7 +95,7 @@ private[graft] object MvIncremental {
                sources: Set[(String, String)],
                sessionSchema: String): Option[Shape] = {
     val plan =
-      try TableRefs.parse(spark, sql)
+      try TableRefs.parse(sql)
       catch { case _: Exception => return None }
 
     // each recorded source referenced EXACTLY once — a self-join
@@ -197,12 +197,11 @@ private[graft] object MvIncremental {
     * contributes no pair (pruning is an optimization — a missed pair
     * just keeps the full scan).
     */
-  def equiJoinKeys(spark: SparkSession, sql: String,
-                   sources: Set[(String, String)], sessionSchema: String)
+  def equiJoinKeys(sql: String, sources: Set[(String, String)], sessionSchema: String)
       : Seq[(((String, String), String), ((String, String), String))] = {
     import org.apache.spark.sql.catalyst.expressions.{And, EqualTo}
     val plan =
-      try TableRefs.parse(spark, sql)
+      try TableRefs.parse(sql)
       catch { case _: Exception => return Nil }
     def stOf(r: UnresolvedRelation): Option[(String, String)] =
       TableRefs.schemaTable(r.multipartIdentifier, sessionSchema)

@@ -2,7 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, SupervisingCommand, UnresolvedWith}
@@ -14,27 +13,17 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, 
   */
 private[graft] object TableRefs {
 
-  /** Parse Trino-dialect SQL with Spark's parser, after
-    * [[trinoIdentifiers]] has translated the identifier spellings.
+  /** Parse Trino-dialect SQL with the facade's [[TrinoSqlParser]], after
+    * an unquoted metadata-table name `t$kind` has been backtick-quoted
+    * whole: Spark's lexer does not take `$` in a bare identifier. String
+    * literals, quoted identifiers and comments pass through unchanged.
     */
-  def parse(spark: SparkSession, sql: String): LogicalPlan =
-    spark.sessionState.sqlParser.parsePlan(trinoIdentifiers(sql))
-
-  /** Trino identifier spellings → Spark's: `"…"` is a delimited
-    * identifier (`""` inside is one `"`) and becomes backtick quoting; an
-    * unquoted metadata-table name `t$kind` is backtick-quoted whole,
-    * since Spark's lexer does not take `$` in a bare identifier. String
-    * literals, backtick identifiers and comments pass through unchanged.
-    */
-  private def trinoIdentifiers(sql: String): String =
-    pieces(sql).map {
+  def parse(sql: String): LogicalPlan =
+    TrinoSqlParser.parsePlan(pieces(sql).map {
       case (text, None) => bareMetadataName.replaceAllIn(text,
         m => java.util.regex.Matcher.quoteReplacement(s"`${m.matched}`"))
-      case (text, Some('"')) if text.length >= 2 && text.last == '"' =>
-        "`" + text.substring(1, text.length - 1).replace("\"\"", "\"")
-          .replace("`", "``") + "`"
       case (text, _) => text
-    }.mkString
+    }.mkString)
 
   private val bareMetadataName = """(?<![\w$])[A-Za-z_]\w*\$\w+""".r
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * in this package — the same extension-point pattern as
   * [[GraftScanBridge]]. Attribute-backed columns and the session's
   * planner are `private[sql]` too, hence [[columnsOf]], [[column]] (the
-  * facade's DML predicates and SET values) and [[addPhysicalRewrite]].
+  * facade's DML predicates, SET values and MERGE expressions) and
+  * [[addPhysicalRewrite]].
   */
 object GraftPlanBridge {
 

@@ -355,4 +355,20 @@ class GraftEngineSpec extends SparkSpec {
     }
     assert(err2.getMessage.contains("unsupported table property"))
   }
+
+  test("unsized VARCHAR is a string; the q1_pricing oracle text runs") {
+    val cast = engine.query(sql"SELECT CAST(42 AS VARCHAR) AS v, CAST('x' AS CHAR) AS c")
+    assert(cast.schema.map(_.dataType) === Seq(StringType, StringType))
+    assert(cast.collect().map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("42", "x")))
+    val e = new GraftEngine(spark, tmpDir("graft-engine-q1"))
+    e.catalog.createSchema("tpch")
+    val lineitem = Tables.lineitem(spark, sf001)
+    e.catalog.createTable("tpch", "lineitem", lineitem.schema)
+    e.catalog.insert("tpch", "lineitem", lineitem)
+    e.executeNonQuery(sql"USE tpch")
+    val got = e.query(graft.params.SqlStatement(SparkEntry.oracleSql("q1_pricing")))
+    val want = operators.Joins.q1Pricing(spark, sf001)
+    assert(got.columns.toSeq === want.columns.toSeq)
+    assert(got.collect().toSeq === want.collect().toSeq)
+  }
 }

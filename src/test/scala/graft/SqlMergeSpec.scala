@@ -147,4 +147,13 @@ class SqlMergeSpec extends SparkSpec {
     assert(n == 1L)
     assert(stateOf(e).last == ((7L, "WHEN MATCHED THEN ON", 0L)))
   }
+
+  test("MERGE expressions parse in the Trino dialect (unsized VARCHAR)") {
+    val e = freshEngine("merge-dialect")
+    val n = e.executeNonQuery(SqlStatement(
+      """MERGE INTO demo.t t USING (SELECT 2 AS id, 77 AS v) s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET name = CAST(s.v AS VARCHAR)""".stripMargin))
+    assert(n == 1L)
+    assert(stateOf(e) == Seq((1L, "a", 10L), (2L, "77", 20L), (3L, "c", 30L)))
+  }
 }

@@ -1,12 +1,13 @@
 package graft
 
 import graft.params.SqlStatement
+import org.apache.spark.sql.catalyst.expressions.SortOrder
 
 /** Trino NULL-ordering parity on the SQL surface: "The default null
   * ordering is NULLS LAST, regardless of the ordering direction" (Trino
   * docs; DuckDB agrees), while Spark defaults to NULLS FIRST on ASC.
-  * The engine appends Trino's default to every ORDER BY item
-  * lacking an explicit NULLS clause (reference stack behavior —
+  * The facade's parser gives every ORDER BY item lacking an explicit
+  * NULLS clause Trino's default (reference stack behavior —
   * trino.io/docs/current/sql/select.html#order-by-clause), so a nullable
   * sort key orders the way the reference would, while explicit NULLS
   * clauses pass through untouched. One NULL row per fixture unless a
@@ -69,38 +70,36 @@ class SqlNullOrderingSpec extends SparkSpec {
     assert(s === Seq(15L, 15L, 5L)) // nulls last: 5, 15, then the null row
   }
 
-  test("textual pass leaves literals alone and handles odd spellings") {
-    val e = engine("nullord-text", oneNull)
-    // 'ORDER BY' inside a string literal must not rewrite
-    assert(e.rewriteNullOrdering("SELECT 'ORDER BY x' AS s FROM demo.t") ===
-      "SELECT 'ORDER BY x' AS s FROM demo.t")
-    assert(e.rewriteNullOrdering("SELECT id FROM demo.t ORDER BY k") ===
-      "SELECT id FROM demo.t ORDER BY k NULLS LAST")
-    assert(e.rewriteNullOrdering("SELECT id FROM demo.t ORDER BY k DESC, id") ===
-      "SELECT id FROM demo.t ORDER BY k DESC NULLS LAST, id NULLS LAST")
-    assert(e.rewriteNullOrdering(
-      "SELECT id FROM demo.t ORDER BY coalesce(k, id) DESC LIMIT 1") ===
-      "SELECT id FROM demo.t ORDER BY coalesce(k, id) DESC NULLS LAST LIMIT 1")
-    // already-explicit NULLS: untouched
-    assert(e.rewriteNullOrdering("SELECT id FROM demo.t ORDER BY k NULLS FIRST") ===
-      "SELECT id FROM demo.t ORDER BY k NULLS FIRST")
-    // UNION branch terminator
-    assert(e.rewriteNullOrdering(
+  test("parsed plan: each sort item without NULLS sorts last") {
+    // each SortOrder of the parsed plan, in plan order
+    def orders(sql: String): Seq[String] =
+      TableRefs.parse(sql).flatMap(_.expressions.flatMap(_.collect {
+        case s: SortOrder => s"${s.direction.sql} ${s.nullOrdering.sql}"
+      }))
+    // 'ORDER BY' inside a string literal is no clause
+    assert(orders("SELECT 'ORDER BY x' AS s FROM demo.t") === Nil)
+    assert(orders("SELECT id FROM demo.t ORDER BY k") === Seq("ASC NULLS LAST"))
+    assert(orders("SELECT id FROM demo.t ORDER BY k DESC, id") ===
+      Seq("DESC NULLS LAST", "ASC NULLS LAST"))
+    assert(orders("SELECT id FROM demo.t ORDER BY coalesce(k, id) DESC LIMIT 1") ===
+      Seq("DESC NULLS LAST"))
+    // an explicit NULLS clause is the user's choice
+    assert(orders("SELECT id FROM demo.t ORDER BY k NULLS FIRST") === Seq("ASC NULLS FIRST"))
+    // the ORDER BY of a UNION branch
+    assert(orders(
       "(SELECT id FROM demo.t ORDER BY id LIMIT 1) UNION ALL (SELECT id FROM demo.t)") ===
-      "(SELECT id FROM demo.t ORDER BY id NULLS LAST LIMIT 1) UNION ALL (SELECT id FROM demo.t)")
-    // a column literally NAMED like a terminator is the item itself
-    // when it opens the clause — it still rewrites (round-11 advice)
-    assert(e.rewriteNullOrdering("SELECT id FROM t ORDER BY rows") ===
-      "SELECT id FROM t ORDER BY rows NULLS LAST")
-    assert(e.rewriteNullOrdering("SELECT id FROM t ORDER BY range DESC, x LIMIT 2") ===
-      "SELECT id FROM t ORDER BY range DESC NULLS LAST, x NULLS LAST LIMIT 2")
-    // ... but as a SECOND token it terminates as before (window frame)
-    assert(e.rewriteNullOrdering("SELECT sum(v) OVER (ORDER BY k ROWS 2 PRECEDING) FROM t") ===
-      "SELECT sum(v) OVER (ORDER BY k NULLS LAST ROWS 2 PRECEDING) FROM t")
-    // 'ORDER BY' inside a double-quoted identifier must not rewrite
-    assert(e.rewriteNullOrdering("""SELECT "order by weird" FROM t""") ===
-      """SELECT "order by weird" FROM t""")
-    assert(e.rewriteNullOrdering("SELECT `order by weird` FROM t") ===
-      "SELECT `order by weird` FROM t")
+      Seq("ASC NULLS LAST"))
+    // columns named like frame keywords
+    assert(orders("SELECT id FROM t ORDER BY rows") === Seq("ASC NULLS LAST"))
+    assert(orders("SELECT id FROM t ORDER BY range DESC, x LIMIT 2") ===
+      Seq("DESC NULLS LAST", "ASC NULLS LAST"))
+    // a window frame after the window's ORDER BY
+    assert(orders("SELECT sum(v) OVER (ORDER BY k ROWS 2 PRECEDING) FROM t") ===
+      Seq("ASC NULLS LAST"))
+    // 'ORDER BY' inside a quoted identifier is no clause
+    assert(orders("""SELECT "order by weird" FROM t""") === Nil)
+    assert(orders("SELECT `order by weird` FROM t") === Nil)
+    // an ordinal
+    assert(orders("SELECT id, k FROM demo.t ORDER BY 2") === Seq("ASC NULLS LAST"))
   }
 }

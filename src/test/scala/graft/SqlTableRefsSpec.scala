@@ -95,6 +95,16 @@ class SqlTableRefsSpec extends SparkSpec {
       .as[Long].head() === 1L)
   }
 
+  test("a temp view created through the facade keeps its dialect and catalog reads") {
+    val e = freshEngine("refs-tempview")
+    e.executeNonQuery(SqlStatement(
+      """CREATE OR REPLACE TEMPORARY VIEW refs_tv_a AS
+        |SELECT "id", row_number() OVER (ORDER BY v DESC) AS rn FROM demo.a""".stripMargin))
+    assert(e.query(SqlStatement("SELECT id, rn FROM refs_tv_a ORDER BY id"))
+      .as[(Long, Int)].collect().toSeq === Seq((1L, 2), (2L, 1)))
+    spark.catalog.dropTempView("refs_tv_a")
+  }
+
   test("facade reads and an incremental MV refresh register no session temp views") {
     val e = freshEngine("refs-no-views")
     e.catalog.createTag("demo", "a", "t1", None)
