@@ -16,21 +16,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalDirs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the generated-class cache defaults to 100 entries; a 167-query
-      // sweep evicts everything between passes, so every re-timed query
-      // recompiles all its codegen stages (~0.3-1 s of Janino per heavy
-      // query). Size it to hold the whole sweep's classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    HarnessSession.run(sweep(_, sfDir))
+  }
 
+  private def sweep(spark: SparkSession, sfDir: String): Unit = {
     // Timed action: a noop-sink write. Unlike count(), the noop V2 sink
     // consumes every output column, so ColumnPruning cannot delete the
     // projection being measured and EliminateSorts cannot drop the final
@@ -65,15 +54,24 @@ object Bench {
     // re-times entries whose two samples disagree by > 15%. A query hit by
     // a contention burst in one pass is visited minutes apart in the next,
     // so the per-query min survives bursts as long as a full pass.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def once(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       // guide §1.5: label the jobs so UI/event-log analysis can attribute
       // stages to queries (set OUTSIDE the timed window)
       spark.sparkContext.setJobDescription(s"bench: $name")
       val t0 = System.nanoTime()
-      try { drain(fn(spark, sfDir)) } catch { case _: Throwable => () }
+      val error =
+        try { drain(fn(spark, sfDir)); None } catch { case e: Throwable => Some(e) }
       val t = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
+      // a failure still times (the stdout line is unchanged), but it is
+      // reported on stderr and listed in the full map, never passed off
+      // as a fast query
+      error.foreach { e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+      }
       CacheHygiene.sweep(spark) // outside the timed window: cached
       // blocks are query-scoped; leaking them across 129 queries
       // squeezes execution memory for everything downstream
@@ -145,15 +143,15 @@ object Bench {
     // best-effort side artifact: never let a missing target/ (assembly
     // jar, different cwd) turn a completed sweep into a failed run
     try {
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val fullQs = bySlowest.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val p = java.nio.file.Paths.get("target/bench_full.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p,
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$split,"queries":$fullQs,"sf":"$sfDir"}""")
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$split,"queries":$fullQs,"failed":$failedJson,"sf":"$sfDir"}""")
     } catch { case e: Exception =>
       System.err.println(s"[bench] full-map dump skipped: ${e.getMessage}")
     }
-    spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Between-query cache cleanup for the harness mains (Bench / Verify /
-  * DevCheck / DevTime / DevScale).
+  * DevTime / DevScale).
   *
   * Operators may persist or localCheckpoint intermediates (nearDupJaccard's
   * token-hash projection, dedupClusters' per-iteration labels). Those blocks

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 
 /** Dev-only randomized differential fuzzer: generates seeded-random
   * queries in the Spark∩DuckDB ANSI subset (integer/string projections,
@@ -13,17 +12,11 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.DevFuzz <sfDir> <outDir> [n] [seed]
   */
 object DevFuzz {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1)
-    val n = args.lift(2).map(_.toInt).getOrElse(60)
-    val seed = args.lift(3).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    HarnessSession.oracleFuzzMain(args, n = 60, seed = 42L)(run)
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          n: Int, seed: Long): Unit = {
     new java.io.File(outDir).mkdirs()
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("lineitem")
     Tables.orders(spark, sfDir).createOrReplaceTempView("orders")
@@ -94,11 +87,7 @@ object DevFuzz {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       name -> q
     }
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      oracle.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-        .mkString("{", ",", "}"))
+    Verify.writeOracleSql(outDir, oracle)
     println(s"[fuzz] $n queries dumped to $outDir (seed=$seed)")
-    spark.stop()
   }
 }

@@ -51,15 +51,10 @@ object DevFuzzCrash {
   // crash hits — the model advances and the op must NOT be retried
   private val postCommit = Set("expire.committed", "replace.committed")
 
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(12)
-    val seed = args.lift(1).map(_.toLong).getOrElse(20260814L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    HarnessSession.fuzzMain(args, n = 12, seed = 20260814L)(run)
+
+  def run(spark: SparkSession, n: Int, seed: Long): Unit = {
     import spark.implicits._
 
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -243,6 +238,6 @@ object DevFuzzCrash {
       }
     }
     println(s"$ok/$n OK")
-    if (ok != n) sys.exit(1)
+    if (ok != n) throw new IllegalStateException(s"${n - ok}/$n crash scenarios failed")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 
 /** Dev-only randomized DIFFERENTIAL DML fuzzer: builds a fresh catalog
   * table from nation, applies a seeded-random sequence of UPDATE / DELETE
@@ -17,17 +16,11 @@ import java.nio.file.{Files, Paths}
   * enumerates. Usage: runMain graft.DevFuzzDml <sfDir> <outDir> [n] [seed]
   */
 object DevFuzzDml {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1)
-    val n = args.lift(2).map(_.toInt).getOrElse(20)
-    val seed = args.lift(3).map(_.toLong).getOrElse(7L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    HarnessSession.oracleFuzzMain(args, n = 20, seed = 7L)(run)
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          n: Int, seed: Long): Unit = {
     new java.io.File(outDir).mkdirs()
 
     val rnd = new scala.util.Random(seed)
@@ -456,11 +449,7 @@ object DevFuzzDml {
         }
       Seq(name -> oracleSql) ++ branchResult
     }.flatten
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      results.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-        .mkString("{", ",", "}"))
+    Verify.writeOracleSql(outDir, results)
     println(s"[fuzzdml] $n DML sequences dumped to $outDir (seed=$seed)")
-    spark.stop()
   }
 }

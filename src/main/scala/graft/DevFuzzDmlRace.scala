@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 import graft.catalog.{CommitConflictException, SnapshotCatalog}
@@ -25,16 +24,11 @@ object DevFuzzDmlRace {
   private final case class Upd(m: Long, r: Long, add: Long) extends Op
   private final case class Del(m: Long, r: Long) extends Op
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args(1)
-    val n = args.lift(2).map(_.toInt).getOrElse(20)
-    val seed = args.lift(3).map(_.toLong).getOrElse(11L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    HarnessSession.oracleFuzzMain(args, n = 20, seed = 11L)(run)
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          n: Int, seed: Long): Unit = {
     import spark.implicits._
     new java.io.File(outDir).mkdirs()
 
@@ -142,11 +136,7 @@ object DevFuzzDmlRace {
         s"partitioned=$partitioned OK")
       name -> oracle
     }
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      results.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-        .mkString("{", ",", "}"))
+    Verify.writeOracleSql(outDir, results)
     println(s"[fuzzrace] $n concurrent-DML scenarios dumped to $outDir (seed=$seed)")
-    spark.stop()
   }
 }

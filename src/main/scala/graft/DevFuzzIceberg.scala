@@ -25,15 +25,10 @@ import org.apache.spark.sql.functions._
   * make the next sync refuse. Usage: runMain graft.DevFuzzIceberg [n] [seed]
   */
 object DevFuzzIceberg {
-  def main(args: Array[String]): Unit = {
-    val n = args.lift(0).map(_.toInt).getOrElse(8)
-    val seed = args.lift(1).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    HarnessSession.fuzzMain(args, n = 8, seed = 42L)(run)
+
+  def run(spark: SparkSession, n: Int, seed: Long): Unit = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val rnd = new scala.util.Random(seed)

@@ -25,16 +25,10 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.DevFuzzMv [n] [seed]
   */
 object DevFuzzMv {
-  def main(args: Array[String]): Unit = {
-    val n = args.lift(0).map(_.toInt).getOrElse(10)
-    val seed = args.lift(1).map(_.toLong).getOrElse(29L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    HarnessSession.fuzzMain(args, n = 10, seed = 29L)(run)
 
+  def run(spark: SparkSession, n: Int, seed: Long): Unit = {
     val rnd = new scala.util.Random(seed)
     def pick[T](xs: IndexedSeq[T]): T = xs(rnd.nextInt(xs.length))
 

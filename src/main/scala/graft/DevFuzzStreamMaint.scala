@@ -16,15 +16,10 @@ import graft.catalog.{CommitConflictException, SnapshotCatalog}
   * Usage: runMain graft.DevFuzzStreamMaint [n] [seed]
   */
 object DevFuzzStreamMaint {
-  def main(args: Array[String]): Unit = {
-    val n = args.lift(0).map(_.toInt).getOrElse(6)
-    val seed = args.lift(1).map(_.toLong).getOrElse(23L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    HarnessSession.fuzzMain(args, n = 6, seed = 23L)(run)
+
+  def run(spark: SparkSession, n: Int, seed: Long): Unit = {
     import spark.implicits._
 
     val rnd = new scala.util.Random(seed)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Fuzz dialect 4 — time travel + views COMPOSED (round-5 verdict #6):
@@ -16,17 +15,11 @@ import org.apache.spark.sql.SparkSession
   * compares like every other dialect.
   */
 object DevFuzzTravel {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1)
-    val n = args.lift(2).map(_.toInt).getOrElse(20)
-    val seed = args.lift(3).map(_.toLong).getOrElse(7L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    HarnessSession.oracleFuzzMain(args, n = 20, seed = 7L)(run)
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          n: Int, seed: Long): Unit = {
     new java.io.File(outDir).mkdirs()
 
     val rnd = new scala.util.Random(seed)
@@ -277,11 +270,7 @@ object DevFuzzTravel {
       name -> oracleSql
       }
     }
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      results.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-        .mkString("{", ",", "}"))
+    Verify.writeOracleSql(outDir, results)
     println(s"[fuzztravel] $n travel/view scenarios dumped to $outDir (seed=$seed)")
-    spark.stop()
   }
 }

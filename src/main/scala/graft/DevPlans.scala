@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper for the optimization rounds: writes
   * `.explain("formatted")` output for the named queries (or every
   * registry entry with `all`) to `<outDir>/<name>_<tag>.txt`, using the
@@ -18,39 +16,26 @@ object DevPlans {
     val names: Seq[String] =
       if (args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalDirs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the generated-class cache defaults to 100 entries; a 167-query
-      // sweep evicts everything between passes, so every re-timed query
-      // recompiles all its codegen stages (~0.3-1 s of Janino per heavy
-      // query). Size it to hold the whole sweep's classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { q =>
-      try {
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outDir, s"${q}_$tag.txt"), plan)
-        // quick audit line: Exchange count + join strategies in one glance
-        val exchanges = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(plan).size
-        val joins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"
-          .r.findAllIn(plan).toSeq.groupBy(identity).view.mapValues(_.size)
-          .map { case (k, n) => s"$k×$n" }.mkString(" ")
-        println(f"[plans] $q%-28s exchanges=$exchanges%-3d $joins")
-      } catch { case e: Throwable =>
-        println(s"[plans] $q FAILED: ${e.getMessage}")
+    HarnessSession.run { spark =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+      names.foreach { q =>
+        try {
+          val df = SparkEntry.queries(q)(spark, sfDir)
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(outDir, s"${q}_$tag.txt"), plan)
+          // quick audit line: Exchange count + join strategies in one glance
+          val exchanges = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(plan).size
+          val joins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"
+            .r.findAllIn(plan).toSeq.groupBy(identity).view.mapValues(_.size)
+            .map { case (k, n) => s"$k×$n" }.mkString(" ")
+          println(f"[plans] $q%-28s exchanges=$exchanges%-3d $joins")
+        } catch { case e: Throwable =>
+          println(s"[plans] $q FAILED: ${e.getMessage}")
+        }
+        CacheHygiene.sweep(spark)
       }
-      CacheHygiene.sweep(spark)
     }
-    spark.stop()
   }
 }

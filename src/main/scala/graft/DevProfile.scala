@@ -15,20 +15,10 @@ object DevProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalDirs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the generated-class cache defaults to 100 entries; a 167-query
-      // sweep evicts everything between passes, so every re-timed query
-      // recompiles all its codegen stages (~0.3-1 s of Janino per heavy
-      // query). Size it to hold the whole sweep's classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    HarnessSession.run(profile(_, sfDir, name, reps))
+  }
+
+  private def profile(spark: SparkSession, sfDir: String, name: String, reps: Int): Unit = {
     def drain(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
     // warmup (JIT + codegen cache)
@@ -131,6 +121,5 @@ object DevProfile {
         }
       }
     }
-    spark.stop()
   }
 }

@@ -15,25 +15,16 @@ object DevScale {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(4)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val scaledDir = s"/tmp/graft-scale-${copies}x-${new java.io.File(base).getName}"
     val zwriteDir = "/tmp/graft-scale-zwrite"
     // both are scratch: removed when the sweep ends, whatever its outcome
-    try sweep(spark, base, copies, only, scaledDir, zwriteDir)
-    finally {
-      val fs = new org.apache.hadoop.fs.Path(scaledDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(scaledDir, zwriteDir).foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-      spark.stop()
+    HarnessSession.run { spark =>
+      try sweep(spark, base, copies, only, scaledDir, zwriteDir)
+      finally {
+        val fs = new org.apache.hadoop.fs.Path(scaledDir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        Seq(scaledDir, zwriteDir).foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+      }
     }
   }
 

@@ -9,25 +9,15 @@ import org.apache.spark.sql.SparkSession
 object DevTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val reps = args(1).toInt; val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalDirs.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the generated-class cache defaults to 100 entries; a 167-query
-      // sweep evicts everything between passes, so every re-timed query
-      // recompiles all its codegen stages (~0.3-1 s of Janino per heavy
-      // query). Size it to hold the whole sweep's classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    HarnessSession.run(time(_, sfDir, reps, names))
+  }
+
+  private def time(spark: SparkSession, sfDir: String, reps: Int, names: Array[String]): Unit = {
     // dev-only A/B surface: GRAFT_EXTRA_CONF="k=v;k2=v2" applied on top
     sys.env.get("GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     })
-    spark.sparkContext.setLogLevel("WARN")
     def drain(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
     // warmup on the tiny SF so JIT noise doesn't pollute rep 1
@@ -45,6 +35,5 @@ object DevTime {
       }
       println(f"$q%-28s ${ts.map(t => f"$t%.2f").mkString(" ")}  min=${ts.min}%.2f")
     }
-    spark.stop()
   }
 }

@@ -21,11 +21,7 @@ object DevCommitRace {
   def main(args: Array[String]): Unit = {
     val wh = args(0)
     val sync = new java.io.File(args(1))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.HarnessSession.build(cpus = "1")
     val c = new SnapshotCatalog(spark, wh)
     val (commits, gen) = c.readCommitsWithGen("s", "t")
     new java.io.File(sync, "read.done").createNewFile()

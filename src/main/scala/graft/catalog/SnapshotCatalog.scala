@@ -6685,6 +6685,34 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         "_comments.json", "_format_version", "_sorted_by.json", "_manifests",
         "_tags.json", "_bloom_columns.json", "_log_segments",
         "_properties.json", "_identity", "_iceberg_source")
+    // inside _log_segments: frozen log segments no surviving log file
+    // (any generation of any ref, or a legacy commits.json) references.
+    // Every log is read BEFORE anything is deleted, and a log that cannot
+    // be read aborts the sweep: its segments would otherwise look
+    // unreferenced and be deleted with it.
+    val segRef = f.listStatus(dir).iterator.map(_.getPath).filter { p =>
+      val n = p.getName
+      n == "commits.json" || commitGenRe.pattern.matcher(n).matches() ||
+        branchLogRe.pattern.matcher(n).matches()
+    }.flatMap { p =>
+      try {
+        val root = mapper.readTree(readString(p))
+        // an empty file parses to a MissingNode rather than failing
+        if (!root.isContainerNode) throw new java.io.IOException("not a JSON log")
+        segmentNamesIn(root)
+      } catch {
+        // GC'd by a concurrent commit since the listing: no longer a
+        // surviving log, and a newer generation carries its segments
+        case _: java.io.FileNotFoundException => Nil
+        case e: Exception => throw new IllegalStateException(
+          s"remove_orphan_files aborted: commit log $p is unreadable " +
+            s"(${e.getMessage}); nothing was deleted", e)
+      }
+    }.toSet
+    val sdir = logSegmentsDir(dir)
+    val sOrphans =
+      if (!f.exists(sdir)) Array.empty[Path]
+      else f.listStatus(sdir).map(_.getPath).filterNot(p => segRef(p.getName))
     val orphans = f.listStatus(dir)
       .map(_.getPath)
       .filterNot(p => keep.contains(p.getName) ||
@@ -6709,21 +6737,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       else f.listStatus(mdir).map(_.getPath)
         .filterNot(p => mlRef(p.getName) || mRef(p.getName))
     mOrphans.foreach(p => f.delete(p, false))
-    // inside _log_segments: frozen log segments no surviving log file
-    // (any generation of any ref, or a legacy commits.json) references
-    val segRef = f.listStatus(dir).iterator.map(_.getPath).flatMap { p =>
-      val n = p.getName
-      val isLog = n == "commits.json" ||
-        commitGenRe.pattern.matcher(n).matches() ||
-        branchLogRe.pattern.matcher(n).matches()
-      if (!isLog) Iterator.empty
-      else try segmentNamesIn(mapper.readTree(readString(p))).iterator
-      catch { case _: Exception => Iterator.empty }
-    }.toSet
-    val sdir = logSegmentsDir(dir)
-    val sOrphans =
-      if (!f.exists(sdir)) Array.empty[Path]
-      else f.listStatus(sdir).map(_.getPath).filterNot(p => segRef(p.getName))
     sOrphans.foreach(p => f.delete(p, false))
     (orphans.map(_.getName) ++ mOrphans.map(p => s"_manifests/${p.getName}") ++
       sOrphans.map(p => s"_log_segments/${p.getName}")).toSeq

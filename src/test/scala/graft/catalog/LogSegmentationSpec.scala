@@ -104,6 +104,36 @@ class LogSegmentationSpec extends SparkSpec {
     assert(c.snapshots("s", "t").size == 20)
   }
 
+  test("an unreadable surviving log aborts the segment sweep before anything is deleted") {
+    val c = freshCatalog("logseg-torn")
+    c.createTable("s", "t", schema)
+    commitN(c, "t", 150)
+    val (commits, gen) = c.readCommitsWithGen("s", "t")
+    c.writeCommits("s", "t", commits.takeRight(10), gen) // head names no segment
+    val head = genFile(c, "t")
+    val segDir = new java.io.File(head.getParentFile, "_log_segments")
+    val before = segDir.list().sorted.toSeq
+    assert(before.nonEmpty)
+    // tear the older generations that still name the segments: no read
+    // opens them, only the sweep does
+    val older = head.getParentFile.listFiles().filter { f =>
+      f.getName.matches("commits-\\d+\\.json") && f != head &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains("\"segments\"")
+    }
+    assert(older.nonEmpty)
+    // torn mid-JSON, then empty (which Jackson parses without an error)
+    Seq((n: Int) => n / 2, (_: Int) => 0).foreach { keep =>
+      older.foreach { f =>
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        java.nio.file.Files.write(f.toPath, bytes.take(keep(bytes.length)))
+      }
+      val ex = intercept[IllegalStateException](c.removeOrphanFiles("s", "t"))
+      assert(older.exists(f => ex.getMessage.contains(f.getName)), ex.getMessage)
+      assert(segDir.list().sorted.toSeq == before)
+    }
+    assert(c.snapshots("s", "t").map(_.snapshotId) == (141L to 150L))
+  }
+
   test("segmentation composes with branches and real DML commits") {
     val c = freshCatalog("logseg-br")
     c.createTable("s", "t", schema)
