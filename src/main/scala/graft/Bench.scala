@@ -12,14 +12,24 @@ import org.apache.spark.sql.SparkSession
   * and after the sweep — a contention-inflated sweep (the r11/r12
   * driver artifacts) self-identifies by an inflated calibration
   * constant instead of needing a judge-side isolated re-run.
+  *
+  * A query that throws still times and the stdout line keeps its shape,
+  * but the main exits non-zero after the line, naming the failed queries
+  * on stderr (and in `target/bench_full.json`'s `failed` list), so a
+  * failed sweep never passes for a fast one.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    HarnessSession.run(sweep(_, sfDir))
+    val failed = HarnessSession.run(sweep(_, sfDir))
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
-  private def sweep(spark: SparkSession, sfDir: String): Unit = {
+  /** Times every query; returns the names of those that threw. */
+  private def sweep(spark: SparkSession, sfDir: String): Seq[String] = {
     // Timed action: a noop-sink write. Unlike count(), the noop V2 sink
     // consumes every output column, so ColumnPruning cannot delete the
     // projection being measured and EliminateSorts cannot drop the final
@@ -153,5 +163,6 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] full-map dump skipped: ${e.getMessage}")
     }
+    failed.toSeq
   }
 }

@@ -3127,9 +3127,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val (carried, _) = carryManifests(schema, table, commits.lastOption, Set.empty)
     val names = carried ++ newNames
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(commits.lastOption)
     val snap = Snapshot(id, at, Nil, declaredSchema(schema, table).map(_.json),
       Some("append"), commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml),
       None, commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
@@ -3221,9 +3219,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val (carried, _) = carryManifests(schema, table, commits.lastOption, Set.empty)
     val names = carried ++ writeManifests(dir, entries0)
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(commits.lastOption)
     val snap = Snapshot(id, at, Nil, Some(declared.json), Some("append"),
       commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml),
       None, commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
@@ -3280,9 +3276,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val (commits, gen) = readCommitsWithGen(schema, table)
     df.schema.fieldNames.foreach(validateColumnName(_, formatVersion(schema, table)))
     val last = commits.lastOption
-    val id = last.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      last.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(last)
     // ORDER MATTERS: data write → staged marker → commit CAS → marker
     // promotion. The write may fail mid-query (it can read the table
     // being replaced) and the CAS may lose to a concurrent writer — in
@@ -3297,7 +3291,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // ([[promoteReplaceStaged]], triggered from the commit-log read's
     // existing directory listing — idempotent, zero extra I/O).
     val snapDir = snapDirName(schema, table, attemptTag(id))
-    df.write.mode("errorifexists").parquet(new Path(dir, snapDir).toString)
+    // the one-task rule of [[writeData]], but not the table's layout: the
+    // replacement resets it, and the old sort columns may be gone
+    oneTaskIfLocal(df).write.mode("errorifexists").parquet(new Path(dir, snapDir).toString)
     faultPoint("replace.data-written") // staged dir is orphan debris from here
     // no blooms: the replacement resets bloom columns, and the OLD ones
     // may not exist in the new schema
@@ -3321,9 +3317,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   // ---- DML (S5) ----
 
   /** INSERT INTO: write a new snap dir, append a commit; the commit path
-    * of [[insertCounted]], returning only the snapshot. Commit timestamps
-    * are strictly monotonic so `FOR TIMESTAMP AS OF` between two commits is
-    * well-defined even for sub-millisecond commit spacing (SURVEY.md §7.3).
+    * of [[insertCounted]], returning only the snapshot.
     *
     * `txn = Some((appId, version))` makes the write IDEMPOTENT: if any
     * commit already records `appId` at a version >= `version`, the insert
@@ -3351,9 +3345,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     require(tableExists(schema, table), s"Table $schema.$table does not exist")
     val (commits, gen) = readCommitsWithGen(schema, table)
     for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return (seen, 0L)
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(commits.lastOption)
     val snapDir = snapDirName(schema, table, attemptTag(id))
     writeData(schema, table, df, dir, snapDir)
     faultPoint("insert.staged") // data files on disk, commit not yet attempted
@@ -3404,9 +3396,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val (commits, gen) = readCommitsWithGen(schema, table)
     for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return seen
     val prior = commits.lastOption
-    val id = prior.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      prior.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(prior)
     // the batch evaluates ONCE: through the sink it is a per-batch
     // aggregation (or an arbitrary caller query) — without the persist
     // the key-file write and the data write would each recompute it
@@ -3457,17 +3447,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     readCommits(schema, table).flatMap(_.txn).filter(_._1 == appId)
       .map(_._2).maxOption
 
-  /** Data writer honoring the table's partition spec: partitioned tables
-    * get hive-layout `col=value` subdirectories inside every snap dir.
-    * A `sorted_by` table gets its data CLUSTERED on the way in: range-
-    * repartitioned on (partition cols ++ sort cols) then sorted within
-    * tasks, so each written file covers a disjoint sort-key range and its
-    * parquet footer min/max stats become selective — point/range
-    * predicates skip whole row groups at read time and the file-pruned
-    * DML probe touches one file instead of all of them. AQE sizes the
-    * range shuffle, so small inserts collapse to one file while large
-    * ones split sorted.
-    */
   /** Types with a cheap order-preserving numeric projection — what
     * [[zValueParts]] can bucket.
     */
@@ -3593,10 +3572,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * on zorder_demo: three single-task decodes of the same slice, one
     * per pass). Persist the input across those passes — the same
     * pattern [[upsert]] uses for its two passes — and let the first
-    * pass materialize it; single-pass writes stay streaming. A
-    * single-pass source that optimizes to a `LocalRelation` (a VALUES
-    * list, driver-resident rows) is written by ONE task: scanned as is,
-    * it splits into one slice per core and so one tiny file per core.
+    * pass materialize it; single-pass writes stay streaming, under
+    * [[oneTaskIfLocal]].
     */
   private def writeData(schema: String, table: String, df: DataFrame,
                         dir: Path, snapDir: String): Unit = {
@@ -3608,14 +3585,30 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       try partitionedWriter(schema, table, cached)
         .mode("errorifexists").parquet(dest)
       finally cached.unpersist(false)
-    } else {
-      val local = df.queryExecution.optimizedPlan
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-      partitionedWriter(schema, table, if (local) df.coalesce(1) else df)
-        .mode("errorifexists").parquet(dest)
-    }
+    } else partitionedWriter(schema, table, oneTaskIfLocal(df))
+      .mode("errorifexists").parquet(dest)
   }
 
+  /** A source that optimizes to a `LocalRelation` (a VALUES list,
+    * driver-resident rows) is written by ONE task: scanned as is, it
+    * splits into one slice per core and so one tiny file per core.
+    */
+  private def oneTaskIfLocal(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) df.coalesce(1)
+    else df
+
+  /** Data writer honoring the table's partition spec: partitioned tables
+    * get hive-layout `col=value` subdirectories inside every snap dir.
+    * A `sorted_by` table gets its data CLUSTERED on the way in: range-
+    * repartitioned on (partition cols ++ sort cols) then sorted within
+    * tasks, so each written file covers a disjoint sort-key range and its
+    * parquet footer min/max stats become selective — point/range
+    * predicates skip whole row groups at read time and the file-pruned
+    * DML probe touches one file instead of all of them. AQE sizes the
+    * range shuffle, so small inserts collapse to one file while large
+    * ones split sorted.
+    */
   private def partitionedWriter(schema: String, table: String, df0: DataFrame) = {
     val df = withDeclaredFieldIds(schema, table, df0)
     val fieldsP = partitionFields(schema, table)
@@ -3662,6 +3655,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     */
   private def attemptTag(id: Long): String =
     f"$id%05d-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** The commit clock: id and commit time of the snapshot after `head`.
+    * Commit times are strictly monotonic, so `FOR TIMESTAMP AS OF`
+    * between two commits is well-defined even for sub-millisecond commit
+    * spacing (SURVEY.md §7.3).
+    */
+  private def nextCommit(head: Option[Snapshot]): (Long, Long) =
+    (head.fold(0L)(_.snapshotId) + 1,
+      math.max(System.currentTimeMillis(), head.fold(0L)(_.committedAtMillis + 1)))
 
   // ---- manifest tier (Iceberg-shaped metadata: immutable manifest
   //      files grouping data-file entries with per-column bounds;
@@ -4559,8 +4561,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                 whenMatched: Seq[MergeAction],
                 whenNotMatched: Seq[MergeInsertAction]): (Snapshot, Long) = synchronized {
     import org.apache.spark.sql.functions.{coalesce, col, lit, monotonically_increasing_id, when}
-    val dir = tableDir(schema, table)
-    require(tableExists(schema, table), s"Table $schema.$table does not exist")
+    // the commit log is read BEFORE the target so the optimistic-
+    // concurrency check covers the whole read-compute-commit span
+    val rc = new RowCommit(schema, table, None)
     whenMatched.foreach {
       case _: MergeInsertAction =>
         throw new IllegalArgumentException("WHEN MATCHED cannot INSERT")
@@ -4578,20 +4581,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         case _ =>
       }
     }
-    // observe the commit-log generation BEFORE reading the target so the
-    // optimistic-concurrency check covers the whole read-compute-commit span
-    val (commits, gen) = readCommitsWithGen(schema, table)
-    val currentSnap = commits.lastOption
     // target with per-row file provenance (file-pruned CoW, like
     // delete/update); provenance-free states merge as full rewrites.
     // format_version = 2 additionally needs per-row POSITIONS — its MERGE
     // path commits positional deletes instead of rewriting files
     val isV2 = formatVersion(schema, table) == 2
-    val (t0, hasProv) = withProvenance(schema, table, currentSnap, withPos = isV2) match {
+    val (t0, hasProv) = withProvenance(schema, table, rc.current, withPos = isV2) match {
       case Some(p) =>
         val r = p.withColumnRenamed("__graft_file", "__graft_t_file")
         (if (isV2) r.withColumnRenamed("__graft_pos", "__graft_t_pos") else r, true)
-      case None => (readSnapshot(schema, table, currentSnap)
+      case None => (readSnapshot(schema, table, rc.current)
         .withColumn("__graft_t_file", lit(null).cast("string")), false)
     }
     val fields = t0.schema.fields.toIndexedSeq.filterNot(f =>
@@ -4697,37 +4696,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           matchedRows.filter(col("__graft_aidx") =!= -1).count() + srcOnly.count()
         lazy val merged = insertOut.foldLeft(matchedOut.unionByName(targetOnly))(_.unionByName(_))
 
-        val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-        val at = math.max(System.currentTimeMillis(),
-          commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
-        val schemaJson = declaredSchema(schema, table).map(_.json)
-        val entries = currentSnap.map(_.dirs).getOrElse(Nil)
-        val prevDeletes = currentSnap.map(_.deletes).getOrElse(Nil)
-        val prevEq = currentSnap.map(_.eqDeletes).getOrElse(Nil)
         val snap =
-          if (hasProv && affected == 0L) {
-            // no clause fired, nothing inserted: metadata-only no-op commit
-            val s0 = Snapshot(id, at, entries, schemaJson, Some("overwrite"),
-              prevDeletes, currentSnap.flatMap(_.manifestList), None, prevEq)
-            writeCommits(schema, table, commits :+ s0, gen)
-            s0
-          } else if (isV2 && hasProv) {
-            // merge-on-read MERGE (Iceberg v2 row-level semantics): every
-            // matched row a clause modifies becomes a positional-delete
-            // coordinate; updated versions + inserted rows APPEND as a new
-            // data dir. NO existing data file is rewritten — the
-            // write-amplification contract users choose format_version = 2
-            // for, matching what morRowLevel gives DELETE/UPDATE.
-            val delDir = s"delete-${attemptTag(id)}"
-            matchedRows.filter(col("__graft_aidx") =!= -1)
-              .select(col("__graft_t_file").as("file_path"),
-                col("__graft_t_pos").as("pos"))
-              .repartitionByRange(col("file_path"), col("pos"))
-              .write.mode("errorifexists").parquet(new Path(dir, delDir).toString)
-            val newDeletes =
-              if (parquetFooterRows(new Path(dir, delDir)) == 0L) {
-                fs(dir).delete(new Path(dir, delDir), true); prevDeletes
-              } else prevDeletes :+ delDir
+          if (hasProv && affected == 0L) rc.noOp() // no clause fired, nothing inserted
+          else if (isV2 && hasProv) {
+            // merge-on-read MERGE: every matched row a clause modifies
+            // becomes a positional-delete coordinate; updated versions and
+            // inserted rows append. NO existing data file is rewritten
             val updateIdxs = whenMatched.zipWithIndex.collect {
               case (_: MergeUpdateAction, i) => i
             }
@@ -4735,49 +4709,13 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
               if (updateIdxs.isEmpty) None
               else Some(applyUpdates(
                 matchedRows.filter(col("__graft_aidx").isin(updateIdxs: _*))))
-            val appendDf = (updatedOut.toSeq ++ insertOut.toSeq)
-              .reduceOption(_.unionByName(_))
-            val (carried, _) = carryManifests(schema, table, currentSnap, Set.empty)
-            val names = appendDf match {
-              case Some(adf) =>
-                val snapDir = snapDirName(schema, table, s"${attemptTag(id)}-rewrite")
-                writeData(schema, table, adf, dir, snapDir)
-                val es = scanEntries(dir, snapDir)
-                carried ++ writeManifests(dir, es)
-              case None => carried
-            }
-            val s0 = Snapshot(id, at, Nil, schemaJson, Some("overwrite"),
-              newDeletes, Some(writeManifestList(dir, compactManifestSet(dir, names))),
-              None, prevEq)
-            writeCommits(schema, table, commits :+ s0, gen)
-            s0
-          } else {
-            val (carried, touchedRel) =
-              if (hasProv) carryManifests(schema, table, currentSnap,
-                touchedAbs.map(p => new Path(p).toUri.getPath).toSet)
-              else (Nil, Nil)
-            if (hasProv) require(touchedRel.size == touchedAbs.size,
-              s"file-pruning provenance mismatch on $schema.$table: " +
-                s"${touchedAbs.size} touched files, ${touchedRel.size} matched " +
-                "under current snapshot entries")
-            val snapDir = snapDirName(schema, table, s"${attemptTag(id)}-rewrite")
-            writeData(schema, table, merged, dir, snapDir)
-            // no provenance = whole-table rewrite: pending deletes are
-            // materialized; otherwise drop deletes on rewritten files only
-            val newDeletes =
-              if (!hasProv) Nil
-              else carryDeletes(dir, prevDeletes, touchedAbs,
-                s"${attemptTag(id)}-carry")
-            val newEntries = scanEntries(dir, snapDir)
-            val names = carried ++
-              writeManifests(dir, newEntries)
-            val s0 = Snapshot(id, at, Nil, schemaJson,
-              Some("overwrite"), newDeletes,
-              Some(writeManifestList(dir, compactManifestSet(dir, names))),
-              None, prevEq)
-            writeCommits(schema, table, commits :+ s0, gen)
-            s0
-          }
+            morTail(rc, matchedRows.filter(col("__graft_aidx") =!= -1)
+                .select(col("__graft_t_file").as("file_path"), col("__graft_t_pos").as("pos")),
+              dropKeys = Set.empty, pureDelete = false) { _ =>
+              (updatedOut.toSeq ++ insertOut.toSeq).reduceOption(_.unionByName(_))
+            }._1
+          } else cowTail(rc, touchedAbs.map(p => new Path(p).toUri.getPath).toSet,
+            Option.when(hasProv)(touchedAbs))(_ => Some(merged))
         (snap, affected)
       } finally joined.unpersist()
     } finally tgt.unpersist()
@@ -4803,12 +4741,20 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                     cond: org.apache.spark.sql.Column): (Snapshot, Long) = {
     val hit = org.apache.spark.sql.functions.coalesce(
       cond, org.apache.spark.sql.functions.lit(false))
-    val mor =
-      if (formatVersion(schema, table) == 2) morRowLevel(schema, table, hit, None)
-      else None
-    mor.getOrElse(rewritePruned(schema, table, _.filter(hit),
-      probeCond = Some(hit), dropFullyCovered = true)(_.filter(!hit)))
+    rowLevel(schema, table, hit, None)(_.filter(!hit))
   }
+
+  /** DELETE (`setsOpt` None) or UPDATE of the rows where `hit` holds:
+    * merge-on-read ([[morRowLevel]]) on a `format_version = 2` table
+    * whose state has per-row provenance, otherwise file-pruned
+    * copy-on-write ([[rewritePruned]]) rewriting touched files through `f`.
+    */
+  private def rowLevel(schema: String, table: String, hit: org.apache.spark.sql.Column,
+                       setsOpt: Option[Seq[(String, org.apache.spark.sql.Column)]])
+                      (f: DataFrame => DataFrame): (Snapshot, Long) =
+    (if (formatVersion(schema, table) == 2) morRowLevel(schema, table, hit, setsOpt) else None)
+      .getOrElse(rewritePruned(schema, table, _.filter(hit), probeCond = Some(hit),
+        dropFullyCovered = setsOpt.isEmpty)(f))
 
   /** TRUNCATE TABLE: a METADATA-ONLY commit. The new snapshot references
     * no data files (an empty `dirs` list reads as the empty table at the
@@ -4840,23 +4786,13 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       if (last.exists(_.eqDeletes.nonEmpty))
         readSnapshot(schema, table, last).count()
       else filesOfSnapshot(schema, table, last).map(_._3).sum - delRows
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(last)
     val snap = Snapshot(id, at, Nil,
       declaredSchema(schema, table).map(_.json), Some("overwrite"))
     writeCommits(schema, table, commits :+ snap, gen)
     (snap, n)
   }
 
-  /** UPDATE … SET … WHERE cond: rows where cond is TRUE get the assigned
-    * values (computed from the PRE-update row — simultaneous-assignment
-    * SQL semantics, so `SET a = b, b = a` swaps); all other rows —
-    * including NULL-valued predicates, per 3VL — pass through unchanged.
-    * Assigned expressions are cast to the column's existing type so the
-    * table schema is stable under any UPDATE. Copy-on-write commit like
-    * [[delete]].
-    */
   /** [[update]] reporting the hit-row count from the same synchronized
     * section (see [[deleteCounted]]).
     */
@@ -4876,11 +4812,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       }
     }
     val hit = coalesce(cond, lit(false))
-    val mor =
-      if (formatVersion(schema, table) == 2) morRowLevel(schema, table, hit, Some(sets))
-      else None
-    if (mor.isDefined) return mor.get
-    rewritePruned(schema, table, _.filter(hit), probeCond = Some(hit)) { current =>
+    rowLevel(schema, table, hit, Some(sets)) { current =>
       sets.foreach { case (c, _) =>
         require(current.columns.exists(_.equalsIgnoreCase(c)),
           s"UPDATE target column '$c' does not exist in $schema.$table")
@@ -4895,6 +4827,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** UPDATE … SET … WHERE cond: rows where cond is TRUE get the assigned
+    * values (computed from the PRE-update row — simultaneous-assignment
+    * SQL semantics, so `SET a = b, b = a` swaps); all other rows —
+    * including NULL-valued predicates, per 3VL — pass through unchanged.
+    * Assigned expressions are cast to the column's existing type so the
+    * table schema is stable under any UPDATE. Copy-on-write commit like
+    * [[delete]].
+    */
   def update(schema: String, table: String,
              sets: Seq[(String, org.apache.spark.sql.Column)],
              cond: org.apache.spark.sql.Column): Snapshot =
@@ -4926,130 +4866,43 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                           setsOpt: Option[Seq[(String, org.apache.spark.sql.Column)]])
     : Option[(Snapshot, Long)] = synchronized {
     import org.apache.spark.sql.functions.col
-    val dir = tableDir(schema, table)
-    require(tableExists(schema, table), s"Table $schema.$table does not exist")
-    val (commits, gen) = readCommitsWithGen(schema, table)
-    val current = commits.lastOption
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
-    val schemaJson = declaredSchema(schema, table).map(_.json)
-    val entries = current.map(_.dirs).getOrElse(Nil)
-    val prevDeletes = current.map(_.deletes).getOrElse(Nil)
-    // manifest-bounds file skipping: the probe scans only files whose
-    // bounds MAY match; when bounds prove no file can, commit the no-op
-    // without launching any job
-    val prevEqMor = current.map(_.eqDeletes).getOrElse(Nil)
-    val (probeSnap0, probeEntries0) = restrictByBounds(schema, table, current, Some(hit)) match {
-      case Left(()) =>
-        val snap = Snapshot(id, at, entries, schemaJson, Some("overwrite"),
-          prevDeletes, current.flatMap(_.manifestList), None, prevEqMor)
-        writeCommits(schema, table, commits :+ snap, gen)
-        return Some((snap, 0L))
-      case Right(se) => se
+    val rc = new RowCommit(schema, table, None)
+    val scope = boundsTier(rc, Some(hit), delete = setsOpt.isEmpty, coveredOp = "delete") match {
+      case Left(done) => return Some(done)
+      case Right(sc)  => sc
     }
-    // metadata delete on the MoR path: a DELETE's bounds-proven
-    // fully-covered files leave by manifest instead of growing O(rows)
-    // positional-delete files — the v2 retention pattern. Gated to
-    // DELETE with no pending deletes of either kind (live == physical).
-    val dropGate = setsOpt.isEmpty && prevDeletes.isEmpty && prevEqMor.isEmpty
-    val tableKeyM = fs(dir).makeQualified(dir).toUri.getPath
-    val candEntries: Seq[DataFileEntry] =
-      if (!dropGate) Nil
-      else probeEntries0.getOrElse(current.toSeq.flatMap(manifestEntriesOf(dir, _)))
-    val mustEntries = candEntries.filter(e =>
-      org.apache.spark.sql.GraftBoundsBridge.mustMatchColumn(hit, e))
-    val mustKeys = mustEntries.map(e => entryKey(tableKeyM, e)).toSet
-    val mustRows = mustEntries.iterator.map(_.rows).sum
-    val (probeSnap, probeEntries) =
-      if (mustKeys.isEmpty) (probeSnap0, probeEntries0)
-      else {
-        val maybe = candEntries.filterNot(e => mustKeys.contains(entryKey(tableKeyM, e)))
-        (current.map(_.copy(dirs = maybe.map(_.path), manifestList = None)),
-          Some(maybe))
-      }
-    def droppedCarry(): Option[String] = {
-      val (carried, mustRel) = carryManifests(schema, table, current, mustKeys)
-      require(mustRel.size == mustKeys.size,
-        s"metadata-delete bounds mismatch on $schema.$table: " +
-          s"${mustKeys.size} covered files, ${mustRel.size} matched entries")
-      Some(writeManifestList(dir, carried))
-    }
-    if (mustKeys.nonEmpty && probeEntries.exists(_.isEmpty)) {
-      // every candidate provably covered: pure metadata commit, zero jobs
-      val snap = Snapshot(id, at, Nil, schemaJson, Some("delete"),
-        Nil, droppedCarry(), None, Nil)
-      writeCommits(schema, table, commits :+ snap, gen)
-      return Some((snap, mustRows))
-    }
-    val prov = withProvenance(schema, table, probeSnap, withPos = true,
-        entriesOverride = probeEntries) match {
+    val matched = withProvenance(schema, table, scope.snap, withPos = true,
+        entriesOverride = scope.entries) match {
       case None    => return None // CoW fallback re-derives the drop set
-      case Some(p) => p
+      case Some(p) => p.filter(hit)
     }
-    val matched = prov.filter(hit)
     // UPDATE reads `matched` twice (delete coordinates + new versions) —
     // persist freezes one probe scan for both
     if (setsOpt.isDefined)
       matched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val delDir = s"delete-${attemptTag(id)}"
-      // range-repartition by coordinate: AQE folds a small delete set into
-      // one output file; a huge one splits sorted by file, keeping
-      // per-commit file counts bounded at any selectivity
-      matched.select(col("__graft_file").as("file_path"), col("__graft_pos").as("pos"))
-        .repartitionByRange(col("file_path"), col("pos"))
-        .write.mode("errorifexists").parquet(new Path(dir, delDir).toString)
-      val n = parquetFooterRows(new Path(dir, delDir))
-      if (n == 0L) {
-        // nothing matched among probed files: reclaim the empty delete
-        // dir; commit the bounds-dropped file set if there is one
-        fs(dir).delete(new Path(dir, delDir), true)
-        val snap =
-          if (mustKeys.isEmpty)
-            Snapshot(id, at, entries, schemaJson, Some("overwrite"),
-              prevDeletes, current.flatMap(_.manifestList), None, prevEqMor)
-          else Snapshot(id, at, Nil, schemaJson, Some("delete"),
-            Nil, droppedCarry(), None, Nil)
-        writeCommits(schema, table, commits :+ snap, gen)
-        Some((snap, mustRows))
-      } else {
-        val (dirsNew, mlNew, op) = setsOpt match {
-          case None =>
-            // pure delete: probed data files untouched — the commit adds
-            // only the delete file; bounds-dropped files (if any) leave
-            // via the carried manifest list
-            if (mustKeys.isEmpty) (entries, current.flatMap(_.manifestList), "delete")
-            else (Nil, droppedCarry(), "delete")
-          case Some(sets) =>
-            val dataFields = matched.schema.fields.toIndexedSeq
-              .filterNot(f => f.name == "__graft_file" || f.name == "__graft_pos")
-            sets.foreach { case (c, _) =>
-              require(dataFields.exists(_.name.equalsIgnoreCase(c)),
-                s"UPDATE target column '$c' does not exist in $schema.$table")
+      val (snap, n) = morTail(rc,
+          matched.select(col("__graft_file").as("file_path"), col("__graft_pos").as("pos")),
+          scope.mustKeys, pureDelete = setsOpt.isEmpty) { n =>
+        setsOpt.filter(_ => n > 0L).map { sets =>
+          val dataFields = matched.schema.fields.toIndexedSeq
+            .filterNot(f => f.name == "__graft_file" || f.name == "__graft_pos")
+          sets.foreach { case (c, _) =>
+            require(dataFields.exists(_.name.equalsIgnoreCase(c)),
+              s"UPDATE target column '$c' does not exist in $schema.$table")
+          }
+          // every row here matched the predicate — assignments apply
+          // unconditionally, from PRE-update values (simultaneous-
+          // assignment SQL semantics, same as the CoW path)
+          matched.select(dataFields.map { f =>
+            sets.find(_._1.equalsIgnoreCase(f.name)) match {
+              case Some((_, e)) => e.cast(f.dataType).as(f.name)
+              case None         => col(f.name)
             }
-            // every row here matched the predicate — assignments apply
-            // unconditionally, from PRE-update values (simultaneous-
-            // assignment SQL semantics, same as the CoW path)
-            val updated = matched.select(dataFields.map { f =>
-              sets.find(_._1.equalsIgnoreCase(f.name)) match {
-                case Some((_, e)) => e.cast(f.dataType).as(f.name)
-                case None         => col(f.name)
-              }
-            }: _*)
-            val snapDir = snapDirName(schema, table, s"${attemptTag(id)}-rewrite")
-            writeData(schema, table, updated, dir, snapDir)
-            val (carried, _) = carryManifests(schema, table, current, Set.empty)
-            val newEntries = scanEntries(dir, snapDir)
-            val names = carried ++
-              writeManifests(dir, newEntries)
-            (Nil, Some(writeManifestList(dir, compactManifestSet(dir, names))), "overwrite")
+          }: _*)
         }
-        val snap = Snapshot(id, at, dirsNew, schemaJson, Some(op),
-          prevDeletes :+ delDir, mlNew, None, prevEqMor)
-        writeCommits(schema, table, commits :+ snap, gen)
-        Some((snap, n + mustRows))
       }
+      Some((snap, n + scope.mustRows))
     } finally if (setsOpt.isDefined) matched.unpersist()
   }
 
@@ -5075,17 +4928,28 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     */
   private def carryDeletes(dir: Path, prevDeletes: Seq[String],
                            touchedRaw: Seq[String], tag: String): Seq[String] = {
-    import org.apache.spark.sql.functions.col
     if (prevDeletes.isEmpty) return Nil
     if (touchedRaw.isEmpty) return prevDeletes
     val del = spark.read.parquet(prevDeletes.map(d => new Path(dir, d).toString): _*)
-    val kept = fileSetFilter(del, "file_path", touchedRaw, anti = true)
-    val keptDir = s"delete-$tag"
-    kept.repartitionByRange(col("file_path"), col("pos"))
-      .write.mode("errorifexists").parquet(new Path(dir, keptDir).toString)
-    if (parquetFooterRows(new Path(dir, keptDir)) == 0L) {
-      fs(dir).delete(new Path(dir, keptDir), true); Nil
-    } else Seq(keptDir)
+    writeDeleteFile(dir, fileSetFilter(del, "file_path", touchedRaw, anti = true), tag)._1.toSeq
+  }
+
+  /** Writes `coords` — (file_path, pos) rows — as the positional-delete
+    * dir `delete-<tag>`. Range-partitioned by coordinate: AQE folds a
+    * small delete set into one output file; a huge one splits sorted by
+    * file, keeping per-commit file counts bounded at any selectivity.
+    * Returns (the dir, or None when it came out empty and was removed
+    * again; its row count from the footers).
+    */
+  private def writeDeleteFile(dir: Path, coords: DataFrame, tag: String): (Option[String], Long) = {
+    import org.apache.spark.sql.functions.col
+    val delDir = s"delete-$tag"
+    val p = new Path(dir, delDir)
+    coords.repartitionByRange(col("file_path"), col("pos"))
+      .write.mode("errorifexists").parquet(p.toString)
+    val n = parquetFooterRows(p)
+    if (n == 0L) fs(dir).delete(p, true)
+    (Option.when(n > 0L)(delDir), n)
   }
 
   /** Restrict `df` by membership of `fileCol` in `files`: tiny sets
@@ -5112,7 +4976,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  // ---- file-pruned copy-on-write core ----
+  // ---- row-level commit core: DELETE, UPDATE and MERGE ----
 
   /** Current state of `snap` with a `__graft_file` provenance column — the
     * absolute data-file path each row came from, via Spark's
@@ -5165,6 +5029,155 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     buf.toSeq
   }
 
+  /** The state one row-level commit (DELETE, UPDATE, MERGE) builds on,
+    * observed once up front: the commit log and its generation, so the
+    * optimistic-concurrency check covers the whole read-compute-commit
+    * span; the `txn` skip witness (same contract as [[insert]]'s txn);
+    * the next id; the declared schema; the pending deletes. The commit
+    * time is read when the commit is written, so `FOR TIMESTAMP AS OF` a
+    * time during a long rewrite reads the same state before and after.
+    */
+  private final class RowCommit(val schema: String, val table: String,
+                                txn: Option[(String, Long)]) {
+    require(tableExists(schema, table), s"Table $schema.$table does not exist")
+    val dir: Path = tableDir(schema, table)
+    val tableKey: String = fs(dir).makeQualified(dir).toUri.getPath
+    private val (commits, gen) = readCommitsWithGen(schema, table)
+    val current: Option[Snapshot] = commits.lastOption
+    val seen: Option[Snapshot] = txn.flatMap { case (app, v) => txnSeen(commits, app, v) }
+    val id: Long = nextCommit(current)._1
+    private val schemaJson = declaredSchema(schema, table).map(_.json)
+    val prevDeletes: Seq[String] = current.fold(Seq.empty[String])(_.deletes)
+    val prevEq: Seq[EqDelete] = current.fold(Seq.empty[EqDelete])(_.eqDeletes)
+
+    /** Commits the next snapshot. Equality deletes carry verbatim: files
+      * a commit adds are exempt from them (`appliesTo`), untouched files
+      * stay covered.
+      */
+    def commit(op: String, dirs: Seq[String], deletes: Seq[String],
+               manifestList: Option[String]): Snapshot = {
+      val snap = Snapshot(id, nextCommit(current)._2, dirs, schemaJson, Some(op), deletes,
+        manifestList, txn, prevEq)
+      writeCommits(schema, table, commits :+ snap, gen)
+      snap
+    }
+
+    /** Commits the current data files, carried by reference, with `deletes`. */
+    def keepFiles(op: String, deletes: Seq[String]): Snapshot =
+      commit(op, current.fold(Seq.empty[String])(_.dirs), deletes, current.flatMap(_.manifestList))
+
+    /** Commits the current state unchanged: a metadata-only no-op. */
+    def noOp(): Snapshot = keepFiles("overwrite", prevDeletes)
+  }
+
+  /** What a row-level probe scans after the bounds tier: the snapshot and,
+    * when restricted, its manifest entries; a delete's `candidates`; and
+    * the files bounds prove fully covered (`mustKeys`, `mustRows` rows),
+    * which leave by manifest without a probe.
+    */
+  private final class ProbeScope(val snap: Option[Snapshot],
+                                 val entries: Option[Seq[DataFileEntry]],
+                                 val candidates: Seq[DataFileEntry],
+                                 val mustKeys: Set[String], val mustRows: Long)
+
+  /** Manifest-bounds tier of a row-level commit: the probe scans only
+    * files whose bounds MAY match `cond`, and when bounds prove no file
+    * can, the no-op commits without any Spark job. A `delete` over a
+    * state with no pending deletes (live rows = manifest rows) lists its
+    * candidate files, and those whose bounds prove EVERY row matches skip
+    * the probe and leave by manifest; when that covers every candidate,
+    * the metadata delete commits as `coveredOp` — a retention DELETE
+    * aligned with file ranges runs ZERO Spark jobs. Left = committed
+    * (snapshot, rows removed).
+    */
+  private def boundsTier(rc: RowCommit, cond: Option[org.apache.spark.sql.Column],
+                         delete: Boolean, coveredOp: String)
+    : Either[(Snapshot, Long), ProbeScope] = {
+    val (snap0, entries0) = restrictByBounds(rc.schema, rc.table, rc.current, cond) match {
+      case Left(())  => return Left((rc.noOp(), 0L))
+      case Right(se) => se
+    }
+    val candidates: Seq[DataFileEntry] =
+      if (!delete || cond.isEmpty || rc.prevDeletes.nonEmpty || rc.prevEq.nonEmpty) Nil
+      else entries0.getOrElse(rc.current.toSeq.flatMap(manifestEntriesOf(rc.dir, _)))
+    val must = candidates.filter(e =>
+      org.apache.spark.sql.GraftBoundsBridge.mustMatchColumn(cond.get, e))
+    val mustKeys = must.map(e => entryKey(rc.tableKey, e)).toSet
+    val mustRows = must.iterator.map(_.rows).sum
+    val maybe = candidates.filterNot(e => mustKeys.contains(entryKey(rc.tableKey, e)))
+    if (mustKeys.isEmpty) Right(new ProbeScope(snap0, entries0, candidates, mustKeys, 0L))
+    else if (maybe.isEmpty)
+      Left((rc.commit(coveredOp, Nil, Nil, manifestListWith(rc, carryExcept(rc, mustKeys)._1, None)),
+        mustRows))
+    else Right(new ProbeScope(rc.current.map(_.copy(dirs = maybe.map(_.path), manifestList = None)),
+      Some(maybe), candidates, mustKeys, mustRows))
+  }
+
+  /** [[carryManifests]] of the commit's current state minus `keys`, every
+    * one of which must name a current data file. Returns (carried
+    * manifest names, table-relative paths of the `keys` files).
+    */
+  private def carryExcept(rc: RowCommit, keys: Set[String]): (Seq[String], Seq[String]) = {
+    val (carried, rel) = carryManifests(rc.schema, rc.table, rc.current, keys)
+    require(rel.size == keys.size,
+      s"file-pruning provenance mismatch on ${rc.schema}.${rc.table}: " +
+        s"${keys.size} touched files, ${rel.size} matched under current snapshot entries")
+    (carried, rel)
+  }
+
+  /** Manifest list of the `carried` manifests plus, when `data` is given,
+    * those of `data` written as the commit's rewrite dir.
+    */
+  private def manifestListWith(rc: RowCommit, carried: Seq[String],
+                               data: Option[DataFrame]): Option[String] = {
+    val added = data.toSeq.flatMap { df =>
+      val snapDir = snapDirName(rc.schema, rc.table, s"${attemptTag(rc.id)}-rewrite")
+      writeData(rc.schema, rc.table, df, rc.dir, snapDir)
+      writeManifests(rc.dir, scanEntries(rc.dir, snapDir))
+    }
+    Some(writeManifestList(rc.dir, compactManifestSet(rc.dir, carried ++ added)))
+  }
+
+  /** Copy-on-write commit tail: carries every current data file outside
+    * `touchedKeys` by manifest, writes what `rewrite` makes of the touched
+    * files (their table-relative paths) as the new data, drops the
+    * positional deletes addressing the `touchedRaw` files, and commits an
+    * "overwrite". `rewrite` returning None commits the carry alone (a
+    * metadata delete). `touchedRaw = None` means no per-row provenance:
+    * the whole table is rewritten and its pending deletes materialized.
+    */
+  private def cowTail(rc: RowCommit, touchedKeys: Set[String], touchedRaw: Option[Seq[String]])
+                     (rewrite: Seq[String] => Option[DataFrame]): Snapshot = {
+    val (carried, touchedRel) =
+      if (touchedRaw.isEmpty) (Nil, Nil) else carryExcept(rc, touchedKeys)
+    val ml = manifestListWith(rc, carried, rewrite(touchedRel))
+    val deletes = touchedRaw.fold(Seq.empty[String])(
+      carryDeletes(rc.dir, rc.prevDeletes, _, s"${attemptTag(rc.id)}-carry"))
+    rc.commit("overwrite", Nil, deletes, ml)
+  }
+
+  /** Merge-on-read commit tail (Iceberg v2 row-level semantics): `coords`
+    * — the (file_path, pos) of every row the statement removes or
+    * replaces — become one positional-delete file, dropped again when it
+    * comes out empty; `append(delete rows)` (new row versions, inserts),
+    * if any, is appended as a data dir. No data file is rewritten; the
+    * bounds-covered `dropKeys` files leave by manifest. A `pureDelete`
+    * that removes rows records "delete", every other commit "overwrite".
+    * Returns (snapshot, delete rows written).
+    */
+  private def morTail(rc: RowCommit, coords: DataFrame, dropKeys: Set[String],
+                      pureDelete: Boolean)
+                     (append: Long => Option[DataFrame]): (Snapshot, Long) = {
+    val (delDir, n) = writeDeleteFile(rc.dir, coords, attemptTag(rc.id))
+    val deletes = rc.prevDeletes ++ delDir
+    val data = append(n)
+    val op = if (pureDelete && (n > 0L || dropKeys.nonEmpty)) "delete" else "overwrite"
+    val snap =
+      if (data.isEmpty && dropKeys.isEmpty) rc.keepFiles(op, deletes)
+      else rc.commit(op, Nil, deletes, manifestListWith(rc, carryExcept(rc, dropKeys)._1, data))
+    (snap, n)
+  }
+
   /** File-pruned copy-on-write commit — Trino Iceberg CoW semantics
     * (trino.io/docs/current/connector/iceberg.html): `touchedRows` narrows
     * the current state (carrying its `__graft_file` provenance column) to
@@ -5203,148 +5216,67 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                             dropFullyCovered: Boolean = false)
                            (f: DataFrame => DataFrame): (Snapshot, Long) = synchronized {
     import org.apache.spark.sql.functions.{col, lit, count => countAgg}
-    val dir = tableDir(schema, table)
-    require(tableExists(schema, table), s"Table $schema.$table does not exist")
-    val (commits, gen) = readCommitsWithGen(schema, table)
-    // idempotent-writer skip (same contract as [[insert]]'s txn)
-    for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return (seen, 0L)
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
-    val schemaJson = declaredSchema(schema, table).map(_.json)
-    val current = commits.lastOption
-    val prevDeletes = current.map(_.deletes).getOrElse(Nil)
-    def commitSnap(dirs: Seq[String], deletes: Seq[String],
-                   ml: Option[String]): Snapshot = {
-      // CoW rewrites carry eq-deletes verbatim: rewritten files are NEW
-      // (exempt via appliesTo), untouched files stay covered
-      val snap = Snapshot(id, at, dirs, schemaJson, Some("overwrite"), deletes, ml, txn,
-        current.map(_.eqDeletes).getOrElse(Nil))
-      writeCommits(schema, table, commits :+ snap, gen)
-      snap
+    val rc = new RowCommit(schema, table, txn)
+    for (s <- rc.seen) return (s, 0L)
+    // an emitting rewrite (MERGE's inserts) runs even when bounds rule
+    // out every file, so only a non-emitting one gets the bounds no-op
+    val scope = boundsTier(rc, probeCond.filterNot(_ => emitWhenUntouched),
+        delete = dropFullyCovered, coveredOp = "overwrite") match {
+      case Left(done) => return done
+      case Right(sc)  => sc
     }
-    def noOp(): (Snapshot, Long) =
-      (commitSnap(current.map(_.dirs).getOrElse(Nil), prevDeletes,
-        current.flatMap(_.manifestList)), 0L)
-    def writeSnapDir(df: DataFrame): String = {
-      val snapDir = snapDirName(schema, table, s"${attemptTag(id)}-rewrite")
-      writeData(schema, table, df, dir, snapDir)
-      snapDir
-    }
-    /* commit `newDirRel` (a just-written rewrite dir) + carried manifests
-     * as the new snapshot's complete file set */
-    def commitWithNewDir(newDirRel: String, carriedNames: Seq[String],
-                         deletes: Seq[String]): Snapshot = {
-      val newEntries = scanEntries(dir, newDirRel)
-      val names = carriedNames ++
-        writeManifests(dir, newEntries)
-      commitSnap(Nil, deletes,
-        Some(writeManifestList(dir, compactManifestSet(dir, names))))
-    }
-    // manifest-bounds file skipping: restrict the probe's file list to
-    // files whose bounds MAY match the predicate (provably-unmatched
-    // files skip the probe scan AND carry by manifest reference); bounds
-    // proving NO file can match commit the no-op without any Spark job
-    val (probeSnap0, probeEntries0) = restrictByBounds(schema, table, current, probeCond) match {
-      case Left(()) if !emitWhenUntouched => return noOp()
-      case Left(())                       => (current, None)
-      case Right(se)                      => se
-    }
-    // metadata delete, bounds tier: candidate files whose bounds prove
-    // EVERY row matches skip the probe entirely and leave by manifest —
-    // a retention DELETE aligned with file ranges runs ZERO Spark jobs
-    val dropGate = dropFullyCovered && probeCond.isDefined &&
-      prevDeletes.isEmpty && current.forall(_.eqDeletes.isEmpty)
-    val tableKey = fs(dir).makeQualified(dir).toUri.getPath
-    val candEntries: Seq[DataFileEntry] =
-      if (!dropGate) Nil
-      else probeEntries0.getOrElse(current.toSeq.flatMap(manifestEntriesOf(dir, _)))
-    val mustEntries = candEntries.filter(e =>
-      org.apache.spark.sql.GraftBoundsBridge.mustMatchColumn(probeCond.get, e))
-    val mustKeys = mustEntries.map(e => entryKey(tableKey, e)).toSet
-    val mustRows = mustEntries.iterator.map(_.rows).sum
-    val (probeSnap, probeEntries) =
-      if (mustKeys.isEmpty) (probeSnap0, probeEntries0)
-      else {
-        val maybe = candEntries.filterNot(e => mustKeys.contains(entryKey(tableKey, e)))
-        (current.map(_.copy(dirs = maybe.map(_.path), manifestList = None)),
-          Some(maybe))
-      }
-    if (mustKeys.nonEmpty && probeEntries.exists(_.isEmpty)) {
-      // every candidate provably fully covered: pure metadata commit
-      val (carried, mustRel) = carryManifests(schema, table, current, mustKeys)
-      require(mustRel.size == mustKeys.size,
-        s"metadata-delete bounds mismatch on $schema.$table: " +
-          s"${mustKeys.size} covered files, ${mustRel.size} matched entries")
-      return (commitSnap(Nil, Nil, Some(writeManifestList(dir, carried))), mustRows)
-    }
-    withProvenance(schema, table, probeSnap, entriesOverride = probeEntries) match {
+    withProvenance(schema, table, scope.snap, entriesOverride = scope.entries) match {
       case None =>
         // no per-row provenance: whole-table rewrite of the FULL current
         // state (ignore any bounds-must split — correctness first)
-        val base = readSnapshot(schema, table, current)
+        val base = readSnapshot(schema, table, rc.current)
         val n = touchedRows(
           base.withColumn("__graft_file", lit(null).cast("string"))).count()
-        // whole-table rewrite: pending deletes (if any) are materialized
-        (commitWithNewDir(writeSnapDir(f(base)), Nil, Nil), n)
+        (cowTail(rc, Set.empty, None)(_ => Some(f(base))), n)
       case Some(prov) =>
         // ONE probe pass: touched files AND matched-row counts together
         val perFile = touchedRows(prov)
           .groupBy(col("__graft_file")).agg(countAgg(lit(1)).as("n")).collect()
-        val nTouched = perFile.map(_.getLong(1)).sum + mustRows
+        val nTouched = perFile.map(_.getLong(1)).sum + scope.mustRows
         val probedRaw = perFile.map(_.getString(0)).toSeq
         val probedKeys = probedRaw.map(p => new Path(p).toUri.getPath).toSet
-        val touchedKeys = probedKeys ++ mustKeys
-        if (touchedKeys.isEmpty && !emitWhenUntouched) noOp()
-        else {
-          // metadata delete, count tier: a probed file whose matched-row
-          // count equals its manifest record count is fully covered too
-          // (catches totality the bounds alone cannot prove) — the count
-          // rides the probe pass, so this tier costs nothing extra
-          val entriesByKey: Map[String, Long] =
-            if (!dropGate) Map.empty
-            else candEntries.map(e => entryKey(tableKey, e) -> e.rows).toMap
-          val matchedByKey: Map[String, Long] = perFile.map(r =>
-            new Path(r.getString(0)).toUri.getPath -> r.getLong(1)).toMap
-          val dropKeys = mustKeys ++ probedKeys.filter(k =>
-            entriesByKey.get(k).contains(matchedByKey(k)))
-          val rewriteKeys = touchedKeys -- dropKeys
-          val (carried, touchedRel) = carryManifests(schema, table, current, touchedKeys)
-          require(touchedRel.size == touchedKeys.size,
-            s"file-pruning provenance mismatch on $schema.$table: " +
-              s"${touchedKeys.size} touched files, ${touchedRel.size} matched " +
-              "under current snapshot entries")
-          if (rewriteKeys.isEmpty && !emitWhenUntouched) {
-            // EVERY touched file fully covered: pure metadata commit —
-            // zero data bytes read or written, whatever volume left
-            (commitSnap(Nil, Nil,
-              Some(writeManifestList(dir, carried))), nTouched)
-          } else {
-            def relKey(rel: String): String =
-              if (rel.startsWith("/")) rel else s"$tableKey/$rel"
-            val rewriteRel = touchedRel.filterNot(rel => dropKeys.contains(relKey(rel)))
+        val touchedKeys = probedKeys ++ scope.mustKeys
+        if (touchedKeys.isEmpty && !emitWhenUntouched) return (rc.noOp(), 0L)
+        // metadata delete, count tier: a probed file whose matched-row
+        // count equals its manifest record count is fully covered too
+        // (catches totality the bounds alone cannot prove) — the count
+        // rides the probe pass, so this tier costs nothing extra
+        val entriesByKey: Map[String, Long] =
+          scope.candidates.map(e => entryKey(rc.tableKey, e) -> e.rows).toMap
+        val matchedByKey: Map[String, Long] = perFile.map(r =>
+          new Path(r.getString(0)).toUri.getPath -> r.getLong(1)).toMap
+        val dropKeys = scope.mustKeys ++ probedKeys.filter(k =>
+          entriesByKey.get(k).contains(matchedByKey(k)))
+        // candidates are only listed for a delete with no pending deletes,
+        // so passing only the probed raw paths to the delete-carry is complete
+        (cowTail(rc, touchedKeys, Some(probedRaw)) { touchedRel =>
+          // EVERY touched file fully covered: pure metadata commit — zero
+          // data bytes read or written, whatever volume left
+          if ((touchedKeys -- dropKeys).isEmpty && !emitWhenUntouched) None
+          else {
+            val rewriteRel = touchedRel.filterNot(rel =>
+              dropKeys.contains(if (rel.startsWith("/")) rel else s"${rc.tableKey}/$rel"))
             // the sub-read keeps the snapshot's delete files (the copy
-            // retains `deletes`), so touched rows are the LIVE rows; deletes
-            // addressing rewritten files become obsolete and are dropped.
+            // retains `deletes`), so touched rows are the LIVE rows.
             // Manifest-backed snapshots serve the touched SUBSET through
             // the manifest relation (entriesOverride) — directory discovery
             // cannot read mixed partition-spec generations at all
             val rewriteRelSet = rewriteRel.toSet
-            val touchedEntries = current.toSeq
-              .flatMap(manifestEntriesOf(dir, _))
+            val touchedEntries = rc.current.toSeq
+              .flatMap(manifestEntriesOf(rc.dir, _))
               .filter(e => rewriteRelSet.contains(e.path))
-            val sub = readSnapshot(schema, table,
-              current.map(_.copy(dirs = rewriteRel, manifestList = None)),
+            Some(f(readSnapshot(schema, table,
+              rc.current.map(_.copy(dirs = rewriteRel, manifestList = None)),
               entriesOverride =
                 if (touchedEntries.size == rewriteRel.size) Some(touchedEntries)
-                else None)
-            // dropGate implies prevDeletes is empty, so passing only the
-            // probed raw paths to the delete-carry is complete
-            val newDeletes = carryDeletes(dir, prevDeletes, probedRaw,
-              s"${attemptTag(id)}-carry")
-            (commitWithNewDir(writeSnapDir(f(sub)), carried, newDeletes), nTouched)
+                else None)))
           }
-        }
+        }, nTouched)
     }
   }
 
@@ -5649,9 +5581,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     require(tableExists(schema, table), s"Table $schema.$table does not exist")
     val dir = tableDir(schema, table)
     val (commits, gen) = readCommitsWithGen(schema, table)
-    val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-    val at = math.max(System.currentTimeMillis(),
-      commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
+    val (id, at) = nextCommit(commits.lastOption)
     val snapDir = snapDirName(schema, table, s"${attemptTag(id)}-rewrite")
     writeData(schema, table, df, dir, snapDir)
     val newEntries = scanEntries(dir, snapDir)
@@ -6343,8 +6273,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val target = commits.find(_.snapshotId == snapshotId).getOrElse(
       throw new IllegalArgumentException(
         s"Snapshot $snapshotId does not exist in $schema.$table"))
-    val id = commits.last.snapshotId + 1
-    val at = math.max(System.currentTimeMillis(), commits.last.committedAtMillis + 1)
+    val (id, at) = nextCommit(commits.lastOption)
     // operation recorded AT COMMIT TIME — inferring it from reused dir
     // names would report the target snapshot's kind instead (round-5
     // advice: a rollback reusing append dirs read back as 'append')
@@ -6405,8 +6334,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       if (entries.isEmpty) Nil
       else entries.grouped(512).map(g => writeManifest(dir, g.toSeq)).toSeq
     val ml = writeManifestList(dir, names)
-    val id = last.snapshotId + 1
-    val at = math.max(System.currentTimeMillis(), last.committedAtMillis + 1)
+    val (id, at) = nextCommit(Some(last))
     val snap = Snapshot(id, at, Nil, declaredSchema(schema, table).map(_.json),
       Some("replace"), last.deletes, Some(ml), None, last.eqDeletes)
     writeCommits(schema, table, commits :+ snap, gen)
@@ -6419,8 +6347,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val (commits, gen) = readCommitsWithGen(schema, table)
     require(commits.nonEmpty, s"Nothing to compact in $schema.$table")
     val last = commits.last
-    val id = last.snapshotId + 1
-    val at = math.max(System.currentTimeMillis(), last.committedAtMillis + 1)
+    val (id, at) = nextCommit(Some(last))
     val snapDir = snapDirName(schema, table, s"${attemptTag(id)}-compacted")
     val sorted = sortSpec(schema, table)
     val fieldsP = partitionFields(schema, table)
@@ -6911,8 +6838,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val names = carried ++
       writeManifests(dir, added)
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
-    val id = mainHead.snapshotId + 1
-    val at = math.max(System.currentTimeMillis(), mainHead.committedAtMillis + 1)
+    val (id, at) = nextCommit(Some(mainHead))
     val snap = Snapshot(id, at, mainHead.dirs,
       declaredSchema(schema, table).map(_.json), Some("append"),
       mainHead.deletes, Some(ml), None, mainHead.eqDeletes)
@@ -7375,7 +7301,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val ml = writeManifestList(dir,
       compactManifestSet(dir, carried ++ writeManifests(dir, added)))
     val id = math.max(mainHead.snapshotId, bc.last.snapshotId) + 1
-    val at = math.max(System.currentTimeMillis(), mainHead.committedAtMillis + 1)
+    val at = nextCommit(Some(mainHead))._2
     val snap = Snapshot(id, at, mainHead.dirs,
       declaredSchema(schema, table).map(_.json), Some("append"),
       mainHead.deletes, Some(ml), None, mainHead.eqDeletes)

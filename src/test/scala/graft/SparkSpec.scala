@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM — suites use a
@@ -17,7 +18,11 @@ object SparkSpec {
     .getOrCreate()
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+/** Base suite: the shared session plus scratch directories that live as
+  * long as the suite. A suite overriding `afterAll` must call
+  * `super.afterAll()`, which deletes them.
+  */
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("WARN")
@@ -25,6 +30,18 @@ abstract class SparkSpec extends AnyFunSuite {
   }
   lazy val sf001 = "/root/testdata/sf0.001"
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp directory, deleted with everything under it after the
+    * suite's last test.
+    */
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 }

@@ -10,7 +10,9 @@ import org.apache.spark.sql.GraftTestListeners
 /** The INSERT commit path: rows affected come from the written files'
   * footers, so an INSERT runs its source once, in one Spark job; a
   * driver-resident source (a VALUES list) is written as one file per
-  * partition value instead of one per core.
+  * partition value instead of one per core. The row-level verbs (DELETE,
+  * UPDATE, MERGE) are pinned at their job and file counts under both
+  * write modes, with the operation each commit records.
   */
 class CommitPathSpec extends SparkSpec {
 
@@ -110,5 +112,73 @@ class CommitPathSpec extends SparkSpec {
     assert(jobs == 1)
     assert((files("br", Some("audit")) -- before).size == 1)
     assert(engine.catalog.readLatest("demo", "br").count() == 1L)
+  }
+
+  test("CREATE OR REPLACE TABLE … AS VALUES writes its 50 rows as one file") {
+    run("CREATE TABLE demo.rep (id bigint, v varchar)")
+    run(s"INSERT INTO demo.rep VALUES ${values(5)}")
+    val n = run(s"CREATE OR REPLACE TABLE demo.rep AS SELECT * FROM (VALUES ${values(50)}) AS t(id, v)")
+    assert(n == 50L)
+    assert(files("rep").size == 1)
+    assert(engine.catalog.readLatest("demo", "rep").count() == 50L)
+  }
+
+  /** `demo.<name>` holding one data file per id range; `v2` makes it
+    * merge-on-read (`format_version = 2`).
+    */
+  private def rowTable(name: String, v2: Boolean, ranges: Range*): Unit = {
+    run(s"CREATE TABLE demo.$name (id bigint, v varchar)" +
+      (if (v2) " WITH (format_version = 2)" else ""))
+    ranges.foreach(r => run(s"INSERT INTO demo.$name VALUES " +
+      r.map(i => s"($i, 'r$i')").mkString(", ")))
+  }
+
+  /** Runs a row-level statement on `demo.<table>`: its rows affected, its
+    * Spark jobs, the operation its commit records and the data files after.
+    */
+  private def rowLevel(table: String, sql: String): (Long, Int, Option[String], Int) = {
+    val (n, jobs) = jobsOf(run(sql))
+    (n, jobs, engine.catalog.snapshots("demo", table).last.operation, files(table).size)
+  }
+
+  private val merge = "USING demo.src s ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v"
+
+  // job counts are ceilings, so a saved job shows as a lowered pin; the
+  // rows, file counts and operations are exact
+  test("copy-on-write DELETE, UPDATE and MERGE hold their job and file counts") {
+    rowTable("cowdel", v2 = false, 1 to 50)
+    val (n1, j1, op1, f1) = rowLevel("cowdel", "DELETE FROM demo.cowdel WHERE id = 3")
+    assert((n1, op1, f1) == ((1L, Some("overwrite"), 1)))
+    assert(j1 <= 3, s"$j1 jobs")
+    // every row of the second file matches by its bounds: a metadata delete
+    rowTable("cowdrop", v2 = false, 1 to 50, 51 to 100)
+    val (n2, j2, op2, f2) = rowLevel("cowdrop", "DELETE FROM demo.cowdrop WHERE id > 50")
+    assert((n2, op2, f2) == ((50L, Some("overwrite"), 1)))
+    assert(j2 == 0, s"$j2 jobs")
+    rowTable("cowupd", v2 = false, 1 to 50)
+    val (n3, j3, op3, f3) = rowLevel("cowupd", "UPDATE demo.cowupd SET v = 'u' WHERE id = 3")
+    assert((n3, op3, f3) == ((1L, Some("overwrite"), 1)))
+    assert(j3 <= 3, s"$j3 jobs")
+    rowTable("cowmrg", v2 = false, 1 to 50)
+    val (n4, j4, op4, f4) = rowLevel("cowmrg", s"MERGE INTO demo.cowmrg t $merge")
+    assert((n4, op4, f4) == ((20L, Some("overwrite"), 8)))
+    assert(j4 <= 15, s"$j4 jobs")
+    assert(engine.catalog.readLatest("demo", "cowmrg").count() == 50L)
+  }
+
+  test("merge-on-read DELETE, UPDATE and MERGE hold their job and file counts") {
+    rowTable("mordel", v2 = true, 1 to 50)
+    val (n1, j1, op1, f1) = rowLevel("mordel", "DELETE FROM demo.mordel WHERE id = 3")
+    assert((n1, op1, f1) == ((1L, Some("delete"), 1)))
+    assert(j1 <= 3, s"$j1 jobs")
+    rowTable("morupd", v2 = true, 1 to 50)
+    val (n2, j2, op2, f2) = rowLevel("morupd", "UPDATE demo.morupd SET v = 'u' WHERE id = 3")
+    assert((n2, op2, f2) == ((1L, Some("overwrite"), 2)))
+    assert(j2 <= 5, s"$j2 jobs")
+    rowTable("mormrg", v2 = true, 1 to 50)
+    val (n3, j3, op3, f3) = rowLevel("mormrg", s"MERGE INTO demo.mormrg t $merge")
+    assert((n3, op3, f3) == ((20L, Some("overwrite"), 5)))
+    assert(j3 <= 16, s"$j3 jobs")
+    assert(engine.catalog.readLatest("demo", "mormrg").count() == 50L)
   }
 }

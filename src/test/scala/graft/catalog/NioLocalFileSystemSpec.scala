@@ -6,14 +6,15 @@ import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The fork-free local filesystem must be behavior-identical to stock
   * Hadoop `LocalFileSystem`: same class surface (it IS one), same
   * resulting permission bits from setPermission, same checksummed
   * create/read round-trip.
   */
-class NioLocalFileSystemSpec extends AnyFunSuite {
+class NioLocalFileSystemSpec extends SparkSpec {
 
   private def freshFs(): NioLocalFileSystem = {
     val conf = new Configuration(false)
@@ -28,7 +29,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
 
   test("setPermission applies exact POSIX bits without a fork") {
     val fs = freshFs()
-    val dir = Files.createTempDirectory("niofs")
+    val dir = java.nio.file.Paths.get(tmpDir("niofs"))
     val f = dir.resolve("a.txt")
     Files.write(f, "x".getBytes)
     val cases = Seq(
@@ -45,7 +46,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
 
   test("create + checksummed read round-trip matches LocalFileSystem") {
     val fs = freshFs()
-    val dir = Files.createTempDirectory("niofs")
+    val dir = java.nio.file.Paths.get(tmpDir("niofs"))
     val p = new Path(dir.toString, "data.bin")
     val out = fs.create(p)
     out.write(Array.tabulate[Byte](1024)(i => (i % 97).toByte))
@@ -64,7 +65,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
 
   test("mkdirs creates directories with sane permissions") {
     val fs = freshFs()
-    val dir = Files.createTempDirectory("niofs")
+    val dir = java.nio.file.Paths.get(tmpDir("niofs"))
     val p = new Path(dir.toString, "x/y/z")
     assert(fs.mkdirs(p))
     val mode = modeOf(dir.resolve("x/y/z"))
