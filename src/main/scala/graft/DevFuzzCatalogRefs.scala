@@ -137,6 +137,8 @@ object DevFuzzCatalogRefs {
         println(s"[creffuzz] scenario_$i: ${tables.size} tables, " +
           s"${members.size} members, ${nOps} ops, PUBLISH+RECREATE OK")
       }
+      CacheHygiene.sweep(spark)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
     }
     println(s"[creffuzz] $n/$n multi-table catalog-ref scenarios OK (seed=$seed)")
   }

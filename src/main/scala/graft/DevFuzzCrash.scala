@@ -62,12 +62,25 @@ object DevFuzzCrash {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
 
     var ok = 0
+    // every temp dir a scenario makes; deleted when the scenario ends
+    val temps = scala.collection.mutable.ArrayBuffer.empty[String]
+    def tempDir(prefix: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(prefix).toString
+      temps += d
+      d
+    }
+    def endScenario(): Unit = {
+      SnapshotCatalog.faultHook = _ => ()
+      CacheHygiene.sweep(spark)
+      temps.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      temps.clear()
+    }
 
     // every 4th scenario exercises the MULTI-TABLE surface instead:
     // catalog-ref publish/materialize crashes and migrate crashes —
     // the points the single-table model loop cannot reach
     def multiTableScenario(i: Int, rnd: scala.util.Random): Unit = {
-      val wh = java.nio.file.Files.createTempDirectory(f"crashfuzz_mt_$i%03d").toString
+      val wh = tempDir(f"crashfuzz_mt_$i%03d")
       val c = new SnapshotCatalog(spark, wh)
       c.createSchema("fz")
       if (rnd.nextBoolean()) {
@@ -102,7 +115,7 @@ object DevFuzzCrash {
         println(f"[crashfuzz] $i%03d OK ($point, $nT members)")
       } else {
         // migrate crash: layout written, marker not — retry must succeed
-        val lake = java.nio.file.Files.createTempDirectory(s"crashfuzz_lake_$i").toString
+        val lake = tempDir(s"crashfuzz_lake_$i")
         val hive = rnd.nextBoolean()
         val df = Seq((1L, 1, "a"), (2L, 2, "b")).toDF("id", "p", "v")
         (if (hive) df.write.partitionBy("p") else df.write)
@@ -131,9 +144,9 @@ object DevFuzzCrash {
         try { multiTableScenario(i, rnd); ok += 1 }
         catch { case e: Throwable =>
           println(f"[crashfuzz] $i%03d FAIL: ${e.getMessage}") }
-        finally { SnapshotCatalog.faultHook = _ => (); CacheHygiene.sweep(spark) }
+        finally endScenario()
       } else {
-      val wh = java.nio.file.Files.createTempDirectory(f"crashfuzz_$i%03d").toString
+      val wh = tempDir(f"crashfuzz_$i%03d")
       val v2 = rnd.nextBoolean()
       val c = new SnapshotCatalog(spark, wh)
       c.createSchema("fz")
@@ -231,10 +244,7 @@ object DevFuzzCrash {
       } catch {
         case e: Throwable =>
           println(f"[crashfuzz] $i%03d FAIL: ${e.getMessage}")
-      } finally {
-        SnapshotCatalog.faultHook = _ => ()
-        CacheHygiene.sweep(spark)
-      }
+      } finally endScenario()
       }
     }
     println(s"$ok/$n OK")

@@ -115,6 +115,9 @@ object DevFuzzStreamMaint {
           s"extra ${(got.toSet -- appended).size}")
       println(s"[smfuzz] scenario_$i: $rounds rounds, ${appended.size} rows, " +
         s"${c.snapshots("s", "src").size} src snapshots OK")
+      CacheHygiene.sweep(spark)
+      Seq(wh, ckpt).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     }
     println(s"[smfuzz] $n/$n streaming+maintenance scenarios OK (seed=$seed)")
   }

@@ -27,18 +27,11 @@ final case class ColBounds(kind: String, min: String, max: String, nulls: Long)
   * partitioned tables), footer record count, byte size, per-column
   * bounds. The Iceberg manifest-entry shape (spec:
   * iceberg.apache.org/spec/#manifests) over JSON instead of Avro.
-  *
-  * `dirTotal` = number of data files the entry's snap dir held when it
-  * was scanned at commit time (-1 unknown). Snap dirs are append-frozen
-  * (writers always create NEW dirs), so a snapshot whose entries under a
-  * dir number exactly `dirTotal` provably references the WHOLE dir — the
-  * read path then passes the directory (one path, discovery-listed)
-  * instead of every file, keeping query planning free of per-file
-  * existence checks; only pruned survivor subsets enumerate files.
+  * Manifests written before reads planned from entries carry a `d`
+  * (files in the entry's snap dir) key, which parsing ignores.
   */
 final case class DataFileEntry(path: String, rows: Long, bytes: Long,
                                bounds: Map[String, ColBounds],
-                               dirTotal: Long = -1L,
                                blooms: Map[String, ColBloom] = Map.empty)
 
 /** Per-file bloom filter over one column's values ([[Manifests.BloomBits]]
@@ -143,7 +136,6 @@ object Manifests {
       o.put("p", e.path)
       o.put("r", e.rows)
       o.put("b", e.bytes)
-      if (e.dirTotal >= 0) o.put("d", e.dirTotal)
       if (e.bounds.nonEmpty) {
         val c = o.putObject("c")
         e.bounds.foreach { case (name, cb) =>
@@ -190,8 +182,7 @@ object Manifests {
           e.getKey -> ColBloom(b.get("t").asText, bits)
         }.toMap
       }.getOrElse(Map.empty[String, ColBloom])
-      DataFileEntry(o.get("p").asText, o.get("r").asLong, o.get("b").asLong, bounds,
-        Option(o.get("d")).map(_.asLong).getOrElse(-1L), blooms)
+      DataFileEntry(o.get("p").asText, o.get("r").asLong, o.get("b").asLong, bounds, blooms)
     }.toSeq
   }
 

@@ -463,9 +463,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * files, old files keep their old derived directories (reads parse
     * each file's own path; transform pruning on old files degrades
     * conservatively), and only FUTURE writes lay out under the new spec.
-    * Requires every live snapshot (all refs) to be manifest-backed: the
-    * legacy discovery read needs uniform directory shapes, the manifest
-    * file index does not.
     */
   def setPartitionSpec(schema: String, table: String, entries: Seq[String]): Unit = synchronized {
     require(tableExists(schema, table), s"Table $schema.$table does not exist")
@@ -490,10 +487,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         s"Cannot change identity partition columns of $schema.$table " +
           "(identity-partitioned values are not stored in data files — " +
           "evolution is transform-only)")
-      require(allRefs.forall(s => s.dirs.isEmpty),
-        s"Partition-spec evolution on $schema.$table requires every " +
-          "snapshot to be manifest-backed (legacy directory-discovery " +
-          "reads need uniform layouts); compact the table first")
     }
     val p = new Path(tableDir(schema, table), "_partition_spec.json")
     if (entries.isEmpty) { if (fs(p).exists(p)) fs(p).delete(p, false) }
@@ -3192,8 +3185,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         "metadata — EXECUTE optimize it first")
     val sKey = fs(sDir).makeQualified(sDir).toUri.getPath
     val entries0 = manifestEntriesOf(sDir, sHead).map { e =>
-      e.copy(path = if (e.path.startsWith("/")) e.path else s"$sKey/${e.path}",
-        dirTotal = -1L)
+      e.copy(path = if (e.path.startsWith("/")) e.path else s"$sKey/${e.path}")
     }
     require(entries0.nonEmpty, s"$srcSchema.$srcTable has no data files")
     val dir = tableDir(schema, table)
@@ -3775,10 +3767,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       snap.manifestList.getOrElse("dirs:" + snap.dirs.mkString(","))
     if (snapFileKeysCache.size > 4096) snapFileKeysCache.clear()
     snapFileKeysCache.computeIfAbsent(ck, _ =>
-      dataFilePaths(schema, table, snap)
-        .map(rel => f.makeQualified(new Path(dir, rel)).toString
-          .replaceFirst(SchemeNormRe, "/")).toSet)
+      dataFilePaths(schema, table, snap).map(fileKey(dir, _)).toSet)
   }
+
+  /** Qualified, scheme-normalized key of the data file at table-relative
+    * (or adopted absolute) path `rel`.
+    */
+  private def fileKey(dir: Path, rel: String): String =
+    fs(dir).makeQualified(new Path(dir, rel)).toString.replaceFirst(SchemeNormRe, "/")
 
   /** Key tuples of an equality-delete file, plus whether the frame is
     * driver-local (broadcastable for free). Small files — the
@@ -3860,20 +3856,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       mapper.readTree(readString(p)).elements.asScala.map(_.asText).toSeq)
   }
 
-  /** Does a DECLARED column's value ride this file path as a hive
-    * `col=value` segment? The single rule deciding when a read needs
-    * directory-VALUE discovery (identity-partitioned layouts keep their
-    * values in the path, not the files) vs reading flat through the
-    * manifest relation (`_snap=` tags, derived-transform segments, and
-    * junk '=' dirs carry no declared values). Shared by the
-    * manifest-relation gate and the listing fallback — one rule, two
-    * read paths.
+  /** Declared columns (lower-case `declLower` names) whose values ride
+    * this file path as hive `col=value` segments. Identity-partitioned
+    * layouts keep these values in the path, not the files; `_snap=` tags,
+    * derived-transform segments and junk '=' dirs name no declared column.
     */
-  private def declaredValueRidesPath(declLower: Set[String], p: String): Boolean =
-    p.split('/').dropRight(1).exists { seg =>
+  private def declaredColumnsInPath(declLower: Set[String], p: String): Iterator[String] =
+    p.split('/').dropRight(1).iterator.flatMap { seg =>
       val i = seg.indexOf('=')
-      i > 0 && declLower.contains(
-        seg.substring(0, i).toLowerCase(java.util.Locale.ROOT))
+      Option.when(i > 0)(seg.substring(0, i).toLowerCase(java.util.Locale.ROOT)).filter(declLower)
     }
 
   /** Absolute qualified path of a manifest entry's data file. Entries
@@ -3892,12 +3883,21 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private def entryKey(tableKey: String, e: DataFileEntry): String =
     if (e.path.startsWith("/")) e.path else s"$tableKey/${e.path}"
 
-  /** All manifest entries a snapshot references (empty for legacy
-    * snapshots — their `dirs` are resolved by listing instead).
+  /** The entries of the manifests a snapshot references. Legacy `dirs`
+    * entries are not among them: [[snapshotEntries]] adds those.
     */
   private def manifestEntriesOf(dir: Path, snap: Snapshot): Seq[DataFileEntry] =
     snap.manifestList.toSeq.flatMap(readManifestList(dir, _))
       .flatMap(readManifest(dir, _))
+
+  /** Every data file a snapshot references, as manifest entries: its
+    * manifests by name, plus legacy `dirs` entries (pre-manifest logs)
+    * resolved by the listing and footer pass [[carryManifests]] and
+    * [[rewriteManifests]] make when they migrate such a snapshot.
+    */
+  private def snapshotEntries(dir: Path, snap: Snapshot): Seq[DataFileEntry] =
+    manifestEntriesOf(dir, snap) ++
+      snap.dirs.flatMap(e => scanEntries(dir, e, bloomOverride = Some(Nil)))
 
   /** Manifest entries for the data files under a just-written dirs entry:
     * one footer read per NEW file (driver-side, proportional to the
@@ -3913,23 +3913,17 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val rel = p.toUri.getPath.stripPrefix(tableKey).stripPrefix("/")
       Manifests.footerEntry(conf, p, rel, len)
     }
-    // a dirs entry naming a single FILE (legacy carried-file entry) says
-    // nothing about its dir's total → dirTotal stays -1 (file-granular
-    // reads); a scanned DIR entry captures the whole-dir count
-    val withTotals =
-      if (files.size == 1 && files.head.path == entryRel) files
-      else files.map(_.copy(dirTotal = files.size.toLong))
     // bloom_filter_columns tables: one column-pruned pass over the NEW
     // files builds per-file equality blooms into the manifest entries —
     // the commit-time cost is bounded by the commit's own data volume,
     // never the table's
     val bloomCols = bloomOverride.getOrElse(bloomColumnsAt(dir))
-    if (bloomCols.isEmpty || statuses.isEmpty) withTotals
+    if (bloomCols.isEmpty || statuses.isEmpty) files
     else {
       val byPath = Blooms.bloomsFor(spark, statuses.map(_._1.toString), bloomCols,
-          withTotals.map(_.rows).max)
+          files.map(_.rows).max)
         .map { case (k, v) => new Path(k).toUri.getPath -> v }
-      withTotals.map { e =>
+      files.map { e =>
         e.copy(blooms = byPath.getOrElse(s"$tableKey/${e.path}", Map.empty))
       }
     }
@@ -3952,14 +3946,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** Carry `prior`'s data files minus `touchedKeys` (scheme-less absolute
     * URI paths) into manifest form. Returns (manifest names referencing
-    * every untouched file, table-relative paths of the touched files).
+    * every untouched file, the touched files' entries).
     * Manifests with NO touched file carry by NAME — zero bytes rewritten;
     * manifests with touched files have their survivors compacted into one
     * new carry manifest; legacy `dirs` entries migrate into a manifest
     * (one listing+footer pass — the last time that table pays it).
     */
   private def carryManifests(schema: String, table: String, prior: Option[Snapshot],
-                             touchedKeys: Set[String]): (Seq[String], Seq[String]) = {
+                             touchedKeys: Set[String]): (Seq[String], Seq[DataFileEntry]) = {
     val dir = tableDir(schema, table)
     prior match {
       case None => (Nil, Nil)
@@ -3976,12 +3970,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         def key(e: DataFileEntry) = entryKey(tableKey, e)
         val carried = Vector.newBuilder[String]
         val survivors = Vector.newBuilder[DataFileEntry]
-        val touched = Vector.newBuilder[String]
+        val touched = Vector.newBuilder[DataFileEntry]
         groups.foreach { case (nameOpt, entries) =>
           val (hit, keep) = entries.partition(e => touchedKeys(key(e)))
           if (hit.isEmpty && nameOpt.isDefined) carried += nameOpt.get
           else {
-            touched ++= hit.map(_.path)
+            touched ++= hit
             survivors ++= keep
           }
         }
@@ -4007,17 +4001,17 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     else big.map(_._1) ++ writeManifests(dir, small.flatMap(_._2))
   }
 
-  /** Current snapshot restricted to data files whose manifest bounds MAY
-    * satisfy `cond` — manifest-powered file skipping for the DML probe:
-    * a file is dropped only when its per-column min/max PROVE no row can
-    * match ([[Manifests.mayMatch]]), so dropped files are exactly the
-    * provably-untouched ones. Returns None when bounds prove NO file can
-    * match (caller commits a metadata-only no-op without any scan);
-    * passes the snapshot through unchanged when it predates manifests.
+  /** The entries of `snap` whose manifest bounds MAY satisfy `cond` —
+    * manifest-powered file skipping for the DML probe: a file is dropped
+    * only when its per-column min/max PROVE no row can match
+    * ([[Manifests.mayMatch]]), so dropped files are exactly the
+    * provably-untouched ones. Left when bounds prove NO file can match
+    * (caller commits a metadata-only no-op without any scan); Right(None)
+    * when no file is dropped or the snapshot predates manifests.
     */
   private def restrictByBounds(schema: String, table: String, snap: Option[Snapshot],
                                cond: Option[org.apache.spark.sql.Column])
-    : Either[Unit, (Option[Snapshot], Option[Seq[DataFileEntry]])] =
+    : Either[Unit, Option[Seq[DataFileEntry]]] =
     (snap, cond) match {
       case (Some(s), Some(c)) if s.manifestList.isDefined && s.dirs.isEmpty =>
         val dir = tableDir(schema, table)
@@ -4048,10 +4042,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           org.apache.spark.sql.GraftBoundsBridge.mayMatchColumn(c, e) &&
             derivedChecks.forall(_(e)))
         if (candidates.isEmpty && entries.nonEmpty) Left(())
-        else if (candidates.size == entries.size) Right((snap, None))
-        else Right((Some(s.copy(dirs = candidates.map(_.path), manifestList = None)),
-          Some(candidates))) // entries serve the subset via the manifest relation
-      case _ => Right((snap, None))
+        else if (candidates.size == entries.size) Right(None)
+        else Right(Some(candidates))
+      case _ => Right(None)
     }
 
   // ---- Reads (S1, T1) ----
@@ -4139,10 +4132,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val eqDels = snap.map(_.eqDeletes).getOrElse(Nil)
     if (deletes.isEmpty && eqDels.isEmpty && !keepFile && !keepPos) base
     else {
-      // resolving _metadata throws AnalysisException on states with no
-      // file-source relation (empty table, legacy union layout) — callers
-      // requesting provenance catch it; delete-carrying snapshots always
-      // have file-backed dirs
+      // resolving _metadata throws AnalysisException on an empty table
+      // (no file-source relation) — callers requesting provenance catch
+      // it; delete-carrying snapshots always reference data files
       val withMeta = base.select(col("*"),
         col("_metadata.file_path").as("__graft_file"),
         col("_metadata.row_index").as("__graft_pos"))
@@ -4194,8 +4186,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           // the appliesTo sets may name files long rewritten away, but
           // only CURRENT files produce rows, so they alone decide plan
           // shape (and bound the broadcast side of the attach join)
-          val curFiles: Set[String] =
-            snap.map(snapshotFileKeys(schema, table, _)).getOrElse(Set.empty)
+          val curFiles: Set[String] = entriesOverride match {
+            case Some(es) => es.map(e => fileKey(dir, e.path)).toSet
+            case None     => snap.map(snapshotFileKeys(schema, table, _)).getOrElse(Set.empty)
+          }
           val classes = curFiles.iterator.map(f => fdMap.getOrElse(f, Nil)).toSet
           val antiJoins: DataFrame => DataFrame = df0 =>
             eqDels.zipWithIndex.groupBy(_._1.keys).toSeq.sortBy(_._2.head._2)
@@ -4249,208 +4243,67 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** Rows of `snap`, or of its `entriesOverride` subset, as one manifest
+    * relation ([[org.apache.spark.sql.GraftScanBridge.manifestScan]]):
+    * file names, sizes and bounds come from the manifest entries, so
+    * planning makes no storage LIST call and pushed-down predicates prune
+    * files against the bounds (Iceberg's scan planning). A snapshot with
+    * no data file reads as an empty frame at the declared schema.
+    */
   private def readSnapshotData(schema: String, table: String, snap: Option[Snapshot],
                                useSnapshotSchema: Boolean = false,
                                entriesOverride: Option[Seq[DataFileEntry]] = None): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StringType}
     val dir = tableDir(schema, table)
     val pinned =
       if (useSnapshotSchema)
-        snap.flatMap(_.schemaJson).map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
+        snap.flatMap(_.schemaJson).map(j => DataType.fromJson(j).asInstanceOf[StructType])
       else None
-    val declared = pinned.orElse(declaredSchema(schema, table))
-    // manifest-only snapshot + declared schema → manifest-driven scan
-    // planning ([[GraftScanBridge.manifestScan]]): the file list (names,
-    // sizes, bounds) comes entirely from manifest JSON — zero storage
-    // LIST calls — and pushed-down predicates prune files at plan time
-    // against manifest column bounds, Iceberg's scan-planning shape.
-    // `graft.manifestRead=false` session conf falls back to the listing
-    // path (A/B hatch).
-    // entriesOverride serves a SUBSET of a snapshot's files through the
-    // same manifest relation (DML probe/sub-reads) — it must work even
-    // with the A/B hatch off, since mixed partition-spec generations
-    // cannot be served by directory discovery at all
-    val manifestRead = snap match {
-      case Some(s) if declared.isDefined && (entriesOverride.isDefined ||
-          (s.dirs.isEmpty && s.manifestList.isDefined)) =>
-        val entries = entriesOverride.getOrElse(manifestEntriesOf(dir, s))
-        val fieldsP = partitionFields(schema, table)
-        val decl = declared.get
-        // the A/B hatch (graft.manifestRead=false) falls back to listing
-        // EXCEPT for a partitioned snapshot referencing adopted absolute
-        // entries — their identity partition values live in EXTERNAL hive
-        // paths that directory discovery rooted at the table dir can
-        // never serve, so the manifest relation is the only read path
-        // a path needs DIRECTORY-VALUE discovery iff some non-leaf hive
-        // segment names a DECLARED column — its values live in the path,
-        // not the files (identity-partitioned layouts). `_snap=` tags,
-        // derived-transform segments, and junk '=' dirs carry no declared
-        // values: those files hold every declared column and read flat
-        // through the manifest relation. (Treating ANY '=' as
-        // discovery-needing sent post-replace snapshots — whose carried
-        // replace output lives under a `_snap=`-named dir next to plain
-        // rewrite dirs — into basePath discovery, which threw
-        // CONFLICTING_DIRECTORY_STRUCTURES on the mixed layout.)
-        val declLowerAll = decl.fieldNames
-          .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-        def needsDiscovery(p: String): Boolean =
-          declaredValueRidesPath(declLowerAll, p)
-        // adopted-absolute AND migrated table-relative hive entries have
-        // no directory-discovery fallback the legacy path could serve —
-        // the manifest relation is their ONLY correct read, so the
-        // graft.manifestRead=false A/B hatch must not bypass it (the
-        // legacy per-dir union would read partition columns as NULL)
-        val adoptedPartitioned =
-          fieldsP.nonEmpty && entries.exists(e =>
-            e.path.startsWith("/") ||
-              (!e.path.startsWith("_snap=") && needsDiscovery(e.path)))
-        if (entries.isEmpty ||
-            (entriesOverride.isEmpty && !adoptedPartitioned &&
-              spark.conf.get("graft.manifestRead", "true") == "false")) None
-        else if (fieldsP.isEmpty && entries.forall(e => !needsDiscovery(e.path)))
-          Some(org.apache.spark.sql.GraftScanBridge.manifestScan(
-            spark, dir, entries, decl, Nil))
-        else if (fieldsP.nonEmpty && entries.forall(e =>
-            e.path.startsWith("_snap=") || e.path.startsWith("/") ||
-            // a MIGRATED identity-hive layout: table-relative paths with
-            // no _snap segment whose partition values ride the path —
-            // the same parse the adopted-absolute branch does
-            declaredValueRidesPath(declLowerAll, e.path))) {
-          val identLower = fieldsP.filter(_.isIdentity)
-            .map(_.source.toLowerCase(java.util.Locale.ROOT)).toSet
-          val dataSchema = StructType(decl.fields.filterNot(f =>
-            identLower.contains(f.name.toLowerCase(java.util.Locale.ROOT))))
-          val partCols: Seq[(String, org.apache.spark.sql.types.DataType)] =
-            ("_snap", org.apache.spark.sql.types.StringType) +: fieldsP.map { f =>
-              if (f.isIdentity)
-                f.source -> decl.fields.find(_.name.equalsIgnoreCase(f.source))
-                  .map(_.dataType)
-                  .getOrElse(org.apache.spark.sql.types.StringType: org.apache.spark.sql.types.DataType)
-              else
-                f.derivedName -> (org.apache.spark.sql.types.StringType: org.apache.spark.sql.types.DataType)
-            }
-          val transforms = fieldsP.filterNot(_.isIdentity)
-          val projection: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-              DataFileEntry => Boolean =
-            if (transforms.isEmpty) _ => _ => true
-            else filters => {
-              val checks = for {
-                f0 <- filters
-                (name, v) <- org.apache.spark.sql.GraftBoundsBridge
-                  .conjunctEqualitiesExpr(f0)
-                f <- transforms if f.source.equalsIgnoreCase(name)
-                dt <- decl.fields.find(_.name.equalsIgnoreCase(f.source))
-                  .map(_.dataType).toSeq
-                dv <- f.deriveValue(v, dt).toSeq
-              } yield (e: DataFileEntry) =>
-                Manifests.boundsFor(e, f.derivedName).forall(cb =>
-                  Manifests.nodeLiteralIn(cb, dv).forall(x =>
-                    Manifests.eqContains(cb, x, e)))
-              e => checks.forall(_(e))
-            }
-          Some(org.apache.spark.sql.GraftScanBridge.manifestScan(
-              spark, dir, entries, dataSchema, partCols, projection)
-            .select(decl.fieldNames.toSeq.map(org.apache.spark.sql.functions.col): _*))
-        } else None
-      case _ => None
-    }
-    manifestRead.foreach(df => return df)
-    // manifest entries resolve dir-granular where the snapshot provably
-    // references a WHOLE snap dir (entry count == the dir's commit-time
-    // file count — see DataFileEntry.dirTotal): one path per dir, no
-    // per-file existence checks at plan time; pruned survivor subsets
-    // enumerate their files explicitly
-    val mPaths = snap.toSeq.flatMap { s =>
-      manifestEntriesOf(dir, s).groupBy(_.path.split('/').head).toSeq
-        .sortBy(_._1).flatMap { case (top, es) =>
-          if (es.forall(_.dirTotal == es.size.toLong)) Seq(top) else es.map(_.path)
-        }
-    }
-    val relPaths = snap.toSeq.flatMap(_.dirs) ++ mPaths
-    snap match {
-      case Some(s) if relPaths.nonEmpty =>
-        val paths = relPaths.map(d => new Path(dir, d).toString)
-        def reader = declared.map(spark.read.schema(_)).getOrElse(spark.read)
-        if (partitionSpec(schema, table).isEmpty) {
-          // unpartitioned: one multi-path read; the snap dirs carry no
-          // partition structure, so no discovery is involved and the plan
-          // is a single scan whatever the commit count. EXCEPT when the
-          // snapshot predates a CREATE OR REPLACE that dropped the
-          // partition spec: its paths still carry hive `col=value`
-          // segments whose values live in the PATH, not the files —
-          // basePath-anchored discovery recovers them (columns the pinned
-          // schema doesn't declare are dropped by the schema projection)
-          // table-INTERNAL relative paths only: an adopted absolute path
-          // (add_files) may contain meaningless `=` segments and lives
-          // outside the table root — basePath would reject it, and it
-          // has no hive values to recover anyway. Discovery fires only
-          // when a DECLARED column's value rides a path segment
-          // (identity-partitioned layouts); `_snap=`-named dirs holding
-          // full-column files (post-replace carries) read as plain
-          // multi-root parquet — basePath discovery over a mix of hive
-          // and plain dirs would throw CONFLICTING_DIRECTORY_STRUCTURES.
-          // Legacy `dirs` entries hide their deeper segments, so they
-          // keep the conservative any-'=' test; manifest entries expose
-          // full file paths and test exactly.
-          val declLowerAll = declared.toSeq.flatMap(_.fieldNames)
-            .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-          val discoveryNeeded =
-            snap.toSeq.flatMap(s => manifestEntriesOf(dir, s))
-              .exists(e => declaredValueRidesPath(declLowerAll, e.path)) ||
-            snap.toSeq.flatMap(_.dirs)
-              .exists(p => p.contains("=") && !p.startsWith("/"))
-          if (discoveryNeeded && !relPaths.exists(_.startsWith("/"))) {
-            // Spark APPENDS discovered partition columns absent from a
-            // user schema (it does not drop them) — `_snap` and derived
-            // transform dirs must be declared-then-dropped or they leak
-            // into the pre-replace snapshot's output schema
-            val declNames = declared.toSeq.flatMap(_.fieldNames)
-              .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-            val extras = relPaths.flatMap(_.split('/'))
-              .filter(s => s.indexOf('=') > 0)
-              .map(s => s.substring(0, s.indexOf('=')))
-              .distinct
-              .filterNot(k => declNames(k.toLowerCase(java.util.Locale.ROOT)))
-            val withExtras = declared.map(s0 => extras.foldLeft(s0)(
-              _.add(_, org.apache.spark.sql.types.StringType, nullable = true)))
-            withExtras.map(spark.read.schema(_)).getOrElse(spark.read)
-              .option("basePath", dir.toString)
-              .parquet(paths: _*)
-              .drop(extras: _*)
-          } else reader.parquet(paths: _*)
-        }
-        else if (relPaths.forall(_.startsWith("_snap="))) {
-          // derived transform-partition dirs (`ts_month=…`) scan as extra
-          // string partition columns exactly like `_snap` and are dropped
-          // — hidden partitioning: the user-visible schema shows only the
-          // SOURCE columns (which data files store)
-          val derivedNames = partitionFields(schema, table)
-            .filterNot(_.isIdentity).map(_.derivedName)
-          // partitioned: snap dirs are hive-parseable (`_snap=<tag>`), so
-          // ONE read rooted at the table dir covers every commit —
-          // partition discovery scans `_snap` plus the real partition
-          // columns, a filter on a partition column becomes a
-          // PartitionFilter pruning directories before any file is opened,
-          // and the plan stays O(1) in commit count (the scan's FILE LIST
-          // grows with commits, the PLAN must not — a per-dir unionByName
-          // would analyze a 200-branch union on a 200-commit table).
-          val withSnap = declared.map(s0 =>
-            ("_snap" +: derivedNames).foldLeft(s0)(
-              _.add(_, org.apache.spark.sql.types.StringType, nullable = true)))
-          withSnap.map(spark.read.schema(_)).getOrElse(spark.read)
-            .option("basePath", dir.toString)
-            .parquet(paths: _*)
-            .drop("_snap" +: derivedNames: _*)
-        } else
-          // legacy partitioned layout (pre-`_snap=` dirs, or a log mixing
-          // both): per-dir discovery roots unioned by name — correct, just
-          // not plan-bounded; new commits migrate the table forward
-          paths.map(p => reader.parquet(p)).reduce(_.unionByName(_))
-      case _ =>
-        val sch = declared.getOrElse(
-          throw new IllegalStateException(s"Table $schema.$table has no schema and no data"))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-    }
+    val entries = entriesOverride.getOrElse(snap.toSeq.flatMap(snapshotEntries(dir, _)))
+    val decl = pinned.orElse(declaredSchema(schema, table)).getOrElse(
+      throw new IllegalStateException(s"Table $schema.$table has no schema"))
+    if (entries.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], decl)
+    def lower(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+    val fieldsP = partitionFields(schema, table)
+    // columns whose values come from the path instead of the files: the
+    // current spec's identity columns, and any declared column a
+    // table-relative entry path names (files written under an older
+    // spec, e.g. time travel past a CREATE OR REPLACE that dropped the
+    // partitioning). An adopted absolute path carries values only for
+    // the current spec: an external dir may look hive-partitioned on a
+    // column its files hold
+    val declLower = decl.fieldNames.map(lower).toSet
+    val pathCols = fieldsP.filter(_.isIdentity).map(f => lower(f.source)).toSet ++
+      entries.iterator.filterNot(_.path.startsWith("/"))
+        .flatMap(e => declaredColumnsInPath(declLower, e.path))
+    val transforms = fieldsP.filterNot(_.isIdentity)
+    // derived transform columns (`ts_month=…`) scan as string partition
+    // columns and are dropped again — hidden partitioning: the surface
+    // shows only the SOURCE columns, which the data files store
+    val partCols: Seq[(String, DataType)] =
+      decl.fields.toSeq.filter(f => pathCols(lower(f.name))).map(f => f.name -> f.dataType) ++
+        transforms.map(_.derivedName -> (StringType: DataType))
+    val projection: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        DataFileEntry => Boolean =
+      if (transforms.isEmpty) _ => _ => true
+      else filters => {
+        val checks = for {
+          f0 <- filters
+          (name, v) <- org.apache.spark.sql.GraftBoundsBridge.conjunctEqualitiesExpr(f0)
+          f <- transforms if f.source.equalsIgnoreCase(name)
+          dt <- decl.fields.find(_.name.equalsIgnoreCase(f.source)).map(_.dataType).toSeq
+          dv <- f.deriveValue(v, dt).toSeq
+        } yield (e: DataFileEntry) =>
+          Manifests.boundsFor(e, f.derivedName).forall(cb =>
+            Manifests.nodeLiteralIn(cb, dv).forall(x =>
+              Manifests.eqContains(cb, x, e)))
+        e => checks.forall(_(e))
+      }
+    val scan = org.apache.spark.sql.GraftScanBridge.manifestScan(spark, dir, entries,
+      StructType(decl.fields.filterNot(f => pathCols(lower(f.name)))), partCols, projection)
+    if (partCols.isEmpty) scan
+    else scan.select(decl.fieldNames.toSeq.map(org.apache.spark.sql.functions.col): _*)
   }
 
   def declaredSchema(schema: String, table: String): Option[StructType] = {
@@ -4856,9 +4709,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * `compact` folds the deletes away.
     *
     * `setsOpt` = None → DELETE, Some(sets) → UPDATE. Returns None when the
-    * current state exposes no per-row provenance (empty table, legacy
-    * layout) — the caller falls back to copy-on-write, which handles those
-    * trivially. The touched-row count comes from the delete file's own
+    * current state exposes no per-row provenance (empty table) — the
+    * caller falls back to copy-on-write, which handles that trivially. The touched-row count comes from the delete file's own
     * parquet footers — no second scan of the data.
     */
   private def morRowLevel(schema: String, table: String,
@@ -4871,7 +4723,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       case Left(done) => return Some(done)
       case Right(sc)  => sc
     }
-    val matched = withProvenance(schema, table, scope.snap, withPos = true,
+    val matched = withProvenance(schema, table, rc.current, withPos = true,
         entriesOverride = scope.entries) match {
       case None    => return None // CoW fallback re-derives the drop set
       case Some(p) => p.filter(hit)
@@ -4981,9 +4833,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   /** Current state of `snap` with a `__graft_file` provenance column — the
     * absolute data-file path each row came from, via Spark's
     * `_metadata.file_path` column (resolvable through the projection the
-    * snapshot read applies). None when the state exposes no per-file
-    * provenance: an empty table (no file-source relation) or the legacy
-    * mixed-layout union read — those fall back to whole-table rewrites.
+    * snapshot read applies). None for an empty table, which has no
+    * file-source relation: callers fall back to whole-table rewrites.
     */
   private def withProvenance(schema: String, table: String,
                              snap: Option[Snapshot],
@@ -5070,13 +4921,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     def noOp(): Snapshot = keepFiles("overwrite", prevDeletes)
   }
 
-  /** What a row-level probe scans after the bounds tier: the snapshot and,
-    * when restricted, its manifest entries; a delete's `candidates`; and
-    * the files bounds prove fully covered (`mustKeys`, `mustRows` rows),
-    * which leave by manifest without a probe.
+  /** What a row-level probe scans after the bounds tier: the current
+    * snapshot's manifest entries when restricted; a delete's `candidates`;
+    * and the files bounds prove fully covered (`mustKeys`, `mustRows`
+    * rows), which leave by manifest without a probe.
     */
-  private final class ProbeScope(val snap: Option[Snapshot],
-                                 val entries: Option[Seq[DataFileEntry]],
+  private final class ProbeScope(val entries: Option[Seq[DataFileEntry]],
                                  val candidates: Seq[DataFileEntry],
                                  val mustKeys: Set[String], val mustRows: Long)
 
@@ -5093,9 +4943,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private def boundsTier(rc: RowCommit, cond: Option[org.apache.spark.sql.Column],
                          delete: Boolean, coveredOp: String)
     : Either[(Snapshot, Long), ProbeScope] = {
-    val (snap0, entries0) = restrictByBounds(rc.schema, rc.table, rc.current, cond) match {
+    val entries0 = restrictByBounds(rc.schema, rc.table, rc.current, cond) match {
       case Left(())  => return Left((rc.noOp(), 0L))
-      case Right(se) => se
+      case Right(es) => es
     }
     val candidates: Seq[DataFileEntry] =
       if (!delete || cond.isEmpty || rc.prevDeletes.nonEmpty || rc.prevEq.nonEmpty) Nil
@@ -5105,24 +4955,23 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val mustKeys = must.map(e => entryKey(rc.tableKey, e)).toSet
     val mustRows = must.iterator.map(_.rows).sum
     val maybe = candidates.filterNot(e => mustKeys.contains(entryKey(rc.tableKey, e)))
-    if (mustKeys.isEmpty) Right(new ProbeScope(snap0, entries0, candidates, mustKeys, 0L))
+    if (mustKeys.isEmpty) Right(new ProbeScope(entries0, candidates, mustKeys, 0L))
     else if (maybe.isEmpty)
       Left((rc.commit(coveredOp, Nil, Nil, manifestListWith(rc, carryExcept(rc, mustKeys)._1, None)),
         mustRows))
-    else Right(new ProbeScope(rc.current.map(_.copy(dirs = maybe.map(_.path), manifestList = None)),
-      Some(maybe), candidates, mustKeys, mustRows))
+    else Right(new ProbeScope(Some(maybe), candidates, mustKeys, mustRows))
   }
 
   /** [[carryManifests]] of the commit's current state minus `keys`, every
     * one of which must name a current data file. Returns (carried
-    * manifest names, table-relative paths of the `keys` files).
+    * manifest names, the entries of the `keys` files).
     */
-  private def carryExcept(rc: RowCommit, keys: Set[String]): (Seq[String], Seq[String]) = {
-    val (carried, rel) = carryManifests(rc.schema, rc.table, rc.current, keys)
-    require(rel.size == keys.size,
+  private def carryExcept(rc: RowCommit, keys: Set[String]): (Seq[String], Seq[DataFileEntry]) = {
+    val (carried, touched) = carryManifests(rc.schema, rc.table, rc.current, keys)
+    require(touched.size == keys.size,
       s"file-pruning provenance mismatch on ${rc.schema}.${rc.table}: " +
-        s"${keys.size} touched files, ${rel.size} matched under current snapshot entries")
-    (carried, rel)
+        s"${keys.size} touched files, ${touched.size} matched under current snapshot entries")
+    (carried, touched)
   }
 
   /** Manifest list of the `carried` manifests plus, when `data` is given,
@@ -5140,17 +4989,17 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** Copy-on-write commit tail: carries every current data file outside
     * `touchedKeys` by manifest, writes what `rewrite` makes of the touched
-    * files (their table-relative paths) as the new data, drops the
+    * files (their entries) as the new data, drops the
     * positional deletes addressing the `touchedRaw` files, and commits an
     * "overwrite". `rewrite` returning None commits the carry alone (a
     * metadata delete). `touchedRaw = None` means no per-row provenance:
     * the whole table is rewritten and its pending deletes materialized.
     */
   private def cowTail(rc: RowCommit, touchedKeys: Set[String], touchedRaw: Option[Seq[String]])
-                     (rewrite: Seq[String] => Option[DataFrame]): Snapshot = {
-    val (carried, touchedRel) =
+                     (rewrite: Seq[DataFileEntry] => Option[DataFrame]): Snapshot = {
+    val (carried, touched) =
       if (touchedRaw.isEmpty) (Nil, Nil) else carryExcept(rc, touchedKeys)
-    val ml = manifestListWith(rc, carried, rewrite(touchedRel))
+    val ml = manifestListWith(rc, carried, rewrite(touched))
     val deletes = touchedRaw.fold(Seq.empty[String])(
       carryDeletes(rc.dir, rc.prevDeletes, _, s"${attemptTag(rc.id)}-carry"))
     rc.commit("overwrite", Nil, deletes, ml)
@@ -5196,7 +5045,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * by MERGE, whose `f` can introduce rows (inserts) with zero matches;
     * DELETE/UPDATE leave it false and commit metadata-only no-ops.
     * Falls back to the whole-table rewrite when no per-file provenance is
-    * available (empty table, legacy layout).
+    * available (empty table).
     *
     * `dropFullyCovered` (DELETE only — `f` must REMOVE matched rows for
     * this to be sound): a touched file whose manifest record count equals
@@ -5225,7 +5074,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       case Left(done) => return done
       case Right(sc)  => sc
     }
-    withProvenance(schema, table, scope.snap, entriesOverride = scope.entries) match {
+    withProvenance(schema, table, rc.current, entriesOverride = scope.entries) match {
       case None =>
         // no per-row provenance: whole-table rewrite of the FULL current
         // state (ignore any bounds-must split — correctness first)
@@ -5254,28 +5103,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           entriesByKey.get(k).contains(matchedByKey(k)))
         // candidates are only listed for a delete with no pending deletes,
         // so passing only the probed raw paths to the delete-carry is complete
-        (cowTail(rc, touchedKeys, Some(probedRaw)) { touchedRel =>
+        (cowTail(rc, touchedKeys, Some(probedRaw)) { touched =>
           // EVERY touched file fully covered: pure metadata commit — zero
           // data bytes read or written, whatever volume left
           if ((touchedKeys -- dropKeys).isEmpty && !emitWhenUntouched) None
-          else {
-            val rewriteRel = touchedRel.filterNot(rel =>
-              dropKeys.contains(if (rel.startsWith("/")) rel else s"${rc.tableKey}/$rel"))
-            // the sub-read keeps the snapshot's delete files (the copy
-            // retains `deletes`), so touched rows are the LIVE rows.
-            // Manifest-backed snapshots serve the touched SUBSET through
-            // the manifest relation (entriesOverride) — directory discovery
-            // cannot read mixed partition-spec generations at all
-            val rewriteRelSet = rewriteRel.toSet
-            val touchedEntries = rc.current.toSeq
-              .flatMap(manifestEntriesOf(rc.dir, _))
-              .filter(e => rewriteRelSet.contains(e.path))
-            Some(f(readSnapshot(schema, table,
-              rc.current.map(_.copy(dirs = rewriteRel, manifestList = None)),
-              entriesOverride =
-                if (touchedEntries.size == rewriteRel.size) Some(touchedEntries)
-                else None)))
-          }
+          // the sub-read applies the snapshot's delete files, so the
+          // touched rows are the LIVE rows
+          else Some(f(readSnapshot(schema, table, rc.current, entriesOverride =
+            Some(touched.filterNot(e => dropKeys.contains(entryKey(rc.tableKey, e)))))))
         }, nTouched)
     }
   }
@@ -6081,19 +5916,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         skipChangeCommits).flatMap { case (cur, added) =>
       if (added.isEmpty) None
       else {
-        val entries = manifestEntriesOf(dir, cur).filter(e => added.contains(e.path))
-        if (entries.size == added.size)
-          Some(readSnapshotMeta(schema, table, Some(cur),
-            useSnapshotSchema = true, entriesOverride = Some(entries)))
-        else {
-          // legacy dirs-based snapshot (no manifest entries for the new
-          // files): read them directly with the commit-pinned schema
-          val sch = cur.schemaJson
-            .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[StructType]).getOrElse(declared)
-          Some(spark.read.schema(sch).parquet(
-            added.toSeq.sorted.map(p => new Path(dir, p).toString): _*))
-        }
+        val entries = snapshotEntries(dir, cur).filter(e => added.contains(e.path))
+        Some(readSnapshotMeta(schema, table, Some(cur),
+          useSnapshotSchema = true, entriesOverride = Some(entries)))
       }
     }
     val conformed = parts.map { df =>
@@ -6391,8 +6216,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       case Some(c) if last.manifestList.isDefined && last.dirs.isEmpty =>
         val all = manifestEntriesOf(dir, last)
         val cand = restrictByBounds(schema, table, Some(last), Some(c)) match {
-          case Left(())            => Seq.empty[DataFileEntry]
-          case Right((_, entOpt))  => entOpt.getOrElse(all)
+          case Left(())     => Seq.empty[DataFileEntry]
+          case Right(entOpt) => entOpt.getOrElse(all)
         }
         val tableKey = fs(dir).makeQualified(dir).toUri.getPath
         val addressedRel: Set[String] =

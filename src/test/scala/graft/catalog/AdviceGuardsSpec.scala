@@ -194,11 +194,7 @@ class AdviceGuardsSpec extends SparkSpec {
     assert(c.readLatest("s", "pr").select("id", "v").as[(Long, String)]
       .collect().sortBy(_._1).toSeq ==
       Seq((1L, "a"), (2L, "b"), (9L, "Z")))
-    // the A/B listing hatch reads the same mix (plain multi-root, no
-    // basePath discovery — no declared column's value rides the paths)
-    spark.conf.set("graft.manifestRead", "false")
-    try assert(c.readLatest("s", "pr").count() === 3)
-    finally spark.conf.unset("graft.manifestRead")
+    assert(c.readLatest("s", "pr").count() === 3)
     // branch DML over the post-replace state reads back too
     c.createBranch("s", "pr", "fix")
     c.branch("fix").updateCounted("s", "pr", Seq("v" -> lit("Y")), col("id") === 1L)

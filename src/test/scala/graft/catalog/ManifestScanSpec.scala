@@ -140,6 +140,26 @@ class ManifestScanSpec extends SparkSpec {
       .filter(col("id") === 2L)) == 1)
   }
 
+  test("a pre-manifest snapshot (snap dirs, no manifest list) reads back unchanged") {
+    val c = freshCatalog()
+    Seq("tl" -> false, "tlp" -> true).foreach { case (t, partitioned) =>
+      seed(c, t, partitioned)
+      def rows = c.readLatest("s", t).select("id", "grp", "v")
+        .as[(Long, String, Long)].collect().sorted.toSeq
+      val before = rows
+      // rewrite the head as a legacy log wrote it: its snap dirs as
+      // `dirs`, no manifest list
+      val (commits, gen) = c.readCommitsWithGen("s", t)
+      val head = commits.last
+      val dirs = c.dataFilePaths("s", t, head).map(_.split('/').head).distinct.sorted
+      c.writeCommits("s", t,
+        commits.init :+ head.copy(dirs = dirs, manifestList = None), gen)
+      assert(c.snapshots("s", t).last.manifestList.isEmpty)
+      assert(rows == before, s"$t")
+      assert(c.readLatest("s", t).filter(col("grp") === "b").count() == 4, s"$t")
+    }
+  }
+
   test("merge-on-read delete files compose with the manifest scan") {
     val c = freshCatalog()
     c.createTable("s", "t6", schema, formatVersion = 2)

@@ -386,25 +386,6 @@ class RegisterAddFilesSpec extends SparkSpec {
     assert(mixed == Seq((1L, 2020), (2L, 2020), (3L, 2021), (4L, 2022)))
   }
 
-  test("migrated hive layout reads correctly even with graft.manifestRead=false") {
-    val c = freshCatalog("mig-hatch")
-    val loc = tmpDir("mig-hatch-data")
-    Seq((1L, 2020, "a"), (2L, 2021, "b")).toDF("id", "year", "v")
-      .write.partitionBy("year").mode("overwrite").parquet(loc)
-    c.migrateTable("s", "p", loc)
-    // the A/B hatch disables the manifest relation — but a migrated hive
-    // layout has NO directory-discovery fallback (partition values live
-    // only in paths the legacy per-dir union reads schema-first), so the
-    // manifest path must stay forced, like adopted absolute entries
-    spark.conf.set("graft.manifestRead", "false")
-    try {
-      val got = c.readLatest("s", "p").select("id", "year")
-        .as[(Long, Int)].collect().toSeq.sorted
-      assert(got == Seq((1L, 2020), (2L, 2021)),
-        "the hatch must not serve NULL partition values on a migrated layout")
-    } finally spark.conf.unset("graft.manifestRead")
-  }
-
   test("migrate rejects a directory whose files disagree on column count") {
     val c = freshCatalog("mig-width")
     val loc = tmpDir("mig-width-data")
