@@ -80,6 +80,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       case e: org.apache.spark.sql.AnalysisException =>
         graft.logging.Log.debug(log, "Statement failed to parse/analyze: {0}", e.getCondition)
         throw new GraftQueryException(stmt.text, "SQL failed to parse/analyze", e)
+      case e: graft.catalog.LegacyTableFormatException =>
+        throw new GraftQueryException(stmt.text, e.getMessage, e)
     }
 
   /** Typed query (reference QueryAsync<T>, AthenaClient.cs:55-70). */
@@ -130,6 +132,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
           throw new GraftQueryException(sqlText, s"Malformed SQL: ${e.getMessage}", e)
         case e @ (_: IllegalArgumentException | _: IllegalStateException |
                   _: org.apache.spark.sql.AnalysisException |
+                  _: graft.catalog.LegacyTableFormatException |
                   _: graft.catalog.MergeConflictException |
                   _: graft.catalog.CatalogPublishConflictException) =>
           throw new GraftQueryException(sqlText, e.getMessage, e)
@@ -1230,13 +1233,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     val deltas =
       try heads.map { case (st, fromId, head) =>
         // emptiness answered from manifest metadata — zero Spark jobs on
-        // the hot "did anything land" question; a legacy commit without
-        // entries (count unknowable) falls back to a probe of the delta
-        val empty = catalog.appendedRowCountBetween(st._1, st._2, fromId, head) match {
-          case Some(n) => n == 0L
-          case None => catalog.appendsBetween(st._1, st._2, fromId, head).isEmpty
-        }
-        (st, fromId, head, empty)
+        // the hot "did anything land" question
+        (st, fromId, head, catalog.appendedRowCountBetween(st._1, st._2, fromId, head) == 0L)
       }
       catch {
         // non-append commits in range, or a recorded snapshot expired —

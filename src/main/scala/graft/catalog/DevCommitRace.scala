@@ -36,7 +36,7 @@ object DevCommitRace {
       try {
         c.writeCommits("s", "t", commits :+ Snapshot(
           commits.last.snapshotId + 1, commits.last.committedAtMillis + 1,
-          Seq("snap-child"), None, Some("append")), gen)
+          operation = Some("append")), gen)
         println("[race] child commit from stale generation unexpectedly WON")
         1
       } catch {

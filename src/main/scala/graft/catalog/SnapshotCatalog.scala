@@ -21,13 +21,10 @@ import scala.jdk.CollectionConverters._
   * files, each grouping [[DataFileEntry]]s with per-column bounds. A
   * commit writes only the NEW manifest(s) and one manifest-list file —
   * unchanged manifests carry BY NAME — so the commit-log entry is O(1)
-  * per commit whatever the file count (the round-7 log grew
-  * O(files × snapshots) by inlining per-file path lists in `dirs`).
-  * `dirs` remains the legacy entry list (snap-dir or carried-file paths)
-  * of pre-manifest commits; snapshots written by this version always
-  * have `dirs == Nil` and a `manifestList`.
+  * per commit whatever the file count. A snapshot with no data file has
+  * no `manifestList`.
   */
-final case class Snapshot(snapshotId: Long, committedAtMillis: Long, dirs: Seq[String],
+final case class Snapshot(snapshotId: Long, committedAtMillis: Long,
                           schemaJson: Option[String] = None,
                           operation: Option[String] = None,
                           deletes: Seq[String] = Nil,
@@ -59,6 +56,16 @@ final class CommitConflictException(val schema: String, val table: String,
   extends RuntimeException(
     s"Concurrent commit detected on $schema.$table: generation ${expectedGen + 1} " +
       "already exists (another writer committed first); retry from a fresh read")
+
+/** The table is still in the pre-manifest on-disk format (a snapshot
+  * lists data `dirs`, an array-form log, or a log in `commits.json`);
+  * [[SnapshotCatalog.rewriteManifests]] upgrades it once. Not an
+  * IllegalStateException, which some callers take as "recompute".
+  */
+final class LegacyTableFormatException(val table: String)
+  extends RuntimeException(
+    s"Table $table is in the pre-manifest on-disk format; upgrade it once " +
+      s"with ALTER TABLE $table EXECUTE optimize_manifests")
 
 /** Both refs advanced past the merge base with branch-side DML — the
   * table-granular content conflict Nessie reports for a non-replayable
@@ -111,7 +118,12 @@ final case class MergeInsertAction(cond: Option[org.apache.spark.sql.Column],
   *
   *   <warehouse>/<schema>/<table>/
   *     _table_schema.json        — declared StructType (DDL, S3)
-  *     commits.json              — [{snapshotId, committedAtMillis, dirs[]}]
+  *     commits.json              — "[]", the table-exists marker
+  *     commits-<gen>.json        — the commit log, one file per generation:
+  *                                 {segments, schemas, snapshots[]}
+  *     _log_segments/seg-*.json  — frozen, content-addressed log prefixes
+  *     _manifests/ml-*.json      — a snapshot's manifest list
+  *     _manifests/m-*.json       — manifests: data files with bounds
   *     snap-<n>/part-*.parquet   — data files of commit n
   *
   * Every INSERT appends a snapshot (reference AthenaClientTests.cs:351-364:
@@ -1146,7 +1158,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         pinSchema, priorCommits, storedSeqs)
       val names = writeGraftManifests(dataMans)
       at = math.max(s.timestampMs, at + 1) // graft history is monotonic
-      Snapshot(s.id, at, Nil, Some(pinSchema.json),
+      Snapshot(s.id, at, Some(pinSchema.json),
         s.operation.orElse(Some("append")), deletes,
         Some(writeManifestList(dir, names)), None, eqDels)
     }
@@ -1593,15 +1605,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * [[IcebergInterop.decodePartitionValue]]. Delete manifests
     * reference a second, unpartitioned spec (global deletes).
     *
-    * Refused loudly (each would misread on the Iceberg side): legacy
-    * pre-manifest snapshots, nested/unsupported column types,
-    * positional-delete coordinates referencing files outside their
-    * snapshot, a tag/branch name collision (Iceberg refs share one
-    * namespace), an unreconstructible identity partition value, and an
-    * eq delete whose sequence-scoped shadow set differs from
-    * files(appliesTo) on any carrying snapshot (a rollback/restore
-    * carried it across the restore point — third-party readers would
-    * silently read different rows than the engine).
+    * Refused loudly (each would misread on the Iceberg side):
+    * nested/unsupported column types, positional-delete coordinates
+    * referencing files outside their snapshot, a tag/branch name
+    * collision (Iceberg refs share one namespace), an unreconstructible
+    * identity partition value, and an eq delete whose sequence-scoped
+    * shadow set differs from files(appliesTo) on any carrying snapshot (a
+    * rollback/restore carried it across the restore point — third-party
+    * readers would silently read different rows than the engine).
     * Returns the number of snapshots exported.
     */
   def exportIcebergTable(schema: String, table: String,
@@ -1904,9 +1915,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       }
     }
     val snapRefs = units.map { case (s, expId, parent, resolve) =>
-      require(s.dirs.isEmpty,
-        s"$schema.$table snapshot ${s.snapshotId} predates the manifest " +
-          "tier — compact the table to migrate it before exporting")
       val seq = seqOfId(expId)
       val entries = manifestEntriesOf(dir, s)
       val files = entries.map { e =>
@@ -3008,7 +3016,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     if (partCols.nonEmpty)
       writeString(new Path(loc, "_partition_spec.json"), partCols.mkString("\n"))
     val ml = writeManifestList(loc, shardNames)
-    val snap = Snapshot(1L, System.currentTimeMillis(), Nil, Some(full.json),
+    val snap = Snapshot(1L, System.currentTimeMillis(), Some(full.json),
       Some("append"), manifestList = Some(ml))
     writeString(genPath(loc, 0L), commitsJson(Seq(snap), Nil))
     faultPoint("migrate.layout-written")
@@ -3121,7 +3129,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val names = carried ++ newNames
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
     val (id, at) = nextCommit(commits.lastOption)
-    val snap = Snapshot(id, at, Nil, declaredSchema(schema, table).map(_.json),
+    val snap = Snapshot(id, at, declaredSchema(schema, table).map(_.json),
       Some("append"), commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml),
       None, commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
     writeCommits(schema, table, commits :+ snap, gen)
@@ -3180,9 +3188,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       s"add_files_from_table: $srcSchema.$srcTable has pending delete " +
         "files — EXECUTE optimize it first (adopting raw files would " +
         "resurrect deleted rows)")
-    require(sHead.dirs.isEmpty && sHead.manifestList.isDefined,
-      s"add_files_from_table: $srcSchema.$srcTable predates manifest " +
-        "metadata — EXECUTE optimize it first")
     val sKey = fs(sDir).makeQualified(sDir).toUri.getPath
     val entries0 = manifestEntriesOf(sDir, sHead).map { e =>
       e.copy(path = if (e.path.startsWith("/")) e.path else s"$sKey/${e.path}")
@@ -3212,7 +3217,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val names = carried ++ writeManifests(dir, entries0)
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
     val (id, at) = nextCommit(commits.lastOption)
-    val snap = Snapshot(id, at, Nil, Some(declared.json), Some("append"),
+    val snap = Snapshot(id, at, Some(declared.json), Some("append"),
       commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml),
       None, commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
     writeCommits(schema, table, commits :+ snap, gen)
@@ -3221,9 +3226,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** ALTER TABLE RENAME TO (Trino rename): one directory move — the
     * commit log, schema, comments, and every snapshot travel with it;
-    * data files are untouched. Commit `dirs` are relative to the table
-    * dir, so they remain valid at the new location. Cross-schema renames
-    * are allowed like Trino's; the target must not exist.
+    * data files are untouched. Manifest entry paths are relative to the
+    * table dir, so they remain valid at the new location. Cross-schema
+    * renames are allowed like Trino's; the target must not exist.
     */
   def renameTable(schema: String, table: String,
                   newSchema: String, newTable: String): Unit = synchronized {
@@ -3291,7 +3296,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // may not exist in the new schema
     val newEntries = scanEntries(dir, snapDir, bloomOverride = Some(Nil))
     val names = writeManifests(dir, newEntries)
-    val snap = Snapshot(id, at, Nil, Some(df.schema.json), Some("replace"),
+    val snap = Snapshot(id, at, Some(df.schema.json), Some("replace"),
       Nil, Some(writeManifestList(dir, names)))
     val stagedP = new Path(dir, s"_replace_staged-$id.json")
     writeString(stagedP, "{}")
@@ -3341,8 +3346,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val snapDir = snapDirName(schema, table, attemptTag(id))
     writeData(schema, table, df, dir, snapDir)
     faultPoint("insert.staged") // data files on disk, commit not yet attempted
-    // prior files carry by manifest NAME (legacy dirs migrate into a
-    // manifest once); only the new dir is footer-scanned. deletes carry
+    // prior files carry by manifest NAME; only the new dir is
+    // footer-scanned. deletes carry
     // forward: they address (file, pos) coordinates in the PRIOR files,
     // which the append leaves in place
     val (carried, _) = carryManifests(schema, table, commits.lastOption, Set.empty)
@@ -3350,7 +3355,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val names = carried ++
       writeManifests(dir, newEntries)
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
-    val snap = Snapshot(id, at, Nil,
+    val snap = Snapshot(id, at,
       declaredSchema(schema, table).map(_.json), Some("append"),
       commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml), txn,
       commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
@@ -3416,7 +3421,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val names = carried ++
         writeManifests(dir, newEntries)
       val ml = writeManifestList(dir, compactManifestSet(dir, names))
-      val snap = Snapshot(id, at, Nil, declared.map(_.json), Some("overwrite"),
+      val snap = Snapshot(id, at, declared.map(_.json), Some("overwrite"),
         prior.map(_.deletes).getOrElse(Nil), Some(ml), txn, eq)
       faultPoint("upsert.staged") // batch + key file on disk, commit pending
       writeCommits(schema, table, commits :+ snap, gen)
@@ -3764,7 +3769,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val dir = tableDir(schema, table)
     val f = fs(dir)
     val ck = f.makeQualified(dir).toString + "#" + snap.snapshotId + "#" +
-      snap.manifestList.getOrElse("dirs:" + snap.dirs.mkString(","))
+      snap.manifestList.getOrElse("")
     if (snapFileKeysCache.size > 4096) snapFileKeysCache.clear()
     snapFileKeysCache.computeIfAbsent(ck, _ =>
       dataFilePaths(schema, table, snap).map(fileKey(dir, _)).toSet)
@@ -3843,10 +3848,24 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private def writeManifestList(dir: Path, names: Seq[String]): String = {
     val name = s"ml-${java.util.UUID.randomUUID().toString.take(16)}.json"
     val p = new Path(manifestDirPath(dir), name)
+    writeString(p, manifestListJson(names))
+    manifestListCache.put(p.toString, names)
+    name
+  }
+
+  private def manifestListJson(names: Seq[String]): String = {
     val arr = mapper.createArrayNode()
     names.foreach(arr.add)
-    writeString(p, mapper.writeValueAsString(arr))
-    manifestListCache.put(p.toString, names)
+    mapper.writeValueAsString(arr)
+  }
+
+  /** `_manifests/<prefix>-<digest>.json` holding `json`: equal content,
+    * equal name ([[upgradeFormat]] names its manifests and lists so).
+    */
+  private def writeAddressed(dir: Path, prefix: String, json: String): String = {
+    val name = s"$prefix-${digest16(json)}.json"
+    val p = new Path(manifestDirPath(dir), name)
+    if (!fs(p).exists(p)) writeString(p, json)
     name
   }
 
@@ -3883,23 +3902,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private def entryKey(tableKey: String, e: DataFileEntry): String =
     if (e.path.startsWith("/")) e.path else s"$tableKey/${e.path}"
 
-  /** The entries of the manifests a snapshot references. Legacy `dirs`
-    * entries are not among them: [[snapshotEntries]] adds those.
+  /** Every data file a snapshot references, as the entries of its
+    * manifests.
     */
   private def manifestEntriesOf(dir: Path, snap: Snapshot): Seq[DataFileEntry] =
     snap.manifestList.toSeq.flatMap(readManifestList(dir, _))
       .flatMap(readManifest(dir, _))
 
-  /** Every data file a snapshot references, as manifest entries: its
-    * manifests by name, plus legacy `dirs` entries (pre-manifest logs)
-    * resolved by the listing and footer pass [[carryManifests]] and
-    * [[rewriteManifests]] make when they migrate such a snapshot.
-    */
-  private def snapshotEntries(dir: Path, snap: Snapshot): Seq[DataFileEntry] =
-    manifestEntriesOf(dir, snap) ++
-      snap.dirs.flatMap(e => scanEntries(dir, e, bloomOverride = Some(Nil)))
-
-  /** Manifest entries for the data files under a just-written dirs entry:
+  /** Manifest entries for the data files under a just-written snap dir:
     * one footer read per NEW file (driver-side, proportional to the
     * commit's own output only), capturing record count + column bounds so
     * later metadata queries and DML probes never reopen these footers.
@@ -3949,8 +3959,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * every untouched file, the touched files' entries).
     * Manifests with NO touched file carry by NAME — zero bytes rewritten;
     * manifests with touched files have their survivors compacted into one
-    * new carry manifest; legacy `dirs` entries migrate into a manifest
-    * (one listing+footer pass — the last time that table pays it).
+    * new carry manifest.
     */
   private def carryManifests(schema: String, table: String, prior: Option[Snapshot],
                              touchedKeys: Set[String]): (Seq[String], Seq[DataFileEntry]) = {
@@ -3959,21 +3968,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       case None => (Nil, Nil)
       case Some(s) =>
         val mlNames = s.manifestList.toSeq.flatMap(readManifestList(dir, _))
-        if (touchedKeys.isEmpty && s.dirs.isEmpty)
+        if (touchedKeys.isEmpty)
           return (compactManifestSet(dir, mlNames), Nil)
-        val groups: Seq[(Option[String], Seq[DataFileEntry])] =
-          mlNames.map(n => (Some(n): Option[String], readManifest(dir, n))) ++
-            (if (s.dirs.nonEmpty)
-              Seq((None: Option[String], s.dirs.flatMap(e => scanEntries(dir, e))))
-            else Nil)
         val tableKey = fs(dir).makeQualified(dir).toUri.getPath
         def key(e: DataFileEntry) = entryKey(tableKey, e)
         val carried = Vector.newBuilder[String]
         val survivors = Vector.newBuilder[DataFileEntry]
         val touched = Vector.newBuilder[DataFileEntry]
-        groups.foreach { case (nameOpt, entries) =>
-          val (hit, keep) = entries.partition(e => touchedKeys(key(e)))
-          if (hit.isEmpty && nameOpt.isDefined) carried += nameOpt.get
+        mlNames.foreach { n =>
+          val (hit, keep) = readManifest(dir, n).partition(e => touchedKeys(key(e)))
+          if (hit.isEmpty) carried += n
           else {
             touched ++= hit
             survivors ++= keep
@@ -4013,7 +4017,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                                cond: Option[org.apache.spark.sql.Column])
     : Either[Unit, Option[Seq[DataFileEntry]]] =
     (snap, cond) match {
-      case (Some(s), Some(c)) if s.manifestList.isDefined && s.dirs.isEmpty =>
+      case (Some(s), Some(c)) if s.manifestList.isDefined =>
         val dir = tableDir(schema, table)
         val entries = manifestEntriesOf(dir, s)
         // partition-transform projection (hidden partitioning): a
@@ -4259,7 +4263,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       if (useSnapshotSchema)
         snap.flatMap(_.schemaJson).map(j => DataType.fromJson(j).asInstanceOf[StructType])
       else None
-    val entries = entriesOverride.getOrElse(snap.toSeq.flatMap(snapshotEntries(dir, _)))
+    val entries = entriesOverride.getOrElse(snap.toSeq.flatMap(manifestEntriesOf(dir, _)))
     val decl = pinned.orElse(declaredSchema(schema, table)).getOrElse(
       throw new IllegalStateException(s"Table $schema.$table has no schema"))
     if (entries.isEmpty)
@@ -4316,20 +4320,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   def snapshots(schema: String, table: String): Seq[Snapshot] = readCommits(schema, table)
 
   /** Table-relative paths of every data file `snap` references — manifest
-    * entries resolved by name (no listing), legacy `dirs` entries by
-    * listing. The stable metadata view: DML contracts like "this commit
-    * rewrote no data file" are asserted against this set, not against the
-    * storage-layout internals of `Snapshot`.
+    * entries resolved by name (no listing). The stable metadata view: DML
+    * contracts like "this commit rewrote no data file" are asserted
+    * against this set, not against the storage-layout internals of
+    * `Snapshot`.
     */
-  def dataFilePaths(schema: String, table: String, snap: Snapshot): Seq[String] = {
-    val dir = tableDir(schema, table)
-    val tableKey = fs(dir).makeQualified(dir).toUri.getPath
-    manifestEntriesOf(dir, snap).map(_.path) ++
-      snap.dirs.flatMap(e => dataFilesUnder(new Path(dir, e))
-        .map(_.toUri.getPath.stripPrefix(tableKey).stripPrefix("/")))
-  }
+  def dataFilePaths(schema: String, table: String, snap: Snapshot): Seq[String] =
+    manifestEntriesOf(tableDir(schema, table), snap).map(_.path)
 
-  /** Manifest names `snap` references (empty for legacy snapshots) —
+  /** Manifest names `snap` references (empty for a snapshot with no data) —
     * exposes the carry-by-reference contract: an untouched manifest's
     * NAME reappears verbatim in the next snapshot's list.
     */
@@ -4610,10 +4609,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         dropFullyCovered = setsOpt.isEmpty)(f))
 
   /** TRUNCATE TABLE: a METADATA-ONLY commit. The new snapshot references
-    * no data files (an empty `dirs` list reads as the empty table at the
-    * declared schema), and the removed-row count is the parquet-footer
-    * record-count sum over the current snapshot's files — no data is read
-    * or written, whatever the table size. The pre-truncate snapshot stays
+    * no data files (a snapshot with no manifest list reads as the empty
+    * table at the declared schema), and the removed-row count is the
+    * parquet-footer record-count sum over the current snapshot's files —
+    * no data is read or written, whatever the table size. The pre-truncate snapshot stays
     * time-travel-visible exactly like any copy-on-write DML commit.
     */
   def truncateCounted(schema: String, table: String): (Snapshot, Long) = synchronized {
@@ -4640,7 +4639,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         readSnapshot(schema, table, last).count()
       else filesOfSnapshot(schema, table, last).map(_._3).sum - delRows
     val (id, at) = nextCommit(last)
-    val snap = Snapshot(id, at, Nil,
+    val snap = Snapshot(id, at,
       declaredSchema(schema, table).map(_.json), Some("overwrite"))
     writeCommits(schema, table, commits :+ snap, gen)
     (snap, n)
@@ -4775,7 +4774,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * addressing a rewritten file are obsolete (the rewrite already
     * materialized their effect), so survivors are compacted into one fresh
     * delete dir. Maintains the invariant that every delete row references
-    * a file in the snapshot's `dirs` and every (file, pos) appears at most
+    * a data file of the snapshot and every (file, pos) appears at most
     * once — what makes footer arithmetic ([[truncateCounted]]) exact.
     */
   private def carryDeletes(dir: Path, prevDeletes: Seq[String],
@@ -4845,38 +4844,31 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       keepFile = true, keepPos = withPos, entriesOverride = entriesOverride))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
-  /** Non-empty `.parquet` data files under a dirs entry (the entry itself
-    * when the entry names a carried file). Driver-side metadata listing,
-    * proportional to file count.
+  /** Non-empty `.parquet` files under `p` (`p` itself when it names
+    * one). Driver-side metadata listing, proportional to file count.
     */
   private def dataFilesUnder(p: Path): Seq[Path] =
     dataFileStatusesUnder(p).map(_._1)
 
-  /** Recursive file walk via plain `listStatus`: `listFiles(p, true)`
-    * yields LocatedFileStatus, whose CONSTRUCTOR eagerly loads the POSIX
+  /** Non-empty `.parquet` files under `p` with their byte sizes. The walk
+    * uses plain `listStatus`: `listFiles(p, true)` yields
+    * LocatedFileStatus, whose CONSTRUCTOR eagerly loads the POSIX
     * permission — on the stock local filesystem without libhadoop that
     * is a forked `ls` PER FILE (profiled: the dominant remaining
     * driver-side fork source in every commit's footer scan). Plain
     * FileStatus loads permissions lazily and nothing here reads them,
     * so the walk is pure stat calls on any filesystem.
     */
-  private def foreachFileUnder(p: Path)(fn: org.apache.hadoop.fs.FileStatus => Unit): Unit = {
+  private def dataFileStatusesUnder(p: Path): Seq[(Path, Long)] = {
     val f = fs(p)
     val root = try f.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return }
+      catch { case _: java.io.FileNotFoundException => return Nil }
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
     def walk(st: org.apache.hadoop.fs.FileStatus): Unit =
       if (st.isDirectory) f.listStatus(st.getPath).foreach(walk)
-      else fn(st)
+      else if (st.getPath.getName.endsWith(".parquet") && st.getLen > 0)
+        buf += ((st.getPath, st.getLen))
     walk(root)
-  }
-
-  /** Non-empty `.parquet` files under `p` with their byte sizes. */
-  private def dataFileStatusesUnder(p: Path): Seq[(Path, Long)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-    foreachFileUnder(p) { s =>
-      if (s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-        buf += ((s.getPath, s.getLen))
-    }
     buf.toSeq
   }
 
@@ -4905,9 +4897,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       * a commit adds are exempt from them (`appliesTo`), untouched files
       * stay covered.
       */
-    def commit(op: String, dirs: Seq[String], deletes: Seq[String],
-               manifestList: Option[String]): Snapshot = {
-      val snap = Snapshot(id, nextCommit(current)._2, dirs, schemaJson, Some(op), deletes,
+    def commit(op: String, deletes: Seq[String], manifestList: Option[String]): Snapshot = {
+      val snap = Snapshot(id, nextCommit(current)._2, schemaJson, Some(op), deletes,
         manifestList, txn, prevEq)
       writeCommits(schema, table, commits :+ snap, gen)
       snap
@@ -4915,7 +4906,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
     /** Commits the current data files, carried by reference, with `deletes`. */
     def keepFiles(op: String, deletes: Seq[String]): Snapshot =
-      commit(op, current.fold(Seq.empty[String])(_.dirs), deletes, current.flatMap(_.manifestList))
+      commit(op, deletes, current.flatMap(_.manifestList))
 
     /** Commits the current state unchanged: a metadata-only no-op. */
     def noOp(): Snapshot = keepFiles("overwrite", prevDeletes)
@@ -4957,7 +4948,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val maybe = candidates.filterNot(e => mustKeys.contains(entryKey(rc.tableKey, e)))
     if (mustKeys.isEmpty) Right(new ProbeScope(entries0, candidates, mustKeys, 0L))
     else if (maybe.isEmpty)
-      Left((rc.commit(coveredOp, Nil, Nil, manifestListWith(rc, carryExcept(rc, mustKeys)._1, None)),
+      Left((rc.commit(coveredOp, Nil, manifestListWith(rc, carryExcept(rc, mustKeys)._1, None)),
         mustRows))
     else Right(new ProbeScope(Some(maybe), candidates, mustKeys, mustRows))
   }
@@ -5002,7 +4993,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val ml = manifestListWith(rc, carried, rewrite(touched))
     val deletes = touchedRaw.fold(Seq.empty[String])(
       carryDeletes(rc.dir, rc.prevDeletes, _, s"${attemptTag(rc.id)}-carry"))
-    rc.commit("overwrite", Nil, deletes, ml)
+    rc.commit("overwrite", deletes, ml)
   }
 
   /** Merge-on-read commit tail (Iceberg v2 row-level semantics): `coords`
@@ -5023,7 +5014,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val op = if (pureDelete && (n > 0L || dropKeys.nonEmpty)) "delete" else "overwrite"
     val snap =
       if (data.isEmpty && dropKeys.isEmpty) rc.keepFiles(op, deletes)
-      else rc.commit(op, Nil, deletes, manifestListWith(rc, carryExcept(rc, dropKeys)._1, data))
+      else rc.commit(op, deletes, manifestListWith(rc, carryExcept(rc, dropKeys)._1, data))
     (snap, n)
   }
 
@@ -5421,7 +5412,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     writeData(schema, table, df, dir, snapDir)
     val newEntries = scanEntries(dir, snapDir)
     val names = writeManifests(dir, newEntries)
-    val snap = Snapshot(id, at, Nil,
+    val snap = Snapshot(id, at,
       declaredSchema(schema, table).map(_.json), Some("replace"),
       Nil, Some(writeManifestList(dir, names)))
     writeCommits(schema, table, commits :+ snap, gen)
@@ -5443,16 +5434,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val commits = readCommits(schema, table)
     val rows = commits.zip(None +: commits.map(c => Some(c.snapshotId))).map {
       case (c, parent) =>
-        // operation is stamped at commit time (round-5 advice); the dir-
-        // suffix inference remains ONLY as the legacy fallback for commit
-        // logs written before the field existed
-        val op = c.operation.getOrElse {
-          if (c.dirs.lastOption.exists(_.endsWith("-compacted"))) "replace"
-          else if (c.dirs.lastOption.exists(_.endsWith("-rewrite"))) "overwrite"
-          else "append"
-        }
+        // operation is stamped at commit time (round-5 advice)
         (new java.sql.Timestamp(c.committedAtMillis), c.snapshotId,
-          parent.map(java.lang.Long.valueOf).orNull, op)
+          parent.map(java.lang.Long.valueOf).orNull, c.operation.getOrElse("append"))
     }
     import spark.implicits._
     rows.toDF("committed_at", "snapshot_id", "parent_id", "operation")
@@ -5482,7 +5466,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   def filesMeta(schema: String, table: String): DataFrame = {
     import spark.implicits._
     val dir = tableDir(schema, table)
-    val conf = spark.sparkContext.hadoopConfiguration
     val data = currentFiles(schema, table).map { case (path, _, recordCount, size) =>
       (0, path, "PARQUET", recordCount, size)
     }
@@ -5567,16 +5550,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   /** [[currentFiles]] against an explicit snapshot — callers that already
     * hold a (commits, gen) read derive file metadata from THAT state
     * instead of re-reading the log (keeps count+commit atomic under
-    * cross-process writers). Manifest-tracked files are served straight
-    * from manifest entries — record counts and sizes were captured at
-    * commit time, so NO parquet footer is opened; only legacy (pre-
-    * manifest) `dirs` entries pay a listing + footer pass.
+    * cross-process writers). Files are served straight from manifest
+    * entries — record counts and sizes were captured at commit time, so
+    * NO parquet footer is opened.
     */
   private def filesOfSnapshot(schema: String, table: String,
                               snap: Option[Snapshot]): Seq[(String, String, Long, Long)] = {
     val dir = tableDir(schema, table)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fromManifests = snap.toSeq.flatMap(manifestEntriesOf(dir, _)).map { e =>
+    snap.toSeq.flatMap(manifestEntriesOf(dir, _)).map { e =>
       val segs = e.path.split('/')
       // fully-qualified path (scheme included), matching what a listing-
       // based FileStatus or `_metadata.file_path` reports; files adopted
@@ -5585,36 +5566,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                  else segs.drop(1).dropRight(1).mkString("/")
       (entryAbsPath(dir, e).toString, part, e.rows, e.bytes)
     }
-    fromManifests ++ snap.toSeq
-      .flatMap(_.dirs)
-      .flatMap { d =>
-        val snapRoot = new Path(dir, d)
-        // a dirs entry is either a snap dir or (after a file-pruned CoW
-        // commit) a single carried file nested inside one — the hive
-        // partition subpath is always relative to the SNAP dir, i.e. the
-        // entry's first path segment
-        val snapBase = new Path(dir, d.split('/').head)
-        // partitioned tables nest col=value dirs below the snap dir;
-        // plain-listStatus walk — see foreachFileUnder (no per-file forks)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
-        foreachFileUnder(snapRoot) { s =>
-          if (s.getPath.getName.endsWith(".parquet") && s.getLen > 0) {
-            // compare scheme-less URI paths: the listed status carries a
-            // `file:`/`hdfs:` scheme the constructed root may not
-            val rel = s.getPath.getParent.toUri.getPath
-              .stripPrefix(snapBase.toUri.getPath).stripPrefix("/")
-            // NO_FILTER: row-group metadata carries the record counts
-            // (SKIP_ROW_GROUPS reads a leaner footer but zeroes out
-            // exactly the numbers we need)
-            val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-              conf, s.getPath,
-              org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-            buf += ((s.getPath.toString, rel,
-              footer.getBlocks.asScala.map(_.getRowCount).sum, s.getLen))
-          }
-        }
-        buf.toSeq
-      }
   }
 
   /** `"t$refs"`: named refs (Trino Iceberg's $refs table) — main, every
@@ -5639,7 +5590,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** `"t$manifests"`: the current snapshot's manifest files with entry
     * counts and byte sizes — the metadata ABOUT the metadata (Trino
-    * Iceberg's $manifests). Legacy dirs-only snapshots list no rows.
+    * Iceberg's $manifests).
     */
   def manifestsMeta(schema: String, table: String): DataFrame = {
     import spark.implicits._
@@ -5725,10 +5676,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** `$metadata_log_entries` (Trino Iceberg's metadata-log table): one
     * row per commit-log metadata file still on disk — the generation
-    * files ARE the metadata log (plus a legacy `commits.json` when
-    * present). Reports each file's modification time, path, and the
-    * latest snapshot id it declares. Generations GC past a slack of 8,
-    * so the log stays bounded like Iceberg's
+    * files ARE the metadata log. Reports each file's modification time,
+    * path, and the latest snapshot id it declares. Generations GC past a
+    * slack of 8, so the log stays bounded like Iceberg's
     * `write.metadata.previous-versions-max`.
     */
   def metadataLogEntriesMeta(schema: String, table: String): DataFrame = {
@@ -5737,12 +5687,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     import spark.implicits._
     val logs =
       if (!f.exists(dir)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else f.listStatus(dir).filter { s =>
-        val n = s.getPath.getName
-        n == "commits.json" || commitGenRe.pattern.matcher(n).matches()
-      }.sortBy(_.getPath.getName)
+      else f.listStatus(dir).filter(s => commitGenRe.pattern.matcher(s.getPath.getName).matches())
+        .sortBy(_.getPath.getName)
     logs.map { s =>
-      val snaps = parseLog(dir, readString(s.getPath))
+      val snaps = parseLog(dir, readString(s.getPath), s"$schema.$table")
       (new java.sql.Timestamp(s.getModificationTime), s.getPath.toString,
         snaps.lastOption.map(_.snapshotId))
     }.toSeq.toDF("timestamp", "file", "latest_snapshot_id")
@@ -5916,7 +5864,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         skipChangeCommits).flatMap { case (cur, added) =>
       if (added.isEmpty) None
       else {
-        val entries = snapshotEntries(dir, cur).filter(e => added.contains(e.path))
+        val entries = manifestEntriesOf(dir, cur).filter(e => added.contains(e.path))
         Some(readSnapshotMeta(schema, table, Some(cur),
           useSnapshotSchema = true, entriesOverride = Some(entries)))
       }
@@ -5980,23 +5928,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   /** Metadata-only row count of what [[appendsBetween]] would return —
     * manifest entries carry commit-time record counts, so "did anything
     * land since snapshot X" costs zero Spark jobs (the incremental-MV
-    * refresh asks this on every trigger). None when a legacy dirs-backed
-    * commit in range has no manifest entries (count unknowable without a
-    * scan); throws exactly like [[appendsBetween]] on non-append commits.
+    * refresh asks this on every trigger); throws exactly like
+    * [[appendsBetween]] on non-append commits.
     */
   def appendedRowCountBetween(schema: String, table: String,
-                              fromSnapshotId: Long, toSnapshotId: Long): Option[Long] = {
+                              fromSnapshotId: Long, toSnapshotId: Long): Long = {
     val dir = tableDir(schema, table)
-    val perCommit = appendOnlyCommits(schema, table, fromSnapshotId, toSnapshotId,
-        skipChangeCommits = false).map { case (cur, added) =>
-      if (added.isEmpty) Some(0L)
-      else {
-        val entries = manifestEntriesOf(dir, cur).filter(e => added.contains(e.path))
-        if (entries.size == added.size) Some(entries.iterator.map(_.rows).sum)
-        else None
-      }
-    }
-    if (perCommit.exists(_.isEmpty)) None else Some(perCommit.flatten.sum)
+    appendOnlyCommits(schema, table, fromSnapshotId, toSnapshotId,
+        skipChangeCommits = false).iterator.map { case (cur, added) =>
+      manifestEntriesOf(dir, cur).iterator.filter(e => added.contains(e.path)).map(_.rows).sum
+    }.sum
   }
 
   /** Scheme-independent path form for cross-domain file comparison:
@@ -6099,10 +6040,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       throw new IllegalArgumentException(
         s"Snapshot $snapshotId does not exist in $schema.$table"))
     val (id, at) = nextCommit(commits.lastOption)
-    // operation recorded AT COMMIT TIME — inferring it from reused dir
-    // names would report the target snapshot's kind instead (round-5
-    // advice: a rollback reusing append dirs read back as 'append')
-    val snap = Snapshot(id, at, target.dirs, target.schemaJson, Some("rollback"),
+    // operation recorded AT COMMIT TIME — a rollback reusing the
+    // target's manifest list is still a 'rollback' (round-5 advice)
+    val snap = Snapshot(id, at, target.schemaJson, Some("rollback"),
       target.deletes, target.manifestList, None, target.eqDeletes)
     // the rollback also restores the declared schema of the target era so
     // current reads match what the rolled-back-to snapshot exposed
@@ -6128,13 +6068,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   // ---- maintenance (reference config surface: expire-snapshots /
   //      remove-orphan-files, TrinoConfigurationProvider.cs:62-63) ----
 
-  /** Compact the table: rewrite the current state into `numFiles` files as
-    * a NEW snapshot whose `dirs` references only the compacted directory
-    * (a rewrite commit, not an append). Reads keep working against older
-    * snapshots until `expireSnapshots` runs, at which point the
-    * pre-compaction dirs become unreferenced and are physically reclaimed
-    * — the small-files lifecycle at scale: stream in, compact, expire.
-    */
   /** `ALTER TABLE t EXECUTE optimize_manifests` (Trino Iceberg's
     * manifest-compaction procedure; Spark Iceberg calls it
     * rewrite_manifests): rewrite the CURRENT snapshot's manifest set into
@@ -6145,27 +6078,127 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * explicit full pass for a table whose manifest set fragmented under
     * sustained DML — at 100 TB the scan-planning cost is proportional to
     * manifest count × size, so a periodic rewrite keeps plan time flat.
-    * Returns the manifest count after the rewrite. Legacy `dirs` entries
-    * migrate into manifests as part of the pass.
+    * Returns the manifest count after the rewrite. A table still in the
+    * pre-manifest on-disk format is upgraded first ([[upgradeFormat]]).
     */
   def rewriteManifests(schema: String, table: String): Long = synchronized {
+    require(tableExists(schema, table), s"Table $schema.$table does not exist")
+    upgradeFormat(schema, table)
     val dir = tableDir(schema, table)
     val (commits, gen) = readCommitsWithGen(schema, table)
     require(commits.nonEmpty, s"Nothing to rewrite in $schema.$table")
     val last = commits.last
-    val entries = manifestEntriesOf(dir, last) ++
-      last.dirs.flatMap(e => scanEntries(dir, e))
+    val entries = manifestEntriesOf(dir, last)
     val names =
       if (entries.isEmpty) Nil
       else entries.grouped(512).map(g => writeManifest(dir, g.toSeq)).toSeq
     val ml = writeManifestList(dir, names)
     val (id, at) = nextCommit(Some(last))
-    val snap = Snapshot(id, at, Nil, declaredSchema(schema, table).map(_.json),
+    val snap = Snapshot(id, at, declaredSchema(schema, table).map(_.json),
       Some("replace"), last.deletes, Some(ml), None, last.eqDeletes)
     writeCommits(schema, table, commits :+ snap, gen)
     names.size.toLong
   }
 
+  /** The one-way upgrade from the pre-manifest on-disk format (Iceberg's
+    * format upgrades are one-way too,
+    * iceberg.apache.org/spec/#format-versioning), and the only place that
+    * decodes it. Every log of the table the readers refuse — the main log
+    * (generation files or a pre-versioning `commits.json`), each branch
+    * log, the `_tags.json` pins and the catalog-tag members pinning this
+    * table — is rewritten in the current form, each ref atomically on its
+    * own. A snapshot keeps its id, commit time, schema, delete files and
+    * txn; its `dirs` become a manifest list, and a missing operation is
+    * stamped from the last dir's name. Each distinct `dirs` entry is
+    * footer-scanned once into manifests that every snapshot naming it
+    * references. Manifests and lists are content-addressed, so a snapshot
+    * two refs share stays equal, and a rerun after a crash between two
+    * refs' writes reproduces the names the upgraded refs hold.
+    */
+  private def upgradeFormat(schema: String, table: String): Unit = {
+    import com.fasterxml.jackson.databind.JsonNode
+    val dir = tableDir(schema, table)
+    val f = fs(dir)
+    val qn = s"$schema.$table"
+    def refused(read: => Any): Boolean =
+      try { read; false }
+      catch {
+        case _: LegacyTableFormatException => true
+        case _: java.io.FileNotFoundException => false // GC'd since the listing
+      }
+    val entryManifests = scala.collection.mutable.Map.empty[String, Seq[String]]
+    def upgraded(n: JsonNode, schemas: Map[Int, String]): Snapshot = {
+      val s = snapshotFields(n, schemas)
+      val dirs = Option(n.get("dirs")).toSeq.flatMap(_.elements.asScala.map(_.asText))
+      if (dirs.isEmpty) s
+      else {
+        val names = s.manifestList.toSeq.flatMap(readManifestList(dir, _)) ++
+          dirs.flatMap(e => entryManifests.getOrElseUpdate(e,
+            scanEntries(dir, e).sortBy(_.path).grouped(SnapshotCatalog.manifestEntryCap)
+              .map(g => writeAddressed(dir, "m", Manifests.toJson(g))).toSeq))
+        val op =
+          if (dirs.last.endsWith("-compacted")) "replace"
+          else if (dirs.last.endsWith("-rewrite")) "overwrite"
+          else "append"
+        s.copy(operation = s.operation.orElse(Some(op)),
+          manifestList = Some(writeAddressed(dir, "ml", manifestListJson(names))))
+      }
+    }
+    // a log of either form: its frozen segments, then an array of
+    // snapshots with inline schemas or the object form's snapshots
+    def upgradedLog(json: String): Seq[Snapshot] = {
+      val root = mapper.readTree(json)
+      segmentNamesIn(root).flatMap(n =>
+        upgradedLog(readString(new Path(logSegmentsDir(dir), n)))) ++
+        (if (root.isArray) root.elements.asScala.map(upgraded(_, Map.empty))
+         else root.get("snapshots").elements.asScala.map(upgraded(_, schemasOf(root))))
+    }
+    val marker = new Path(dir, "commits.json")
+    (this +: listBranches(schema, table).map(branch)).foreach { ref =>
+      val gens = f.listStatus(dir).iterator.map(_.getPath).flatMap(p => p.getName match {
+        case ref.commitGenRe(g) => Some(g.toLong -> p)
+        case _                  => None
+      }).toSeq.sortBy(_._1)
+      // the newest generation, else a pre-versioning log in the marker
+      val head = gens.lastOption.map { case (g, p) => (readString(p), g) }.orElse(
+        Option.when((ref eq this) && f.exists(marker))((readString(marker), 0L))
+          .filter(_._1.trim != "[]"))
+      for ((json, g) <- head if refused(parseLog(dir, json, qn))) {
+        ref.writeCommits(schema, table, upgradedLog(json), g, carrySegments = false)
+        faultPoint("upgrade.ref-written")
+      }
+      // generations still in the old format are unreadable: drop them
+      gens.foreach { case (_, p) =>
+        if (refused(parseLog(dir, readString(p), qn))) f.delete(p, false) }
+    }
+    if (f.exists(marker) && readString(marker).trim != "[]") writeString(marker, "[]")
+    val tp = tagsPath(schema, table)
+    if (f.exists(tp) && refused(listTags(schema, table))) {
+      writeTags(schema, table, mapper.readTree(readString(tp)).properties().asScala
+        .map(e => e.getKey -> upgraded(e.getValue, Map.empty)).toMap)
+      faultPoint("upgrade.ref-written")
+    }
+    listCatalogTags().filter(n => refused(catalogTagSnapshot(n, schema, table))).foreach { n =>
+      val p = catalogTagPath(n)
+      val root = mapper.readTree(readString(p))
+      root.get("members").elements.asScala
+        .filter(m => m.get("schema").asText == schema && m.get("table").asText == table)
+        .foreach(m => snapshotIntoNode(upgraded(m.get("snapshot"), Map.empty),
+          m.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].putObject("snapshot")))
+      writeString(p, mapper.writeValueAsString(root))
+      SnapshotCatalog.catalogTagCache.clear()
+      faultPoint("upgrade.ref-written")
+    }
+  }
+
+  /** Compact the table: rewrite the current state into `numFiles` files as
+    * a NEW snapshot whose manifests reference only the compacted files (a
+    * rewrite commit, not an append). Reads keep working against older
+    * snapshots until `expireSnapshots` runs, at which point the
+    * pre-compaction files become unreferenced and are physically
+    * reclaimed — the small-files lifecycle at scale: stream in, compact,
+    * expire.
+    */
   def compact(schema: String, table: String, numFiles: Int = 1,
               where: Option[org.apache.spark.sql.Column] = None): Snapshot = synchronized {
     val dir = tableDir(schema, table)
@@ -6213,7 +6246,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // fold in one rewrite (delete files cannot be split across a carried/
     // rewritten boundary); untouched files carry by manifest reference.
     val scoped: Option[Seq[DataFileEntry]] = where match {
-      case Some(c) if last.manifestList.isDefined && last.dirs.isEmpty =>
+      case Some(c) if last.manifestList.isDefined =>
         val all = manifestEntriesOf(dir, last)
         val cand = restrictByBounds(schema, table, Some(last), Some(c)) match {
           case Left(())     => Seq.empty[DataFileEntry]
@@ -6234,7 +6267,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val snap = scoped match {
       case Some(entries) if entries.isEmpty =>
         // bounds prove nothing matches: metadata-only replace, state kept
-        Snapshot(id, at, last.dirs, declaredSchema(schema, table).map(_.json),
+        Snapshot(id, at, declaredSchema(schema, table).map(_.json),
           Some("replace"), last.deletes, last.manifestList, None, last.eqDeletes)
       case Some(entries) =>
         val rows = withDerivedPartitionCols(schema, table,
@@ -6249,7 +6282,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           writeManifests(dir, newEntries)
         // scoped compaction: the rewritten subset read its eq-shadowed
         // rows out; carried files stay covered by the carried eq-deletes
-        Snapshot(id, at, Nil, declaredSchema(schema, table).map(_.json),
+        Snapshot(id, at, declaredSchema(schema, table).map(_.json),
           Some("replace"), Nil,
           Some(writeManifestList(dir, compactManifestSet(dir, names))),
           None, last.eqDeletes)
@@ -6259,7 +6292,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         writeCompacted(withDerivedPartitionCols(schema, table, readLatest(schema, table)))
         // rewrite: references only its own (freshly-manifested) files;
         // the compaction read applied pending deletes, so none carry
-        Snapshot(id, at, Nil, declaredSchema(schema, table).map(_.json),
+        Snapshot(id, at, declaredSchema(schema, table).map(_.json),
           Some("replace"), Nil,
           Some(writeManifestList(dir, writeManifests(dir, scanEntries(dir, snapDir)))))
     }
@@ -6305,12 +6338,11 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   }
 
   /** Expire snapshots committed before `olderThanMillis`, keeping at least
-    * the latest. Data dirs still referenced by a surviving snapshot are
-    * kept (commits are cumulative appends, so a surviving snapshot's `dirs`
-    * covers everything it can see); dirs referenced only by expired
-    * snapshots are deleted. Time travel earlier than the oldest surviving
-    * snapshot then reads as an empty table — the same contract as Iceberg's
-    * expire_snapshots.
+    * the latest. Data files, manifests and delete files still referenced
+    * by a surviving snapshot (or a branch or tag) are kept; those
+    * referenced only by expired snapshots are deleted. Time travel earlier
+    * than the oldest surviving snapshot then reads as an empty table — the
+    * same contract as Iceberg's expire_snapshots.
     */
   def expireSnapshots(schema: String, table: String, olderThanMillis: Long): Seq[Long] = synchronized {
     val dir = tableDir(schema, table)
@@ -6345,18 +6377,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // must keep reading)
     val protectedSnaps = kept ++ refSnapshots(schema, table)
     val referenced = protectedSnaps
-      .flatMap(c => c.dirs ++ c.deletes ++ c.eqDeletes.map(_.path)).toSet
+      .flatMap(c => c.deletes ++ c.eqDeletes.map(_.path)).toSet
     val orphanEntries = reallyExpired
-      .flatMap(c => c.dirs ++ c.deletes ++ c.eqDeletes.map(_.path)).toSet -- referenced
+      .flatMap(c => c.deletes ++ c.eqDeletes.map(_.path)).toSet -- referenced
     val f = fs(dir)
     val tableKey = f.makeQualified(dir).toUri.getPath
-    // file-granular CoW entries can nest inside an expired snapshot's DIR
-    // entry (a kept snapshot carrying `snapA/part-x.parquet` while snapA's
-    // own commit expires), so reclamation is file-accurate: an expired
-    // entry is deleted wholesale only when no kept snapshot references any
-    // file under it; otherwise only its unreferenced files go. Kept
-    // MANIFESTS protect their files the same way (no listing — the
-    // manifest names them).
+    // reclamation is file-accurate: an expired delete entry is deleted
+    // wholesale only when no kept snapshot references any file under it;
+    // otherwise only its unreferenced files go. Kept MANIFESTS protect
+    // their data files the same way (no listing — the manifest names
+    // them).
     val keptFiles: Set[String] =
       referenced.flatMap(e => dataFilesUnder(new Path(dir, e)).map(_.toUri.getPath)) ++
         protectedSnaps.flatMap(c => manifestEntriesOf(dir, c)).map(e => entryKey(tableKey, e))
@@ -6423,14 +6453,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // all refs' snapshots count as referencing: main log, branch logs,
     // pinned tags — a branch-only snap dir is NOT debris
     val commits = readCommits(schema, table) ++ refSnapshots(schema, table)
-    // compare TOP-LEVEL names: a file-granular CoW entry
-    // (`snapA/part-x.parquet`) references its enclosing snap dir, and a
-    // manifest entry references the snap dir its path starts with —
-    // manifest-era snapshots have empty `dirs`, so WITHOUT resolving
-    // manifests every live snap dir would read as an orphan
+    // compare TOP-LEVEL names: a manifest entry references the snap dir
+    // its path starts with
     val referenced = commits.flatMap(c =>
-      c.dirs ++ c.deletes ++ c.eqDeletes.map(_.path) ++
-        manifestEntriesOf(dir, c).map(_.path))
+      c.deletes ++ c.eqDeletes.map(_.path) ++ manifestEntriesOf(dir, c).map(_.path))
       .map(_.split('/').head).toSet
     val keep = referenced ++
       Set("commits.json", "_table_schema.json", "_partition_spec.json",
@@ -6438,14 +6464,13 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         "_tags.json", "_bloom_columns.json", "_log_segments",
         "_properties.json", "_identity", "_iceberg_source")
     // inside _log_segments: frozen log segments no surviving log file
-    // (any generation of any ref, or a legacy commits.json) references.
+    // (any generation of any ref) references.
     // Every log is read BEFORE anything is deleted, and a log that cannot
     // be read aborts the sweep: its segments would otherwise look
     // unreferenced and be deleted with it.
     val segRef = f.listStatus(dir).iterator.map(_.getPath).filter { p =>
       val n = p.getName
-      n == "commits.json" || commitGenRe.pattern.matcher(n).matches() ||
-        branchLogRe.pattern.matcher(n).matches()
+      commitGenRe.pattern.matcher(n).matches() || branchLogRe.pattern.matcher(n).matches()
     }.flatMap { p =>
       try {
         val root = mapper.readTree(readString(p))
@@ -6664,7 +6689,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       writeManifests(dir, added)
     val ml = writeManifestList(dir, compactManifestSet(dir, names))
     val (id, at) = nextCommit(Some(mainHead))
-    val snap = Snapshot(id, at, mainHead.dirs,
+    val snap = Snapshot(id, at,
       declaredSchema(schema, table).map(_.json), Some("append"),
       mainHead.deletes, Some(ml), None, mainHead.eqDeletes)
     writeCommits(schema, table, mainC :+ snap, mainGen)
@@ -6683,7 +6708,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val p = tagsPath(schema, table)
     if (!fs(p).exists(p)) return Map.empty
     mapper.readTree(readString(p)).properties().asScala
-      .map(e => e.getKey -> snapshotFromNode(e.getValue)).toMap
+      .map(e => e.getKey -> snapshotFromNode(e.getValue, s"$schema.$table")).toMap
   }
 
   def createTag(schema: String, table: String, name: String,
@@ -6823,7 +6848,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   /** The pinned snapshot catalog tag `name` records for `schema.table`
     * (None when no such tag, or the tag does not pin this table). Tag
     * files are immutable → parsed members cache process-wide by
-    * (path, mtime, length) like ref states.
+    * (path, mtime, length) like ref states. A member's snapshot decodes
+    * on lookup, so a member of another table still in the pre-manifest
+    * format fails only that table's reads.
     */
   private[catalog] def catalogTagSnapshot(name: String, schema: String,
                                           table: String): Option[Snapshot] = {
@@ -6838,10 +6865,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val members = SnapshotCatalog.catalogTagCache.computeIfAbsent(key, _ => {
       val root = mapper.readTree(readString(p))
       root.get("members").elements.asScala.map(m =>
-        (m.get("schema").asText, m.get("table").asText,
-          snapshotFromNode(m.get("snapshot")))).toSeq
+        (m.get("schema").asText, m.get("table").asText, m.get("snapshot"))).toSeq
     })
-    members.collectFirst { case (s, t, snap) if s == schema && t == table => snap }
+    members.collectFirst { case (s, t, snap) if s == schema && t == table =>
+      snapshotFromNode(snap, s"$schema.$table") }
   }
 
   // ---- catalog-level refs: multi-table branches with ONE atomic
@@ -7127,7 +7154,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       compactManifestSet(dir, carried ++ writeManifests(dir, added)))
     val id = math.max(mainHead.snapshotId, bc.last.snapshotId) + 1
     val at = nextCommit(Some(mainHead))._2
-    val snap = Snapshot(id, at, mainHead.dirs,
+    val snap = Snapshot(id, at,
       declaredSchema(schema, table).map(_.json), Some("append"),
       mainHead.deletes, Some(ml), None, mainHead.eqDeletes)
     branch(name).writeCommits(schema, table, mainC :+ snap, bGen)
@@ -7261,8 +7288,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   // a typed [[CommitConflictException]], never a clobbered log: the
   // optimistic-concurrency contract the reference gets from Trino+Nessie
   // (TrinoConfigurationProvider.cs:45-47). Readers resolve the max
-  // generation present; a legacy single `commits.json` (pre-versioning
-  // layout) reads as generation 0.
+  // generation present. `commits.json` is the table-exists marker ("[]");
+  // with no generation file yet it reads as the empty log at generation 0.
 
   /** Commit-log file prefix — "commits" for the main ref; a branch view
     * ([[branch]]) overrides it to `branch-<name>`, which makes EVERY
@@ -7311,11 +7338,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val result =
       if (gens.nonEmpty) {
         val g = gens.max
-        (parseLog(dir, readString(genPath(dir, g))), g)
+        (parseLog(dir, readString(genPath(dir, g)), s"$schema.$table"), g)
       } else if (logPrefix == "commits") {
-        val legacy = new Path(dir, "commits.json")
-        if (!f.exists(legacy)) (Nil, -1L)
-        else (parseCommits(readString(legacy)), 0L)
+        val marker = new Path(dir, "commits.json")
+        if (!f.exists(marker)) (Nil, -1L)
+        else if (readString(marker).trim == "[]") (Nil, 0L)
+        else throw new LegacyTableFormatException(s"$schema.$table") // pre-versioning log
       } else (Nil, -1L) // a ref with no log yet
     if (staged.nonEmpty) promoteReplaceStaged(dir, result._1, staged)
     result
@@ -7357,34 +7385,39 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private def readCommits(schema: String, table: String): Seq[Snapshot] =
     readCommitsWithGen(schema, table)._1
 
-  /** Two log shapes parse: the legacy ARRAY of snapshots (each carrying
-    * its full schemaJson inline) and the current OBJECT form
-    * `{"schemas": {id: json}, "snapshots": [...]}` where each snapshot
-    * carries a `schemaId` — Iceberg's schema-id model: a table with 10⁴
-    * commits and one schema stores that schema ONCE, not 10⁴ times (the
-    * schema was the dominant per-snapshot byte term).
+  /** The log's object form `{"schemas": {id: json}, "snapshots": [...]}`:
+    * each snapshot carries a `schemaId` — Iceberg's schema-id model: a
+    * table with 10⁴ commits and one schema stores that schema ONCE, not
+    * 10⁴ times (the schema was the dominant per-snapshot byte term). The
+    * pre-manifest array form is refused ([[LegacyTableFormatException]]).
     */
-  private def parseCommits(json: String): Seq[Snapshot] =
-    parseCommitsNode(mapper.readTree(json))
-
-  private def parseCommitsNode(root: com.fasterxml.jackson.databind.JsonNode): Seq[Snapshot] = {
-    if (root.isArray)
-      root.elements.asScala.map(snapshotFromNode(_, Map.empty)).toSeq
-    else {
-      val schemas: Map[Int, String] = Option(root.get("schemas")).map(
-        _.properties().asScala.map(e => e.getKey.toInt -> e.getValue.asText).toMap)
-        .getOrElse(Map.empty)
-      root.get("snapshots").elements.asScala
-        .map(snapshotFromNode(_, schemas)).toSeq
-    }
+  private def parseCommitsNode(root: com.fasterxml.jackson.databind.JsonNode,
+                               table: String): Seq[Snapshot] = {
+    if (root.isArray) throw new LegacyTableFormatException(table)
+    val schemas = schemasOf(root)
+    root.get("snapshots").elements.asScala.map(snapshotFromNode(_, table, schemas)).toSeq
   }
 
-  private def snapshotFromNode(n: com.fasterxml.jackson.databind.JsonNode,
-                               schemas: Map[Int, String] = Map.empty): Snapshot =
+  /** A log's shared schema table: schema id → schema JSON. */
+  private def schemasOf(root: com.fasterxml.jackson.databind.JsonNode): Map[Int, String] =
+    Option(root.get("schemas")).map(
+      _.properties().asScala.map(e => e.getKey.toInt -> e.getValue.asText).toMap)
+      .getOrElse(Map.empty)
+
+  /** One snapshot of `table`'s metadata. A snapshot that lists data
+    * `dirs` is the pre-manifest format and is refused.
+    */
+  private def snapshotFromNode(n: com.fasterxml.jackson.databind.JsonNode, table: String,
+                               schemas: Map[Int, String] = Map.empty): Snapshot = {
+    if (Option(n.get("dirs")).exists(_.size > 0)) throw new LegacyTableFormatException(table)
+    snapshotFields(n, schemas)
+  }
+
+  private def snapshotFields(n: com.fasterxml.jackson.databind.JsonNode,
+                             schemas: Map[Int, String]): Snapshot =
     Snapshot(
       n.get("snapshotId").asLong,
       n.get("committedAtMillis").asLong,
-      n.get("dirs").elements.asScala.map(_.asText).toSeq,
       Option(n.get("schemaJson")).filterNot(_.isNull).map(_.asText)
         .orElse(Option(n.get("schemaId")).filterNot(_.isNull)
           .flatMap(id => schemas.get(id.asInt))),
@@ -7410,8 +7443,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                                schemaIds: Map[String, Int] = Map.empty): Unit = {
     o.put("snapshotId", s.snapshotId)
     o.put("committedAtMillis", s.committedAtMillis)
-    val d = o.putArray("dirs")
-    s.dirs.foreach(d.add)
     s.schemaJson.foreach { j =>
       schemaIds.get(j) match {
         case Some(id) => o.put("schemaId", id)
@@ -7489,61 +7520,70 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     */
   private def writeLogSegment(dir: Path, snaps: Seq[Snapshot]): String = {
     val json = commitsJson(snaps)
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val name = s"seg-$digest.json"
+    val name = s"seg-${digest16(json)}.json"
     val p = new Path(logSegmentsDir(dir), name)
     if (!fs(p).exists(p)) writeString(p, json)
     SnapshotCatalog.logSegmentCache.put(p.toString, snaps)
     name
   }
 
-  private def readLogSegment(dir: Path, name: String): Seq[Snapshot] = {
+  private def readLogSegment(dir: Path, name: String, table: String): Seq[Snapshot] = {
     val p = new Path(logSegmentsDir(dir), name)
     SnapshotCatalog.logSegmentCache.computeIfAbsent(p.toString,
-      _ => parseCommits(readString(p)))
+      _ => parseCommitsNode(mapper.readTree(readString(p)), table))
   }
 
-  /** Segment names a log file references (empty for legacy / flat). */
+  /** Segment names a log file references (empty for a flat log). */
   private def segmentNamesIn(root: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
     if (!root.isObject) Nil
     else Option(root.get("segments"))
       .map(_.elements.asScala.map(_.asText).toSeq).getOrElse(Nil)
 
   /** Parse a generation file: frozen segments (by name, cached) ++ tail. */
-  private def parseLog(dir: Path, json: String): Seq[Snapshot] = {
+  private def parseLog(dir: Path, json: String, table: String): Seq[Snapshot] = {
     val root = mapper.readTree(json)
-    segmentNamesIn(root).flatMap(readLogSegment(dir, _)) ++ parseCommitsNode(root)
+    segmentNamesIn(root).flatMap(readLogSegment(dir, _, table)) ++ parseCommitsNode(root, table)
   }
+
+  /** First 16 hex digits of the SHA-256 of `json`: the name of a
+    * content-addressed metadata file.
+    */
+  private def digest16(json: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+
+  /** See [[SnapshotCatalog.faultHook]] — a named crash-window boundary. */
+  @inline private def faultPoint(id: String): Unit = SnapshotCatalog.faultHook(id)
 
   /** Commit the snapshot list as generation `expectedGen + 1`. Exclusive
     * rename arbitrates concurrent writers (see the section comment);
     * throws [[CommitConflictException]] when the next generation already
     * exists. After a successful commit, generations more than 8 behind are
     * garbage-collected best-effort (the slack keeps a reader that listed
-    * an older generation readable mid-flight).
+    * an older generation readable mid-flight). `carrySegments = false`
+    * skips reusing the prior generation's frozen segments: the format
+    * upgrade passes it, since those segments are in the old format.
     */
-  /** See [[SnapshotCatalog.faultHook]] — a named crash-window boundary. */
-  @inline private def faultPoint(id: String): Unit = SnapshotCatalog.faultHook(id)
-
   private[catalog] def writeCommits(schema: String, table: String,
-                           commits: Seq[Snapshot], expectedGen: Long): Unit = {
+                                    commits: Seq[Snapshot], expectedGen: Long,
+                                    carrySegments: Boolean = true): Unit = {
     val dir = tableDir(schema, table)
     // reuse the prior generation's frozen prefix when the new list still
     // starts with it (the append/DML common case — the startsWith walk
     // is O(1) per element via case-class eq fast paths on the cached
     // instances); freeze more of the tail past the threshold
     val priorSegs: Seq[String] =
-      if (expectedGen < 0) Nil
+      if (expectedGen < 0 || !carrySegments) Nil
       else {
         val p = genPath(dir, expectedGen)
         if (!fs(p).exists(p)) Nil
         else segmentNamesIn(mapper.readTree(readString(p)))
       }
-    val frozen = priorSegs.flatMap(readLogSegment(dir, _))
+    def segment(name: String) = readLogSegment(dir, name, s"$schema.$table")
+    val frozen = priorSegs.flatMap(segment)
     var segNames =
       if (frozen.nonEmpty && commits.startsWith(frozen)) priorSegs else Nil
-    var tail = commits.drop(segNames.flatMap(readLogSegment(dir, _)).size)
+    var tail = commits.drop(segNames.flatMap(segment).size)
     while (tail.size > LogTailMax) {
       segNames = segNames :+ writeLogSegment(dir, tail.take(LogSegmentSize))
       tail = tail.drop(LogSegmentSize)
@@ -7769,7 +7809,7 @@ object SnapshotCatalog {
     * so a drop-and-recreate of the same name is never served stale.
     */
   private[catalog] val catalogTagCache =
-    new BoundedCache[Seq[(String, String, Snapshot)]](1024)
+    new BoundedCache[Seq[(String, String, com.fasterxml.jackson.databind.JsonNode)]](1024)
 
   /** A flat-bounded concurrent cache for immutable parsed metadata: at
     * `max` entries the map resets wholesale. The entries are pure parses

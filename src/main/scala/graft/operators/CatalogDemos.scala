@@ -96,23 +96,26 @@ object CatalogDemos {
 
   /** S7/C4: unload a query to flat parquet; returns the response contract
     * plus layout assertions (no subdirectories, only *.parquet at the
-    * root) as a one-row result.
+    * root) as a one-row result. The result is a local row, so the
+    * scratch directory is deleted before returning.
     */
   def unloadDemo(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val work = java.nio.file.Files.createTempDirectory("graft-unload-demo").toString
-    val engine = new GraftEngine(s, work)
-    graft.Tables.nation(s, d).createOrReplaceTempView("_unload_nation")
-    val resp = engine.unload(
-      sql"SELECT n_nationkey, n_name FROM _unload_nation ORDER BY n_nationkey",
-      s"$work/export")
-    val files = new java.io.File(s"$work/export").listFiles().toSeq
-    Seq((
-      resp.rowCount,
-      files.count(f => f.isFile && f.getName.endsWith(".parquet") && f.length > 0) > 0,
-      files.count(_.isDirectory),
-      s.read.parquet(s"$work/export").count()))
-      .toDF("row_count", "flat_parquet_only", "n_subdirs", "reread_count")
+    try {
+      val engine = new GraftEngine(s, work)
+      graft.Tables.nation(s, d).createOrReplaceTempView("_unload_nation")
+      val resp = engine.unload(
+        sql"SELECT n_nationkey, n_name FROM _unload_nation ORDER BY n_nationkey",
+        s"$work/export")
+      val files = new java.io.File(s"$work/export").listFiles().toSeq
+      Seq((
+        resp.rowCount,
+        files.count(f => f.isFile && f.getName.endsWith(".parquet") && f.length > 0) > 0,
+        files.count(_.isDirectory),
+        s.read.parquet(s"$work/export").count()))
+        .toDF("row_count", "flat_parquet_only", "n_subdirs", "reread_count")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
   }
 
   /** DuckDB oracle for [[unloadDemo]]: the response contract is fully

@@ -213,7 +213,7 @@ class AdviceGuardsSpec extends SparkSpec {
     c.insert("s", "t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
     val (snap, n) = c.truncateCounted("s", "t")
     assert(n === 3L)
-    assert(snap.dirs.isEmpty)
+    assert(c.dataFilePaths("s", "t", snap).isEmpty)
     assert(c.readLatest("s", "t").count() === 0)
   }
 

@@ -80,7 +80,7 @@ class BranchTagSpec extends SparkSpec {
     b1.insert("s", "t", Seq((7L, "g")).toDF("id", "v"))
     intercept[CommitConflictException] {
       b2.writeCommits("s", "t", commits1 :+ Snapshot(99L, Long.MaxValue - 1,
-        Nil, None, Some("append")), gen1)
+        None, Some("append")), gen1)
     }
     // a branch commit never conflicts with a main commit (separate refs)
     c.insert("s", "t", Seq((8L, "h")).toDF("id", "v"))

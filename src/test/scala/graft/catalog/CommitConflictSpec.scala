@@ -31,11 +31,12 @@ class CommitConflictSpec extends SparkSpec {
 
     // … writer 1 commits first; writer 2's commit from the stale
     // generation must fail with the typed conflict, not clobber
-    c1.writeCommits("s", "t", commits1 :+ Snapshot(99L, Long.MaxValue - 1, Seq("snap-win"),
-      None, Some("append")), gen1)
+    // the winner carries the observed files; the loser would drop them
+    c1.writeCommits("s", "t", commits1 :+ Snapshot(99L, Long.MaxValue - 1, None,
+      Some("append"), Nil, commits1.last.manifestList), gen1)
     val conflict = intercept[CommitConflictException] {
-      c2.writeCommits("s", "t", commits2 :+ Snapshot(98L, Long.MaxValue - 1, Seq("snap-lose"),
-        None, Some("append")), gen2)
+      c2.writeCommits("s", "t", commits2 :+ Snapshot(98L, Long.MaxValue - 1, None,
+        Some("append")), gen2)
     }
     assert(conflict.schema == "s" && conflict.table == "t")
 
@@ -43,7 +44,8 @@ class CommitConflictSpec extends SparkSpec {
     val (after, afterGen) = c1.readCommitsWithGen("s", "t")
     assert(afterGen == gen1 + 1)
     assert(after.last.snapshotId == 99L)
-    assert(after.last.dirs == Seq("snap-win"))
+    assert(c1.dataFilePaths("s", "t", after.last) == c1.dataFilePaths("s", "t", commits1.last))
+    assert(c1.readLatest("s", "t").count() == 1L)
   }
 
   test("interleaved inserts through two catalog instances both land (fresh reads)") {
@@ -104,33 +106,16 @@ class CommitConflictSpec extends SparkSpec {
     assert(gen == 24L) // gen 0 at create + one per insert
   }
 
-  test("legacy single commits.json (pre-versioning layout) still reads; next write versions it") {
-    val wh = tmpDir("graft-conflict-wh4")
-    val c = new SnapshotCatalog(spark, wh)
-    c.createSchema("s")
-    c.createTable("s", "t", schema)
-    c.insert("s", "t", Seq((1L, "a")).toDF("id", "v"))
-    // strip the generation files, copy the log into the legacy location —
-    // the shape every pre-upgrade warehouse is in
-    val dir = new org.apache.hadoop.fs.Path(c.schemaLocation("s"), "t")
-    val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val latest = f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.matches("commits-\\d+\\.json")).max
-    val content = {
-      val in = f.open(new org.apache.hadoop.fs.Path(dir, latest))
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    f.listStatus(dir).map(_.getPath).filter(_.getName.matches("commits-\\d+\\.json"))
-      .foreach(p => f.delete(p, false))
-    val out = f.create(new org.apache.hadoop.fs.Path(dir, "commits.json"), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-
-    val c2 = new SnapshotCatalog(spark, wh)
-    assert(c2.readLatest("s", "t").count() == 1L) // legacy read works
-    c2.insert("s", "t", Seq((2L, "b")).toDF("id", "v"))
-    assert(c2.readLatest("s", "t").count() == 2L)
-    val (_, gen) = c2.readCommitsWithGen("s", "t")
-    assert(gen == 1L) // legacy read was gen 0; the write versioned it
+  test("a pre-versioning commits.json log refuses reads until optimize_manifests upgrades it; the next write versions it") {
+    val (c, before) = LegacyFormatFixture.build(spark, tmpDir("graft-conflict-wh4"),
+      partitioned = false, preVersioning = true)
+    LegacyFormatFixture.checkUpgrade(spark, c, before)
+    // the log lives in generation files; commits.json is the marker again
+    val dir = new java.io.File(
+      new org.apache.hadoop.fs.Path(c.schemaLocation("s"), "t").toUri.getPath)
+    assert(dir.list().exists(_.matches("commits-\\d+\\.json")))
+    assert(new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "commits.json").toPath), "UTF-8") == "[]")
   }
 
   test("cross-PROCESS race: loser JVM gets CommitConflictException; log stays at one generation") {

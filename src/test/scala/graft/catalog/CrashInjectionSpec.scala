@@ -265,4 +265,27 @@ class CrashInjectionSpec extends SparkSpec {
     assert(!r.listCatalogBranches().contains("wap"))
     assert(fresh(c.warehouse).readLatest("s", "fact").count() == 2L)
   }
+
+  test("format upgrade: crash between two refs' writes — each ref whole, a rerun finishes") {
+    val (c, before) = LegacyFormatFixture.build(spark, tmpDir("crash-upgrade"),
+      partitioned = false, preVersioning = false)
+    val n = before.versions.size
+    crashAt("upgrade.ref-written") { c.rewriteManifests("s", "t") }
+    val r = fresh(c.warehouse)
+    // the main log was written first and is wholly upgraded …
+    val main = r.snapshots("s", "t")
+    assert(main.size == n && main.forall(_.manifestList.isDefined))
+    assert(main.map(s => r.readVersion("s", "t", s.snapshotId).collect().toSeq
+      .map(_.toString).sorted) == before.versions)
+    // … while the branch log and the tag pins are wholly legacy still
+    intercept[LegacyTableFormatException](r.branch("b").snapshots("s", "t"))
+    intercept[LegacyTableFormatException](r.listTags("s", "t"))
+    intercept[LegacyTableFormatException](r.catalogTagSnapshot("ct", "s", "t"))
+    r.rewriteManifests("s", "t")
+    assert(LegacyFormatFixture.view(fresh(c.warehouse), n) == before)
+    // the rerun names the branch's shared snapshots as main's upgrade did
+    assert(r.branch("b").snapshots("s", "t").take(3) == main.take(3))
+    assert(r.listTags("s", "t")("v2") == main(1))
+    assert(r.catalogTagSnapshot("ct", "s", "t").contains(main(2)))
+  }
 }

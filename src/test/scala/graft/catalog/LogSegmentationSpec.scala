@@ -32,7 +32,7 @@ class LogSegmentationSpec extends SparkSpec {
     var (commits, gen) = c.readCommitsWithGen("s", t)
     (1 to n).foreach { _ =>
       val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
-      commits = commits :+ Snapshot(id, id, Nil, sj, Some("append"), Nil, None)
+      commits = commits :+ Snapshot(id, id, sj, Some("append"), Nil, None)
       c.writeCommits("s", t, commits, gen)
       gen += 1
     }

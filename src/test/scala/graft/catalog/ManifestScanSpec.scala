@@ -140,24 +140,18 @@ class ManifestScanSpec extends SparkSpec {
       .filter(col("id") === 2L)) == 1)
   }
 
-  test("a pre-manifest snapshot (snap dirs, no manifest list) reads back unchanged") {
-    val c = freshCatalog()
-    Seq("tl" -> false, "tlp" -> true).foreach { case (t, partitioned) =>
-      seed(c, t, partitioned)
-      def rows = c.readLatest("s", t).select("id", "grp", "v")
-        .as[(Long, String, Long)].collect().sorted.toSeq
-      val before = rows
-      // rewrite the head as a legacy log wrote it: its snap dirs as
-      // `dirs`, no manifest list
-      val (commits, gen) = c.readCommitsWithGen("s", t)
-      val head = commits.last
-      val dirs = c.dataFilePaths("s", t, head).map(_.split('/').head).distinct.sorted
-      c.writeCommits("s", t,
-        commits.init :+ head.copy(dirs = dirs, manifestList = None), gen)
-      assert(c.snapshots("s", t).last.manifestList.isEmpty)
-      assert(rows == before, s"$t")
-      assert(c.readLatest("s", t).filter(col("grp") === "b").count() == 4, s"$t")
+  test("a pre-manifest table refuses reads until optimize_manifests upgrades it, then reads back unchanged") {
+    Seq(false, true).foreach { partitioned =>
+      val (c, before) = LegacyFormatFixture.build(spark, tmpDir("graft-mscan-legacy"),
+        partitioned, preVersioning = false)
+      LegacyFormatFixture.checkUpgrade(spark, c, before)
     }
+    // DROP TABLE needs no upgrade
+    val (c, _) = LegacyFormatFixture.build(spark, tmpDir("graft-mscan-legacy-drop"),
+      partitioned = false, preVersioning = true)
+    new graft.GraftEngine(spark, c.warehouse)
+      .executeNonQuery(graft.params.SqlStatement("DROP TABLE s.t"))
+    assert(!c.tableExists("s", "t"))
   }
 
   test("merge-on-read delete files compose with the manifest scan") {

@@ -50,9 +50,10 @@ class MergeOnReadSpec extends SparkSpec {
     val (snap, n) = c.deleteCounted("s", "t_del", col("id") === 12L)
     assert(n == 1L)
     assert(snap.operation.contains("delete"))
-    // the headline property: dirs identical — no data file rewritten
-    assert(snap.dirs == before.dirs,
-      s"MoR delete must not touch data files: ${before.dirs} -> ${snap.dirs}")
+    // the headline property: the same manifest list — no data file rewritten
+    assert(snap.manifestList == before.manifestList &&
+      c.dataFilePaths("s", "t_del", snap) == c.dataFilePaths("s", "t_del", before),
+      s"MoR delete must not touch data files: ${before.manifestList} -> ${snap.manifestList}")
     assert(snap.deletes.size == 1 && snap.deletes.head.startsWith("delete-"))
     val afterData = c.filesMeta("s", "t_del").filter($"content" === 0)
       .select("file_path").as[String].collect().toSet
@@ -177,7 +178,8 @@ class MergeOnReadSpec extends SparkSpec {
     val before = c.snapshots("s", "t_noop").last
     val (snap, n) = c.deleteCounted("s", "t_noop", col("id") === 999L)
     assert(n == 0L)
-    assert(snap.dirs == before.dirs && snap.deletes.isEmpty)
+    assert(snap.manifestList == before.manifestList && snap.deletes.isEmpty)
+    assert(c.dataFilePaths("s", "t_noop", snap) == c.dataFilePaths("s", "t_noop", before))
   }
 
   test("compact folds deletes into data files and clears the delete list") {

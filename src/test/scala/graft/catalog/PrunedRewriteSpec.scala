@@ -105,8 +105,9 @@ class PrunedRewriteSpec extends SparkSpec {
     val before = c.snapshots("s", "t_noop").last
     val (snap, n) = c.deleteCounted("s", "t_noop", col("id") === 999L)
     assert(n == 0L)
-    assert(snap.dirs == before.dirs && snap.manifestList == before.manifestList,
+    assert(snap.manifestList == before.manifestList,
       "untouched table: the SAME manifest list carries verbatim (no new metadata)")
+    assert(c.dataFilePaths("s", "t_noop", snap) == c.dataFilePaths("s", "t_noop", before))
     assert(!c.dataFilePaths("s", "t_noop", snap)
       .exists(_.contains(f"${snap.snapshotId}%05d-rewrite")))
     assert(c.readLatest("s", "t_noop").count() == 12)
@@ -196,7 +197,9 @@ class PrunedRewriteSpec extends SparkSpec {
     val (snap, n) = c.truncateCounted("s", "t_trunc")
     val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(n == 12L, "count must equal the footer record-count sum")
-    assert(snap.dirs.isEmpty, "truncate commit references no data files")
+    assert(c.dataFilePaths("s", "t_trunc", snap).isEmpty,
+      "truncate commit references no data files")
+    assert(c.dataFilePaths("s", "t_trunc", before).nonEmpty)
     assert(jobsAfter == jobsBefore,
       s"TRUNCATE must run no Spark job (metadata-only), ran ${jobsAfter - jobsBefore}")
     assert(c.readLatest("s", "t_trunc").count() == 0)
